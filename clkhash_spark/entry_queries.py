@@ -1775,6 +1775,12 @@ def q_clk_febrl_two_party(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_febrl_party,
     )
 
+    if not _os.path.isdir(FEBRL_TESTDATA):
+        raise FileNotFoundError(
+            f"FEBRL corpus directory {FEBRL_TESTDATA!r} not found: set "
+            "CLKHASH_SPARK_FEBRL_DIR to a directory holding "
+            "dirty_1000_50_1.csv and dirty_1000_50_2.csv"
+        )
     a = load_febrl_party(
         spark, _os.path.join(FEBRL_TESTDATA, "dirty_1000_50_1.csv"), "a:"
     )

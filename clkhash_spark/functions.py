@@ -69,7 +69,7 @@ def dice_similarity(
 
     ``2 * popcount(a & b) / (pc_a + pc_b)`` — the bitwise AND runs over
     the hex representation per byte. For bulk scoring use
-    :func:`clkhash_spark.operators.scoring.dice_scores` (Arrow-batched,
+    :func:`clkhash_spark.operators.scoring.score_candidates` (Arrow-batched,
     ~10x faster); this column form is for ad-hoc SQL.
     """
     a = _bytes_to_array(clk_a)

@@ -244,6 +244,7 @@ def connected_components(
 
     if (
         known_edge_bound is not None
+        and small_graph_edges > 0  # a gate of 0 forces the distributed path
         and 0 <= known_edge_bound <= small_graph_edges
         and id_assignment != "dense"
     ):

@@ -28,7 +28,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..core.vectorized import _POPCOUNT_LUT
 
-__all__ = ["candidate_pairs", "dice_scores", "score_candidates"]
+__all__ = ["candidate_pairs", "score_candidates"]
 
 
 def candidate_pairs(
@@ -80,33 +80,6 @@ def candidate_pairs(
         .agg(F.count("*").alias("_band_matches"))
         .where(F.col("_band_matches") >= min_band_matches)
         .select("key_a", "key_b")
-    )
-
-
-def dice_scores(
-    pairs_with_clks: DataFrame,
-    clk_a: str = "clk_a",
-    clk_b: str = "clk_b",
-    pc_a: str = "popcount_a",
-    pc_b: str = "popcount_b",
-    score_col: str = "score",
-) -> DataFrame:
-    """Attach a Dice-coefficient column, batched via Arrow."""
-
-    @F.pandas_udf(DoubleType())
-    def dice(a: pd.Series, b: pd.Series, pa: pd.Series, pb: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype=float)
-        mat_a = np.frombuffer(b"".join(a), dtype=np.uint8).reshape(len(a), -1)
-        mat_b = np.frombuffer(b"".join(b), dtype=np.uint8).reshape(len(b), -1)
-        inter = _POPCOUNT_LUT[mat_a & mat_b].sum(axis=1, dtype=np.int64)
-        denom = (pa.to_numpy() + pb.to_numpy()).astype(np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = np.where(denom > 0, 2.0 * inter / denom, 0.0)
-        return pd.Series(out)
-
-    return pairs_with_clks.withColumn(
-        score_col, dice(F.col(clk_a), F.col(clk_b), F.col(pc_a), F.col(pc_b))
     )
 
 

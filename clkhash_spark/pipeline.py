@@ -1,28 +1,51 @@
 """End-to-end CLK linkage pipeline: encode → block → score → cluster.
 
-Composes the operators with checkpointed stages and throughput counters.
-Stage tables are plain parquet directories with a JSON manifest
-(`_clkhash_manifest.json`) — the sandbox stand-in for Iceberg snapshot
-tables; on a real cluster swap :class:`StageStore` for Iceberg
-``writeTo``/snapshots without touching the operator code.
+One stage graph serves dedup of one table (:func:`run_linkage`) and
+linkage of two parties (:func:`run_linkage_two_party`): ``clks``
+(``clks_a``/``clks_b``) → ``kids`` (dense key ids only) → ``blocks`` →
+``pairs`` → ``clusters``. The party count changes four things:
+
+- the int64 key id (``_kid``): ``xxhash64(key)`` for one table; the
+  63-bit ``xxhash64(key) >>> 1`` with party B in the sign bit for two;
+- the pair predicate: ``key_a < key_b`` vs the kid's sign;
+- the pair orientation: least/greatest user key vs fixed A/B;
+- 1-1 matching, for two parties only.
+
+One materialization rule, owned by ``_StageRunner``: ``blocks`` is
+hash-partitioned by ``block_key`` and persisted, so the skew cap and
+both pair-join sides reuse one exchange; every other stage ends in a
+lazy ``localCheckpoint`` + count that cuts its lineage. Scratch caches
+are released once the stage consuming them is materialized.
+
+With ``checkpoint_dir`` set, stage tables are parquet directories with
+a JSON manifest (`_clkhash_manifest.json`) — the sandbox stand-in for
+Iceberg snapshot tables; on a real cluster swap :class:`StageStore` for
+Iceberg ``writeTo``/snapshots without touching the operator code.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
+import math
 import os
 import time
-from dataclasses import dataclass, field
-from typing import Any, Dict, Optional, Sequence, Union
+import warnings
+from dataclasses import dataclass, field, replace
+from typing import Any, Dict, List, Optional, Sequence, Union
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .core.schema import Schema
 from .operators.blocking import block_keys, block_size_histogram, cap_block_size
 from .operators.cluster import attach_cluster_ids, connected_components
 from .operators.encode import encode_clks
-from .operators.scoring import candidate_pairs, score_candidates
+from .operators.scoring import (
+    candidate_pairs, one_to_one_matching, score_candidates,
+)
 
 __all__ = ["LinkageConfig", "LinkageResult", "StageStore",
            "estimate_bit_agreement", "run_linkage",
@@ -130,8 +153,6 @@ def tuned_blocking(
     (the pre-round-4 behavior) — never shrinks below what the caller
     asked for.
     """
-    import math
-
     # The binding constraint is the block-join OUTPUT volume
     # (n²/2 · b · a_u^r skinny rows), which min_band_matches does NOT
     # reduce — it only filters what gets scored. Bound the join at 3x
@@ -282,8 +303,11 @@ class StageStore:
         return self.spark.read.parquet(os.path.join(self.root, stage))
 
     def write(
-        self, stage: str, df: DataFrame, fingerprint: str
+        self, stage: str, df: DataFrame, fingerprint: str, parents=()
     ) -> DataFrame:
+        """Write a stage table; ``parents`` names the upstream stages
+        whose fingerprints are recorded as its lineage — the audit trail
+        an Iceberg snapshot chain would carry."""
         path = os.path.join(self.root, stage)
         start = time.time()
         df.write.mode("overwrite").parquet(path)
@@ -296,16 +320,13 @@ class StageStore:
             "seconds": round(elapsed, 3),
             "rows_per_sec": round(rows / elapsed, 1) if elapsed > 0 else None,
             "complete": True,
+            "lineage": {
+                p: self.manifest["stages"].get(p, {}).get("fingerprint")
+                for p in parents
+            },
         }
         self._save_manifest()
         return out
-
-
-def _shuffle_partitions(spark: SparkSession) -> int:
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # pragma: no cover - defensive
-        return 200
 
 
 # Partition budget for the banded-rows exchange: skinny (long, long)
@@ -327,7 +348,8 @@ def _banded_partitions(spark: SparkSession, banded_rows: int) -> int:
     by_volume = (banded_rows + _BANDED_ROWS_PER_PARTITION - 1) // (
         _BANDED_ROWS_PER_PARTITION
     )
-    return max(_shuffle_partitions(spark), min(int(by_volume), 65536))
+    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(floor, min(int(by_volume), 65536))
 
 
 def _input_fingerprint(df: DataFrame) -> str:
@@ -338,8 +360,6 @@ def _input_fingerprint(df: DataFrame) -> str:
     changing in-memory data should supply
     ``LinkageConfig.input_fingerprint`` themselves.
     """
-    import hashlib
-
     try:
         files = sorted(df.inputFiles())
     except Exception:  # pragma: no cover - defensive
@@ -352,8 +372,6 @@ def _input_fingerprint(df: DataFrame) -> str:
 
 
 def _secret_fingerprint(secret: Union[str, bytes]) -> str:
-    import hashlib
-
     raw = secret.encode() if isinstance(secret, str) else bytes(secret)
     return hashlib.sha256(b"clkhash-spark-secret:" + raw).hexdigest()[:16]
 
@@ -381,8 +399,6 @@ def _fingerprint(
 ) -> str:
     """Stage fingerprint: schema + hashed secret + input identity +
     every config field the stage's output depends on (cumulatively)."""
-    import hashlib
-
     base_stage = stage.split("_")[0]  # clks_a/clks_b share clks params
     relevant: Dict[str, Any] = {
         "stage": stage,
@@ -432,8 +448,6 @@ def estimate_bit_agreement(
     unrelated tail — is returned instead, with a RuntimeWarning, rather
     than letting the downstream clamp pin silently at 0.90.
     """
-    import numpy as np
-
     rows = (
         clks.select(clk_col)
         .orderBy(F.xxhash64(F.col(key_col)))
@@ -457,8 +471,6 @@ def estimate_bit_agreement(
     agreement = (a == b).mean(axis=1)
     med = float(np.median(agreement))
     if med > 0.90:
-        import warnings
-
         p25 = float(np.quantile(agreement, 0.25))
         warnings.warn(
             "estimate_bit_agreement: median pair agreement "
@@ -480,8 +492,6 @@ def _resolve_banding(
 ) -> LinkageConfig:
     """Fill in auto (None) band geometry from the materialized row count
     (and the measured unrelated-pair bit agreement, when available)."""
-    import dataclasses
-
     if config.num_bands is not None and config.bits_per_band is not None:
         return config
     kwargs = {}
@@ -498,7 +508,7 @@ def _resolve_banding(
         target_candidates_per_row=config.target_candidates_per_row,
         **kwargs,
     )
-    return dataclasses.replace(
+    return replace(
         config,
         num_bands=config.num_bands or tuned["num_bands"],
         bits_per_band=config.bits_per_band or tuned["bits_per_band"],
@@ -506,8 +516,20 @@ def _resolve_banding(
 
 
 class _StageRunner:
-    """Checkpoint-or-persist stage execution shared by the one- and
-    two-party pipelines."""
+    """Runs the graph's stages and owns the materialization rule
+    (:meth:`_keep`; see the module docstring).
+
+    Why two kinds: under AQE a checkpoint's LogicalRDD loses
+    ``outputPartitioning``, which re-inserted the cap's size-aggregate
+    and the pair join-side exchanges (round-6 4M-row ladder: a
+    285.6M-row aggregate exchange and two 192M-row join-side
+    exchanges), while cached plans keep their partitioning. Every other
+    stage wants the lineage cut: downstream plans otherwise embed
+    several copies of the upstream tree, and Catalyst analysis over
+    them cost ~10 s of driver-only gaps per 100k-row run
+    (OPTIMIZATION_r06.md). A StageStore's parquet round trip cuts
+    lineage the same way.
+    """
 
     def __init__(
         self,
@@ -523,119 +545,128 @@ class _StageRunner:
         )
         self.resume = config.resume
         self.metrics = metrics
+        # Set by the graph once banding fixes the banded-row volume.
+        self.block_partitions: Optional[int] = None
+        self._scratch: Dict[str, List[DataFrame]] = {}
+
+    def partition_blocks(self, df: DataFrame) -> DataFrame:
+        """Hash-partition banded rows by ``block_key`` and persist them."""
+        return df.repartition(self.block_partitions, "block_key").persist()
+
+    def scratch(self, df: DataFrame, until: str) -> DataFrame:
+        """Register the cached ``df``; it is unpersisted once stage
+        ``until`` is materialized."""
+        self._scratch.setdefault(until, []).append(df)
+        return df
+
+    def _keep(self, name: str, df: DataFrame) -> DataFrame:
+        if name == "blocks":
+            return df if df.is_cached else self.partition_blocks(df)
+        if self.store is not None:
+            return df  # a parquet read-back: lineage already cut
+        return df.localCheckpoint(eager=False)
 
     def run(self, name: str, fp: str, build, parents=()) -> DataFrame:
-        if self.store is not None and self.resume and self.store.has(name, fp):
-            self.metrics[f"{name}_resumed"] = True
-            entry = self.store.manifest["stages"][name]
-            self.metrics[f"{name}_rows"] = entry.get("rows")
-            return self.store.read(name)
-        start = time.time()
-        # Tag every job this stage triggers with a job group, so the
-        # event log (and the UI) can attribute shuffle bytes / task time
-        # to pipeline stages — tools/linkage_job.py aggregates these
-        # into per-stage shuffle counters. Restored in the finally
-        # below; lazily-consumed upstream work is attributed to the
-        # stage whose action forced it, which is the wall-clock-honest
-        # attribution.
-        sc = self.spark.sparkContext
-        sc.setLocalProperty("spark.jobGroup.id", f"clk:{name}")
-        sc.setLocalProperty(
-            "spark.job.description", f"clkhash stage {name}"
-        )
+        store, sc = self.store, self.spark.sparkContext
         try:
-            df = self._run_stage(name, fp, build, parents, start)
+            if store is not None and self.resume and store.has(name, fp):
+                self.metrics[f"{name}_resumed"] = True
+                entry = store.manifest["stages"][name]
+                self.metrics[f"{name}_rows"] = entry.get("rows")
+                return self._keep(name, store.read(name))
+            # Tag every job this stage triggers with a job group, so the
+            # event log (and the UI) can attribute shuffle bytes / task
+            # time to pipeline stages — tools/linkage_job.py aggregates
+            # these into per-stage shuffle counters. Restored in the
+            # finally below; lazily-consumed upstream work is attributed
+            # to the stage whose action forced it, which is the
+            # wall-clock-honest attribution.
+            sc.setLocalProperty("spark.jobGroup.id", f"clk:{name}")
+            sc.setLocalProperty(
+                "spark.job.description", f"clkhash stage {name}"
+            )
+            start = time.time()
+            if store is not None:
+                df = self._keep(name, store.write(name, build(), fp, parents))
+                entry = store.manifest["stages"][name]
+            else:
+                df = self._keep(name, build())
+                rows, elapsed = df.count(), time.time() - start
+                entry = {
+                    "rows": rows,
+                    "seconds": round(elapsed, 3),
+                    "rows_per_sec": (round(rows / elapsed, 1) if elapsed
+                                     else None),
+                }
+            for stat in ("rows", "seconds", "rows_per_sec"):
+                self.metrics[f"{name}_{stat}"] = entry[stat]
+            return df
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        return df
-
-    def _run_stage(
-        self, name: str, fp: str, build, parents, start: float
-    ) -> DataFrame:
-        df = build()
-        if self.store is not None:
-            df = self.store.write(name, df, fp)
-            entry = self.store.manifest["stages"][name]
-            # Lineage: which upstream snapshots this one was derived
-            # from (their fingerprints at write time) — the audit trail
-            # an Iceberg snapshot chain would carry.
-            entry["lineage"] = {
-                p: self.store.manifest["stages"]
-                .get(p, {})
-                .get("fingerprint")
-                for p in parents
-            }
-            self.store._save_manifest()
-            self.metrics[f"{name}_rows"] = entry["rows"]
-            self.metrics[f"{name}_seconds"] = entry["seconds"]
-            self.metrics[f"{name}_rows_per_sec"] = entry["rows_per_sec"]
-        else:
-            # No table store: materialize AND cut lineage at the stage
-            # boundary. A lazy localCheckpoint + count does both in ONE
-            # job (the count action triggers the checkpoint): rows land
-            # in the block manager exactly like persist, and the
-            # logical plan collapses to a LogicalRDD. The truncation is
-            # the point — each downstream stage's plan otherwise embeds
-            # MULTIPLE copies of the whole upstream tree (the pair
-            # self-join doubles it, the cluster stage's key unions
-            # triple it), and Catalyst analysis + cache lookup over
-            # those trees measured ~10 s of driver-only gaps per 100k-
-            # row pipeline run (event-log evidence, OPTIMIZATION_r06.md
-            # — e.g. a 5.2 s zero-task gap before the first clusters
-            # job). Physical partitioning survives (LogicalRDD carries
-            # outputPartitioning), so the blocks stage's single-
-            # exchange contract still holds. On a real cluster, prefer
-            # reliable snapshots via checkpoint_dir (the StageStore
-            # path, which truncates the same way through parquet).
-            if not getattr(df, "_clkhash_prematerialized", False):
-                df = df.localCheckpoint(eager=False)
-            rows = df.count()
-            elapsed = time.time() - start
-            self.metrics[f"{name}_rows"] = rows
-            self.metrics[f"{name}_seconds"] = round(elapsed, 3)
-            self.metrics[f"{name}_rows_per_sec"] = (
-                round(rows / elapsed, 1) if elapsed > 0 else None
-            )
-        return df
+            for df in self._scratch.pop(name, ()):
+                df.unpersist()
 
 
-def run_linkage(
+def _kid_column(
+    key_col: str, dense: bool, party: Optional[int]
+) -> Column:
+    """The int64 key id (``_kid``): ``party`` is ``None`` for one
+    table, else 0 (A) or 1 (B, tagged in the sign bit). Dense mode uses
+    ``monotonically_increasing_id`` under the same tag. The two hash
+    forms stay apart on purpose: the skew cap salts split sub-blocks
+    with the kid, so the one-table form pins its outputs."""
+    if dense:
+        kid = F.monotonically_increasing_id()
+    elif party is None:
+        return F.xxhash64(F.col(key_col))
+    else:
+        kid = F.shiftrightunsigned(F.xxhash64(F.col(key_col)), 1)
+    return kid.bitwiseOR(F.lit(-(1 << 63))) if party == 1 else kid
+
+
+def _run_graph(
     spark: SparkSession,
-    pages: DataFrame,
+    parties: Sequence[DataFrame],
     config: LinkageConfig,
+    one_to_one: Optional[bool] = None,
 ) -> LinkageResult:
-    """Run the full dedup-linkage pipeline over one table.
-
-    Stages (each checkpointed when ``config.checkpoint_dir`` is set):
-    ``clks`` → ``blocks`` → ``pairs`` → ``clusters``.
-    """
+    """The stage graph (module docstring) over one or two parties;
+    ``one_to_one`` is ``None`` for one table."""
     metrics: Dict[str, Any] = {}
     runner = _StageRunner(spark, config, metrics)
-    input_fp = config.input_fingerprint or _input_fingerprint(pages)
+    key, kid_col = config.key_col, "_kid"
+    single = len(parties) == 1
+    clks_stages = ("clks",) if single else ("clks_a", "clks_b")
+    input_fps = [
+        config.input_fingerprint or _input_fingerprint(df) for df in parties
+    ]
+    joint_fp = "+".join(input_fps)
+    # pairs and clusters also depend on the two-party matching mode
+    pairs_fp = (joint_fp if one_to_one is None
+                else f"{joint_fp}|one_to_one={one_to_one}")
 
-    clks = runner.run(
-        "clks",
-        _fingerprint(config, "clks", input_fp),
-        lambda: encode_clks(
-            pages,
-            config.schema,
-            config.secret,
-            key_cols=(config.key_col,),
-            feature_cols=config.feature_cols,
-            validate=config.validate,
-        ),
-    )
+    clks = [
+        runner.run(stage, _fingerprint(config, stage, fp), functools.partial(
+            encode_clks, df, config.schema, config.secret, key_cols=(key,),
+            feature_cols=config.feature_cols, validate=config.validate,
+        ))
+        for stage, fp, df in zip(clks_stages, input_fps, parties)
+    ]
+    all_clks = functools.reduce(DataFrame.unionByName, clks)
 
     # Band geometry must scale with n (candidate volume grows n²,
     # true pairs n) — resolve auto settings from the materialized count
     # AND the measured unrelated-pair bit agreement (the leakage base of
     # the law; assuming it costs an order of magnitude in join volume —
     # see estimate_bit_agreement).
-    n_rows = metrics.get("clks_rows") or clks.count()
+    n_rows = sum(
+        metrics.get(f"{stage}_rows") or df.count()
+        for stage, df in zip(clks_stages, clks)
+    )
     measured_a = None
     if config.num_bands is None or config.bits_per_band is None:
-        measured_a = estimate_bit_agreement(clks, key_col=config.key_col)
+        measured_a = estimate_bit_agreement(all_clks, key_col=key)
     config = _resolve_banding(config, n_rows, measured_a)
     metrics["banding"] = {
         "num_bands": config.num_bands,
@@ -644,73 +675,65 @@ def run_linkage(
         "n_rows": n_rows,
         "measured_bit_agreement": measured_a,
     }
+    runner.block_partitions = config.pair_partitions or _banded_partitions(
+        spark, n_rows * config.num_bands
+    )
 
     # Work in an int64 key domain through the shuffle-heavy middle
-    # stages: banding, the pair self-join, and the CLK payload joins all
+    # stages: banding, the pair join, and the CLK payload joins all
     # move (long, long) rows instead of (long, url-string) — ~2.5x less
-    # shuffle volume. URL strings rejoin only on the skinny final pairs.
-    # key_id_mode='hash' (xxhash64) is deterministic and collision-safe
-    # below ~10^9 rows; 'dense' assigns unique per-run ids instead for
-    # the 10^12-row regime.
-    kid_col = "_kid"
-    if config.key_id_mode == "dense":
-        # Dense ids come from monotonically_increasing_id, which is
-        # PER-RUN (partition-layout dependent) — so the key↔id map is
-        # itself a checkpointed stage: a resumed 'blocks'/'pairs' table
-        # stores _kid values and would silently join wrong against a
-        # fresh assignment. Reading the map back from the store (or
-        # pinning it via persist+count when there is no store) keeps
-        # every _kid consumer on ONE assignment.
-        def build_kids() -> DataFrame:
-            return clks.select(config.key_col).withColumn(
-                kid_col, F.monotonically_increasing_id()
-            )
+    # shuffle volume. User keys rejoin only on the skinny final pairs.
+    # Both parties' bands go through ONE skew cap: a boilerplate
+    # mega-block is a joint phenomenon (capping per party would
+    # under-count its s_a × s_b pair volume).
+    dense = config.key_id_mode == "dense"
 
+    def with_kids(clks_p: DataFrame, stage: str, fp: str,
+                  party: Optional[int]) -> DataFrame:
+        kid = _kid_column(key, dense, party)
+        if not dense:
+            return clks_p.withColumn(kid_col, kid)
+        # Dense ids are per-run (partition-layout dependent), so the
+        # key↔id map is itself a stage: a resumed blocks/pairs table
+        # stores _kid values and must join against the same assignment.
+        kids_stage = stage.replace("clks", "kids")
         kids = runner.run(
-            "kids", _fingerprint(config, "kids", input_fp), build_kids,
-            parents=("clks",),
+            kids_stage, _fingerprint(config, kids_stage, fp),
+            lambda: clks_p.select(key).withColumn(kid_col, kid),
+            parents=(stage,),
         )
-        clks_k = clks.join(kids, on=config.key_col).persist()
-        ids = kids.select(kid_col, config.key_col)
-    else:
-        clks_k = clks.withColumn(kid_col, F.xxhash64(F.col(config.key_col)))
-        ids = clks_k.select(kid_col, config.key_col)
+        return runner.scratch(
+            clks_p.join(kids, on=key).persist(), until="pairs"
+        )
+
+    clks_k = [
+        with_kids(df, stage, fp, None if single else party)
+        for party, (df, stage, fp) in enumerate(
+            zip(clks, clks_stages, input_fps)
+        )
+    ]
 
     def build_blocks() -> DataFrame:
-        blocks = block_keys(
-            clks_k,
-            l=config.schema.l,
-            num_bands=config.num_bands,
-            bits_per_band=config.bits_per_band,
-            seed=config.lsh_seed,
-            salt=config.lsh_salt,
-            key_cols=(kid_col,),
-        )
-        # ONE explicit shuffle by block_key, materialized ONCE: the
-        # cap's size aggregate, the histogram, and BOTH sides of the
-        # pair self-join all require hashpartitioning(block_key) —
-        # deriving them from this exchange makes every one of them
-        # exchange-free. Counters at 600k rows: the banded rows (37M
-        # skinny rows, ~320 MB) previously re-shuffled 3x (size groupBy
-        # + two join inputs = ~75M of the pairs stage's 85M shuffled
-        # records); now once. persist, NOT localCheckpoint, for THIS
-        # stage: under AQE a checkpoint's LogicalRDD loses the plan's
-        # outputPartitioning (the adaptive plan's final partitioning is
-        # unknown pre-execution), which silently re-inserted the very
-        # exchanges this stage exists to eliminate — measured at 4M
-        # two-party rows: a 285.6M-row size-aggregate exchange plus
-        # 2×192M-row pair-join-side exchanges (event log, round-6 4M
-        # ladder). Cached plans keep their partitioning (AQE leaves
-        # cached-plan output partitioning unchanged by default), and
-        # the logical tree above the checkpointed clks stage is tiny,
-        # so the lineage-truncation motivation doesn't apply here. The
-        # cap's size aggregate (its first action) materializes the
-        # cache; the runner then skips a second materialization.
-        blocks = blocks.repartition(
-            config.pair_partitions
-            or _banded_partitions(spark, n_rows * config.num_bands),
-            "block_key",
-        ).persist()
+        # ONE explicit shuffle by block_key: the cap's size aggregate,
+        # the histogram and both pair-join sides all require
+        # hashpartitioning(block_key), so deriving them from this
+        # exchange makes each of them exchange-free (600k rows: the
+        # banded rows previously re-shuffled 3x).
+        blocks = runner.partition_blocks(functools.reduce(
+            DataFrame.unionByName,
+            [
+                block_keys(
+                    df,
+                    l=config.schema.l,
+                    num_bands=config.num_bands,
+                    bits_per_band=config.bits_per_band,
+                    seed=config.lsh_seed,
+                    salt=config.lsh_salt,
+                    key_cols=(kid_col,),
+                )
+                for df in clks_k
+            ],
+        ))
         capped = blocks
         if config.max_block_size:
             capped, accounting = cap_block_size(
@@ -719,77 +742,63 @@ def run_linkage(
                 mode=config.block_cap_mode,
                 key_cols=(kid_col,),
             )
-            metrics["block_cap_accounting"] = (
-                accounting.first().asDict()
-            )
+            metrics["block_cap_accounting"] = accounting.first().asDict()
         if config.block_histogram:
             metrics["block_size_histogram"] = {
                 int(r["log2_size"]): int(r["num_blocks"])
                 for r in block_size_histogram(capped).collect()
             }
-        if capped is blocks:
-            # Unchanged by the cap: already checkpoint-materialized.
-            capped._clkhash_prematerialized = True
+        if capped is not blocks:
+            # The cap rewrote block keys: the runner re-partitions its
+            # output, and the uncapped rows are scratch.
+            runner.scratch(blocks, until="blocks")
         return capped
 
     blocks = runner.run(
-        "blocks", _fingerprint(config, "blocks", input_fp), build_blocks,
-        parents=("clks",),
+        "blocks", _fingerprint(config, "blocks", joint_fp), build_blocks,
+        parents=clks_stages,
     )
-    if metrics.get("blocks_resumed"):
-        # Parquet read-back loses the blocks stage's
-        # hashpartitioning(block_key) — restore it so a resumed run
-        # keeps the same single-exchange pairs plan as a fresh one.
-        blocks = blocks.repartition(
-            config.pair_partitions
-            or _banded_partitions(spark, n_rows * config.num_bands),
-            "block_key",
-        ).persist()
 
     def build_pairs() -> DataFrame:
+        # Pair predicate: key_a < key_b within one table; across two
+        # parties, the kid's sign bit.
+        sides = ((blocks,) if single else
+                 (blocks.where(F.col(kid_col) >= 0),
+                  blocks.where(F.col(kid_col) < 0)))
         scored = score_candidates(
             candidate_pairs(
-                blocks,
+                *sides,
                 key_col=kid_col,
-                # blocks is hash-partitioned by block_key (the blocks
-                # stage's single exchange, restored above on resume),
-                # so both self-join sides reuse it; a repartition here
-                # would add the shuffle back. Caveat: when the skew cap
-                # SPLITS a mega-block it rewrites block_key for those
-                # rows, and Catalyst conservatively re-inserts an
-                # exchange for the join — correct, just not
-                # single-exchange on that (rare, capped) path.
-                repartition=None,
+                repartition=None,  # blocks is partitioned by block_key
                 min_band_matches=config.min_band_matches,
             ),
-            clks_k,
+            clks_k[0],
             threshold=config.threshold,
+            other_clks=clks_k[-1],
             key_col=kid_col,
         )
-        # Back to user-facing keys for the stage table / consumers.
-        id_a = ids.select(
-            F.col(kid_col).alias("key_a"),
-            F.col(config.key_col).alias("_url_a"),
+
+        def ids(df: DataFrame, side: str) -> DataFrame:
+            return df.select(F.col(kid_col).alias(f"key_{side}"),
+                             F.col(key).alias(f"_url_{side}"))
+
+        # Back to user keys. Orientation: one table re-canonicalizes
+        # (string order != hash order); two parties keep key_a from A.
+        url_a, url_b = F.col("_url_a"), F.col("_url_b")
+        key_a, key_b = ((F.least(url_a, url_b), F.greatest(url_a, url_b))
+                        if single else (url_a, url_b))
+        pairs = (
+            scored.join(ids(clks_k[0], "a"), on="key_a")
+            .join(ids(clks_k[-1], "b"), on="key_b")
+            .select(key_a.alias("key_a"), key_b.alias("key_b"), "score")
         )
-        id_b = ids.select(
-            F.col(kid_col).alias("key_b"),
-            F.col(config.key_col).alias("_url_b"),
-        )
-        # Pairs were canonicalized in the kid domain; re-canonicalize on
-        # the user-facing keys (string order != hash order).
-        return (
-            scored.join(id_a, on="key_a")
-            .join(id_b, on="key_b")
-            .select(
-                F.least("_url_a", "_url_b").alias("key_a"),
-                F.greatest("_url_a", "_url_b").alias("key_b"),
-                "score",
-            )
-        )
+        # 1-1 matching runs on user keys: its mutual-best tie-break
+        # orders by key, which must stay the user-key ordering.
+        return one_to_one_matching(pairs) if one_to_one else pairs
 
     pairs = runner.run(
-        "pairs", _fingerprint(config, "pairs", input_fp), build_pairs,
-        parents=("clks", "blocks"),
+        "pairs", _fingerprint(config, "pairs", pairs_fp), build_pairs,
+        parents=clks_stages + ("blocks",),
     )
 
     def build_clusters() -> DataFrame:
@@ -802,19 +811,33 @@ def run_linkage(
             known_edge_bound=metrics.get("pairs_rows"),
         )
         return attach_cluster_ids(
-            clks.select(config.key_col), components,
-            key_col=config.key_col, id_assignment=config.key_id_mode,
+            all_clks.select(key), components,
+            key_col=key, id_assignment=config.key_id_mode,
         )
 
     clusters = runner.run(
-        "clusters", _fingerprint(config, "clusters", input_fp),
+        "clusters", _fingerprint(config, "clusters", pairs_fp),
         build_clusters, parents=("pairs",),
     )
 
     return LinkageResult(
-        clks=clks, blocks=blocks, pairs=pairs, clusters=clusters,
+        clks=all_clks, blocks=blocks, pairs=pairs, clusters=clusters,
         metrics=metrics, config=config,
     )
+
+
+def run_linkage(
+    spark: SparkSession,
+    pages: DataFrame,
+    config: LinkageConfig,
+) -> LinkageResult:
+    """Run the full dedup-linkage pipeline over one table.
+
+    Stages (each checkpointed when ``config.checkpoint_dir`` is set):
+    ``clks`` → ``blocks`` → ``pairs`` → ``clusters`` (plus ``kids``
+    under ``key_id_mode='dense'``).
+    """
+    return _run_graph(spark, [pages], config)
 
 
 def run_linkage_two_party(
@@ -833,232 +856,9 @@ def run_linkage_two_party(
     (key_a from party_a, key_b from party_b, score); ``clusters`` holds
     the matched-pair components (useful when one_to_one=False).
 
-    Stage checkpointing/metrics mirror :func:`run_linkage`: stages
-    ``clks_a`` / ``clks_b`` / ``blocks`` / ``pairs`` / ``clusters``
-    (plus ``kids_a``/``kids_b`` under ``key_id_mode='dense'``) resume
-    from ``config.checkpoint_dir`` when fingerprints match. Banding,
-    skew capping (``max_block_size``), and the pair join all run in the
-    same int64 ``_kid`` domain as the single-table pipeline, with the
-    party carried in the kid's sign bit.
+    Stages ``clks_a`` / ``clks_b`` / ``blocks`` / ``pairs`` /
+    ``clusters`` (plus ``kids_a``/``kids_b`` under
+    ``key_id_mode='dense'``) of the same graph as :func:`run_linkage`.
     """
-    from .operators.scoring import one_to_one_matching
-
-    metrics: Dict[str, Any] = {}
-    runner = _StageRunner(spark, config, metrics)
-    fp_a = config.input_fingerprint or _input_fingerprint(party_a)
-    fp_b = config.input_fingerprint or _input_fingerprint(party_b)
-    fp_ab = f"{fp_a}+{fp_b}"
-
-    def encode(df: DataFrame):
-        return lambda: encode_clks(
-            df,
-            config.schema,
-            config.secret,
-            key_cols=(config.key_col,),
-            feature_cols=config.feature_cols,
-            validate=config.validate,
-        )
-
-    clks_a = runner.run(
-        "clks_a", _fingerprint(config, "clks_a", fp_a), encode(party_a)
-    )
-    clks_b = runner.run(
-        "clks_b", _fingerprint(config, "clks_b", fp_b), encode(party_b)
-    )
-
-    n_rows = (metrics.get("clks_a_rows") or clks_a.count()) + (
-        metrics.get("clks_b_rows") or clks_b.count()
-    )
-    measured_a = None
-    if config.num_bands is None or config.bits_per_band is None:
-        measured_a = estimate_bit_agreement(
-            clks_a.unionByName(clks_b), key_col=config.key_col
-        )
-    config = _resolve_banding(config, n_rows, measured_a)
-    metrics["banding"] = {
-        "num_bands": config.num_bands,
-        "bits_per_band": config.bits_per_band,
-        "min_band_matches": config.min_band_matches,
-        "n_rows": n_rows,
-        "measured_bit_agreement": measured_a,
-    }
-
-    # Same int64 key-id domain as run_linkage — the shuffle-heavy middle
-    # (banding, the cross-party block join, the CLK payload joins) moves
-    # (long, long) rows, never (long, url-string). The party rides in
-    # the SIGN BIT of the kid (A ≥ 0, B < 0): cross-party pair selection
-    # is then a free sign predicate on the unioned capped blocks, and
-    # the skew cap sees both parties' contribution to a hot block at
-    # once (a boilerplate mega-block is a JOINT phenomenon — capping
-    # per-party would under-count its s_a × s_b pair volume).
-    kid_col = "_kid"
-    party_b_tag = F.lit(-(1 << 63))
-
-    def with_kids(
-        clks: DataFrame, stage: str, input_fp: str, is_b: bool
-    ) -> DataFrame:
-        if config.key_id_mode == "dense":
-            # Per-run ids → checkpoint the key↔id map itself (see
-            # run_linkage) so resumed _kid-bearing stages stay joinable.
-            def build_kids() -> DataFrame:
-                kid = F.monotonically_increasing_id()
-                if is_b:
-                    kid = kid.bitwiseOR(party_b_tag)
-                return clks.select(config.key_col).withColumn(kid_col, kid)
-
-            kids = runner.run(
-                stage, _fingerprint(config, stage, input_fp), build_kids,
-                parents=(stage.replace("kids", "clks"),),
-            )
-            return clks.join(kids, on=config.key_col).persist()
-        # 63-bit deterministic hash, party tag in the sign bit.
-        kid = F.shiftrightunsigned(F.xxhash64(F.col(config.key_col)), 1)
-        if is_b:
-            kid = kid.bitwiseOR(party_b_tag)
-        return clks.withColumn(kid_col, kid)
-
-    clks_ka = with_kids(clks_a, "kids_a", fp_a, is_b=False)
-    clks_kb = with_kids(clks_b, "kids_b", fp_b, is_b=True)
-    ids_a = clks_ka.select(kid_col, config.key_col)
-    ids_b = clks_kb.select(kid_col, config.key_col)
-
-    def bands(clks: DataFrame) -> DataFrame:
-        return block_keys(
-            clks,
-            l=config.schema.l,
-            num_bands=config.num_bands,
-            bits_per_band=config.bits_per_band,
-            seed=config.lsh_seed,
-            salt=config.lsh_salt,
-            key_cols=(kid_col,),
-        )
-
-    def build_blocks() -> DataFrame:
-        blocks = bands(clks_ka).unionByName(bands(clks_kb))
-        # Same single-exchange, single-materialization discipline as
-        # run_linkage: partition the unioned bands by block_key once —
-        # persist, NOT localCheckpoint, because an AQE checkpoint loses
-        # outputPartitioning and re-inserts the size-aggregate and
-        # cross-party join-side exchanges (see run_linkage's blocks
-        # stage for the 4M-ladder measurement). The cap aggregate and
-        # both sign-filtered join sides reuse the cached exchange; the
-        # runner skips a second materialization when the cap changed
-        # nothing.
-        blocks = blocks.repartition(
-            config.pair_partitions
-            or _banded_partitions(spark, n_rows * config.num_bands),
-            "block_key",
-        ).persist()
-        capped = blocks
-        if config.max_block_size:
-            capped, accounting = cap_block_size(
-                blocks,
-                config.max_block_size,
-                mode=config.block_cap_mode,
-                key_cols=(kid_col,),
-            )
-            metrics["block_cap_accounting"] = accounting.first().asDict()
-        if config.block_histogram:
-            metrics["block_size_histogram"] = {
-                int(r["log2_size"]): int(r["num_blocks"])
-                for r in block_size_histogram(capped).collect()
-            }
-        if capped is blocks:
-            capped._clkhash_prematerialized = True
-        return capped
-
-    blocks = runner.run(
-        "blocks", _fingerprint(config, "blocks", fp_ab), build_blocks,
-        parents=("clks_a", "clks_b"),
-    )
-    if metrics.get("blocks_resumed"):
-        # Restore hashpartitioning(block_key) lost in the parquet
-        # read-back (see run_linkage).
-        blocks = blocks.repartition(
-            config.pair_partitions
-            or _banded_partitions(spark, n_rows * config.num_bands),
-            "block_key",
-        ).persist()
-
-    _stage_scratch: list = []
-
-    def build_pairs() -> DataFrame:
-        pairs = candidate_pairs(
-            blocks.where(F.col(kid_col) >= 0),
-            other=blocks.where(F.col(kid_col) < 0),
-            key_col=kid_col,
-            repartition=None,  # pre-partitioned in the blocks stage
-            min_band_matches=config.min_band_matches,
-        )
-        scored = score_candidates(
-            pairs, clks_ka, threshold=config.threshold,
-            other_clks=clks_kb, key_col=kid_col,
-        )
-        # Back to user-facing keys BEFORE 1-1 matching: the mutual-best
-        # tie-break orders by key, which must stay the url ordering.
-        # Orientation is fixed (key_a from A, key_b from B) — no
-        # re-canonicalization.
-        scored = (
-            scored.join(
-                ids_a.select(F.col(kid_col).alias("key_a"),
-                             F.col(config.key_col).alias("_url_a")),
-                on="key_a",
-            )
-            .join(
-                ids_b.select(F.col(kid_col).alias("key_b"),
-                             F.col(config.key_col).alias("_url_b")),
-                on="key_b",
-            )
-            .select(
-                F.col("_url_a").alias("key_a"),
-                F.col("_url_b").alias("key_b"),
-                "score",
-            )
-        )
-        if not one_to_one:
-            return scored
-        # Scratch cache for the mutual-best windows (two consumers);
-        # released once the stage output is materialized.
-        scored = scored.persist()
-        _stage_scratch.append(scored)
-        scored.count()
-        return one_to_one_matching(scored)
-
-    pairs_fp = _fingerprint(
-        config, "pairs", f"{fp_ab}|one_to_one={one_to_one}"
-    )
-    matched = runner.run(
-        "pairs", pairs_fp, build_pairs, parents=("clks_a", "clks_b", "blocks")
-    )
-    for scratch in _stage_scratch:
-        scratch.unpersist()
-    _stage_scratch.clear()
-
-    def build_clusters() -> DataFrame:
-        components = connected_components(
-            matched, id_assignment=config.key_id_mode,
-            small_graph_edges=config.cluster_driver_gate_edges,
-            known_edge_bound=metrics.get("pairs_rows"),
-        )
-        all_keys = clks_a.select(config.key_col).union(
-            clks_b.select(config.key_col)
-        )
-        return attach_cluster_ids(
-            all_keys, components,
-            key_col=config.key_col, id_assignment=config.key_id_mode,
-        )
-
-    clusters = runner.run(
-        "clusters",
-        _fingerprint(config, "clusters", f"{fp_ab}|one_to_one={one_to_one}"),
-        build_clusters, parents=("pairs",),
-    )
-
-    return LinkageResult(
-        clks=clks_a.unionByName(clks_b),
-        blocks=blocks,  # kid domain, capped (party = kid sign bit)
-        pairs=matched,
-        clusters=clusters,
-        metrics=metrics,
-        config=config,
-    )
+    return _run_graph(spark, [party_a, party_b], config,
+                      one_to_one=one_to_one)

@@ -6,6 +6,8 @@ import os
 
 import pytest
 
+from clkhash_spark.sources.febrl import FEBRL_TESTDATA
+
 pytestmark = pytest.mark.spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_SF", "/root/testdata/sf0.001")
@@ -56,6 +58,8 @@ def _oracle_names():
 def test_query_matches_oracle(spark, duck, name):
     import __spark_entry__ as entry_mod
 
+    if name == "clk_febrl_two_party" and not os.path.isdir(FEBRL_TESTDATA):
+        pytest.skip("reference corpus not available")
     sdf = entry_mod.queries()[name](spark, SF_DIR)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
@@ -67,6 +71,15 @@ def test_query_matches_oracle(spark, duck, name):
     assert sorted(scols) == sorted(ocols)
     assert len(srows) == len(orows)
     assert _normalize(srows, scols) == _normalize(orows, ocols)
+
+
+def test_febrl_query_names_missing_corpus(monkeypatch):
+    import clkhash_spark.sources.febrl as febrl
+    from clkhash_spark.entry_queries import q_clk_febrl_two_party
+
+    monkeypatch.setattr(febrl, "FEBRL_TESTDATA", "/nonexistent/febrl")
+    with pytest.raises(FileNotFoundError, match="CLKHASH_SPARK_FEBRL_DIR"):
+        q_clk_febrl_two_party(None, SF_DIR)
 
 
 def test_entry_smoke(spark):

@@ -2,7 +2,10 @@
 round introduced must survive refactors.
 
 - stage-boundary lineage truncation in the pipelines (plans stay small;
-  the driver-gap pathology was ~10 s of zero-task Catalyst time per run)
+  the driver-gap pathology was ~10 s of zero-task Catalyst time per run),
+  for one and two parties, with the skew cap idle or splitting; blocks
+  stay a block_key-partitioned cache, and a run leaves only its stage
+  outputs persisted
 - single-evaluation MinHash plans (signature UDF appears once)
 - dedup-group sizes via partial aggregation, not a window over the
   skewed group key
@@ -69,18 +72,18 @@ class TestPlanShapes:
         assert "Window" not in plan
         assert "HashAggregate" in plan
 
-    def test_pipeline_stages_truncate_lineage(self, spark):
-        from clkhash_spark.pipeline import (
-            LinkageConfig, run_linkage, webpages_schema,
-        )
-        from clkhash_spark.sources.webpages import synthetic_webpages
+    @pytest.mark.parametrize("parties", [1, 2])
+    @pytest.mark.parametrize("max_block_size", [2000, 16],
+                             ids=["cap_idle", "cap_split"])
+    def test_pipeline_stages_truncate_lineage(self, spark, parties,
+                                              max_block_size):
+        from pyspark.sql import functions as F
 
-        pages = synthetic_webpages(spark, 400, seed=7).select("url", "text")
-        config = LinkageConfig(
-            schema=webpages_schema(), secret="s", num_bands=8,
-            bits_per_band=20,
-        )
-        result = run_linkage(spark, pages, config)
+        from clkhash_spark.operators.scoring import candidate_pairs
+
+        result = _run_skewed(spark, parties, max_block_size=max_block_size)
+        engaged = result.metrics["block_cap_accounting"]["oversized_blocks"]
+        assert bool(engaged) == (max_block_size == 16), engaged
         for name, df in (("pairs", result.pairs),
                          ("clusters", result.clusters)):
             plan = plan_of(df)
@@ -91,6 +94,67 @@ class TestPlanShapes:
             assert len(plan.splitlines()) < 120, (
                 name, len(plan.splitlines())
             )
+        # blocks stays a cache hash-partitioned by block_key on both cap
+        # paths, so the pair join reads it without a join-side exchange
+        # (the cache's own repartition is REPARTITION_BY_NUM)
+        assert "InMemoryRelation" in plan_of(result.blocks)
+        blocks = result.blocks
+        sides = ((blocks,) if parties == 1 else
+                 (blocks.where(F.col("_kid") >= 0),
+                  blocks.where(F.col("_kid") < 0)))
+        join_plan = plan_of(candidate_pairs(*sides, key_col="_kid",
+                                            min_band_matches=2))
+        exchanges = [line for line in join_plan.splitlines()
+                     if "ENSURE_REQUIREMENTS" in line and "block_key" in line]
+        assert exchanges == [], exchanges
+
+
+def _run_skewed(spark, parties, **config):
+    """Linkage over 400 synthetic pages plus 80 identical boilerplate
+    pages (an 80-row block in every band), as one table or split into
+    two parties; ``max_block_size=16`` engages the cap's split path."""
+    from clkhash_spark.pipeline import (
+        LinkageConfig, run_linkage, run_linkage_two_party, webpages_schema,
+    )
+
+    from .test_round3_fixes import _two_party_with_boilerplate
+
+    party_a, party_b, _ = _two_party_with_boilerplate(spark)
+    config = LinkageConfig(
+        schema=webpages_schema(), secret="s", num_bands=16,
+        bits_per_band=16, **config,
+    )
+    if parties == 1:
+        return run_linkage(spark, party_a.unionByName(party_b), config)
+    return run_linkage_two_party(spark, party_a, party_b, config)
+
+
+class TestStageCaches:
+    @pytest.mark.parametrize("key_id_mode, max_block_size, outputs", [
+        # clks, blocks, pairs, clusters
+        ("hash", 16, 4),
+        # + kids, and the cluster operator's own two dense-mode lineage
+        # cuts (its id map and edge set, operators/cluster.py)
+        ("dense", 2000, 7),
+    ])
+    def test_run_leaves_only_stage_outputs(self, spark, key_id_mode,
+                                           max_block_size, outputs):
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs())
+        result = _run_skewed(spark, 1, key_id_mode=key_id_mode,
+                             max_block_size=max_block_size)
+        persistent = jsc.getPersistentRDDs()
+        grown = set(persistent) - before
+        try:
+            # the scratch caches (the dense clks+kids join, the uncapped
+            # blocks the cap rewrote) are released once consumed
+            assert len(grown) == outputs, sorted(grown)
+            m = result.metrics
+            assert result.blocks.count() == m["blocks_rows"] > 0
+            assert result.pairs.count() == m["pairs_rows"] > 0
+        finally:
+            for rdd_id in grown:
+                persistent[rdd_id].unpersist(True)
 
 
 class TestWidenIfNarrow:
@@ -157,6 +221,26 @@ class TestClusterEdgeBound:
         )
         # bound > gate → falls through to the distributed contraction
         assert sorted(r["cluster_id"] is not None for r in out.collect())
+
+    def test_zero_gate_forces_gated_path_even_at_zero_bound(
+        self, spark, monkeypatch
+    ):
+        import clkhash_spark.operators.cluster as cluster
+
+        pairs = spark.createDataFrame(
+            [("a", "b"), ("b", "c"), ("d", "e")], ["key_a", "key_b"]
+        )
+        gated = sorted(map(tuple, cluster.connected_components(pairs)
+                           .collect()))
+
+        def driver_side(*args):
+            raise AssertionError("gate 0 took the driver-side path")
+
+        monkeypatch.setattr(cluster, "_union_find_labels", driver_side)
+        forced = sorted(map(tuple, cluster.connected_components(
+            pairs, small_graph_edges=0, known_edge_bound=0
+        ).collect()))
+        assert forced == gated and len(forced) == 5
 
 
 class TestTwoLevelFit:

@@ -24,7 +24,6 @@ from clkhash_spark.operators.evaluate import (
 )
 from clkhash_spark.operators.scoring import (
     candidate_pairs,
-    dice_scores,
     one_to_one_matching,
     score_candidates,
 )
