@@ -28,7 +28,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Tuple
+from typing import Any, Dict, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -135,7 +135,7 @@ def cap_block_size(
     split_salt_col: Optional[str] = None,
     key_cols: Sequence[str] = ("url",),
     block_col: str = "block_key",
-) -> Tuple[DataFrame, DataFrame]:
+) -> Tuple[DataFrame, Dict[str, Any]]:
     """Enforce a block-size cap; returns ``(capped_blocks, accounting)``.
 
     ``mode='drop'`` removes oversized blocks entirely (their pair volume is
@@ -145,48 +145,37 @@ def cap_block_size(
     near-duplicates still collide in the other ``num_bands - 1`` bands, so
     recall degrades gracefully instead of runtime exploding.
 
-    ``accounting`` is a 1-row DataFrame: blocks affected, rows affected,
-    pairs dropped (upper bound).
+    ``accounting`` is a dict read from ONE aggregate over the block sizes
+    (one ``first()``): ``oversized_blocks`` and ``rows_in_oversized``
+    (ints) and ``pair_volume_affected`` (float, an upper bound on the
+    pairs dropped). When no block exceeds the cap — the common case for
+    healthy band widths — ``blocks`` is returned as is, with no join-back.
     """
     if mode not in ("drop", "split"):
         raise ValueError(f"unknown cap mode {mode!r}")
-    spark = blocks.sparkSession
+    size = F.col("_block_size")
     sizes = blocks.groupBy(block_col).agg(F.count("*").alias("_block_size"))
-    # Cheap pre-check: when no block exceeds the cap (the common case for
-    # healthy band widths), skip the size join-back entirely — one small
-    # aggregate instead of a full re-shuffle of the block table.
-    max_size_row = sizes.agg(
-        F.max("_block_size").alias("max_size")
-    ).first()
-    max_size = max_size_row["max_size"] or 0
-    if max_size <= max_block_size:
-        accounting = spark.createDataFrame(
-            [(0, 0, 0.0)],
-            ["oversized_blocks", "rows_in_oversized",
-             "pair_volume_affected"],
-        )
-        return blocks, accounting
-    annotated = blocks.join(sizes, on=block_col, how="left")
-    oversized = annotated.where(F.col("_block_size") > max_block_size)
-
-    accounting = oversized.groupBy(block_col).agg(
-        F.first("_block_size").alias("size")
-    ).agg(
-        F.count("*").alias("oversized_blocks"),
-        F.coalesce(F.sum("size"), F.lit(0)).alias("rows_in_oversized"),
+    over = size > max_block_size
+    accounting = sizes.agg(
+        F.count_if(over).alias("oversized_blocks"),
+        F.coalesce(F.sum(F.when(over, size)), F.lit(0)).alias(
+            "rows_in_oversized"),
         F.coalesce(
-            F.sum(F.col("size") * (F.col("size") - 1) / 2), F.lit(0.0)
+            F.sum(F.when(over, size * (size - 1) / 2)), F.lit(0.0)
         ).alias("pair_volume_affected"),
-    )
+    ).first().asDict()
+    if not accounting["oversized_blocks"]:
+        return blocks, accounting
+    # Join back only the oversized sizes: a null size means "not
+    # oversized", and those rows keep their block key in both modes.
+    annotated = blocks.join(sizes.where(over), on=block_col, how="left")
 
     if mode == "drop":
-        capped = annotated.where(
-            F.col("_block_size") <= max_block_size
-        ).drop("_block_size")
+        capped = annotated.where(size.isNull()).drop("_block_size")
         return capped, accounting
 
     salt_source = split_salt_col or key_cols[0]
-    num_splits = F.ceil(F.col("_block_size") / F.lit(max_block_size))
+    num_splits = F.ceil(size / F.lit(max_block_size))
     # Salt by (block_key, record key), not the record key alone: the
     # block key embeds the band index, so a pair separated by the split
     # in one band lands together with probability ~1/num_splits in each
@@ -207,7 +196,7 @@ def cap_block_size(
     capped = annotated.withColumn(
         block_col,
         F.when(
-            F.col("_block_size") > max_block_size,
+            size.isNotNull(),
             F.xxhash64(
                 F.lit("block-split"), F.col(block_col), sub_block
             ).bitwiseOR(F.lit(-(1 << 63))),

@@ -467,7 +467,8 @@ class _single_thread_blas:
     centroids (observed: 3/196 sub-cells off by ~3e-3 at 100k rows).
     Wrapping BOTH sub-fit paths in this makes the executor-side fit
     bit-identical to the driver loop. No-op when the OpenBLAS control
-    symbol isn't loadable (non-OpenBLAS numpy builds).
+    symbols aren't loadable (non-OpenBLAS numpy builds), or when only
+    the setter is, since the previous count could not be restored.
     """
 
     _lib = None
@@ -510,9 +511,11 @@ class _single_thread_blas:
         self._prev = None
         if cls._lib:
             set_fn, get_fn = cls._lib
+            # Without the get-symbol the count could not be restored on
+            # exit, so the pin would outlive the block: leave it alone.
             if get_fn is not None:
                 self._prev = int(get_fn())
-            set_fn(1)
+                set_fn(1)
         return self
 
     def __exit__(self, *exc):

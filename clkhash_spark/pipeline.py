@@ -17,6 +17,12 @@ both pair-join sides reuse one exchange; every other stage ends in a
 lazy ``localCheckpoint`` + count that cuts its lineage. Scratch caches
 are released once the stage consuming them is materialized.
 
+Two stages keep their Spark actions few. ``blocks`` reads the skew
+cap's accounting from one aggregate over the block sizes, and joins
+sizes back only when a block is oversized. ``clusters`` labels the pair
+graph's components and joins the labels onto every record once, by
+vertex id (:func:`~.operators.cluster.cluster_records`).
+
 With ``checkpoint_dir`` set, stage tables are parquet directories with
 a JSON manifest (`_clkhash_manifest.json`) — the sandbox stand-in for
 Iceberg snapshot tables; on a real cluster swap :class:`StageStore` for
@@ -41,7 +47,7 @@ from pyspark.sql import functions as F
 
 from .core.schema import Schema
 from .operators.blocking import block_keys, block_size_histogram, cap_block_size
-from .operators.cluster import attach_cluster_ids, connected_components
+from .operators.cluster import cluster_records
 from .operators.encode import encode_clks
 from .operators.scoring import (
     candidate_pairs, one_to_one_matching, score_candidates,
@@ -736,13 +742,12 @@ def _run_graph(
         ))
         capped = blocks
         if config.max_block_size:
-            capped, accounting = cap_block_size(
+            capped, metrics["block_cap_accounting"] = cap_block_size(
                 blocks,
                 config.max_block_size,
                 mode=config.block_cap_mode,
                 key_cols=(kid_col,),
             )
-            metrics["block_cap_accounting"] = accounting.first().asDict()
         if config.block_histogram:
             metrics["block_size_histogram"] = {
                 int(r["log2_size"]): int(r["num_blocks"])
@@ -801,23 +806,18 @@ def _run_graph(
         parents=clks_stages + ("blocks",),
     )
 
-    def build_clusters() -> DataFrame:
-        components = connected_components(
-            pairs, id_assignment=config.key_id_mode,
+    clusters = runner.run(
+        "clusters", _fingerprint(config, "clusters", pairs_fp),
+        lambda: cluster_records(
+            all_clks.select(key), pairs, key_col=key,
+            id_assignment=config.key_id_mode,
             small_graph_edges=config.cluster_driver_gate_edges,
             # the materialized pairs-stage row count upper-bounds the
             # edge count, letting the driver-gate path skip its
             # materialize-and-checksum job (see connected_components)
             known_edge_bound=metrics.get("pairs_rows"),
-        )
-        return attach_cluster_ids(
-            all_clks.select(key), components,
-            key_col=key, id_assignment=config.key_id_mode,
-        )
-
-    clusters = runner.run(
-        "clusters", _fingerprint(config, "clusters", pairs_fp),
-        build_clusters, parents=("pairs",),
+        ),
+        parents=("pairs",),
     )
 
     return LinkageResult(

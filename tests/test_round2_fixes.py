@@ -55,9 +55,8 @@ class TestBlockSplitOverflow:
         ).count() == 0
         # non-oversized block untouched
         assert capped.where(F.col("block_key") == (3 << 48)).count() == 50
-        a = acct.first()
-        assert a["oversized_blocks"] == 1
-        assert a["rows_in_oversized"] == n
+        assert acct["oversized_blocks"] == 1
+        assert acct["rows_in_oversized"] == n
 
 
 class TestTunedBlockingWiring:

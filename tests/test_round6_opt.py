@@ -6,13 +6,16 @@ round introduced must survive refactors.
   for one and two parties, with the skew cap idle or splitting; blocks
   stay a block_key-partitioned cache, and a run leaves only its stage
   outputs persisted
+- per-stage Spark job counts of the blocks and clusters stages, and the
+  cap's drop mode through the pipeline
 - single-evaluation MinHash plans (signature UDF appears once)
 - dedup-group sizes via partial aggregation, not a window over the
   skewed group key
 - narrow-scan widening fires only when it should
 - two-level IVF: executor-side sub-fit is bit-identical to the driver
   loop; the quantizer ships as ONE explicit broadcast, not per-UDF
-  closure pickles
+  closure pickles; the BLAS thread pin is only taken when it can be
+  restored
 """
 
 import os
@@ -157,6 +160,48 @@ class TestStageCaches:
                 persistent[rdd_id].unpersist(True)
 
 
+class TestStageJobCounts:
+    # Spark jobs per stage group, one table, cap idle / cap split. The
+    # previous design ran 8 / 12 blocks jobs and 7 clusters jobs on both:
+    # separate max, idle-zeros and join-back accounting actions in the
+    # cap, and an edge distinct plus a key-id distinct and join in the
+    # clusters stage.
+    @pytest.mark.parametrize("max_block_size, blocks_jobs", [
+        (2000, 6), (16, 9),
+    ], ids=["cap_idle", "cap_split"])
+    def test_blocks_and_clusters_job_counts(self, spark, max_block_size,
+                                            blocks_jobs):
+        tracker = spark.sparkContext.statusTracker()
+        groups = ("clk:blocks", "clk:clusters")
+
+        def jobs():
+            return [len(tracker.getJobIdsForGroup(g)) for g in groups]
+
+        # groups accumulate over the session: count this run's jobs only
+        before = jobs()
+        _run_skewed(spark, 1, max_block_size=max_block_size)
+        grown = [a - b for a, b in zip(jobs(), before)]
+        assert grown == [blocks_jobs, 4], dict(zip(groups, grown))
+
+
+class TestCapDropMode:
+    def test_drop_through_pipeline(self, spark):
+        from pyspark.sql import functions as F
+
+        split = _run_skewed(spark, 1, max_block_size=16)
+        drop = _run_skewed(spark, 1, max_block_size=16,
+                           block_cap_mode="drop")
+        acct = drop.metrics["block_cap_accounting"]
+        assert acct == split.metrics["block_cap_accounting"]
+        assert acct["oversized_blocks"] > 0
+        # blocks below the cap keep their rows: only the oversized go
+        largest = (drop.blocks.groupBy("block_key").count()
+                   .agg(F.max("count")).first()[0])
+        assert largest <= 16
+        assert drop.metrics["blocks_rows"] == (
+            split.metrics["blocks_rows"] - acct["rows_in_oversized"])
+
+
 class TestWidenIfNarrow:
     def test_fires_on_single_partition(self, spark):
         from clkhash_spark.operators._util import widen_if_narrow
@@ -241,6 +286,25 @@ class TestClusterEdgeBound:
             pairs, small_graph_edges=0, known_edge_bound=0
         ).collect()))
         assert forced == gated and len(forced) == 5
+
+
+class TestSingleThreadBlas:
+    @pytest.mark.parametrize("get_threads, calls", [
+        (None, []),   # set-only build: the pin could not be undone
+        (4, [1, 4]),  # pinned inside, restored on exit
+    ], ids=["set_only", "set_and_get"])
+    def test_pins_only_what_it_restores(self, monkeypatch, get_threads,
+                                        calls):
+        import clkhash_spark.operators.similarity as S
+
+        seen = []
+        get_fn = None if get_threads is None else (lambda: get_threads)
+        monkeypatch.setattr(S._single_thread_blas, "_probed", True)
+        monkeypatch.setattr(S._single_thread_blas, "_lib",
+                            (seen.append, get_fn))
+        with S._single_thread_blas():
+            pass
+        assert seen == calls
 
 
 class TestTwoLevelFit:

@@ -194,13 +194,12 @@ class TestBlocking:
         sizes = capped.groupBy("block_key").count().collect()
         assert max(r["count"] for r in sizes) <= 25  # hash split is uneven
         assert capped.count() == 101
-        a = acct.first()
-        assert a["oversized_blocks"] == 1
-        assert a["rows_in_oversized"] == 100
+        assert acct["oversized_blocks"] == 1
+        assert acct["rows_in_oversized"] == 100
 
         dropped, acct2 = cap_block_size(blocks, 10, mode="drop")
         assert dropped.count() == 1
-        assert acct2.first()["pair_volume_affected"] == 100 * 99 / 2
+        assert acct2["pair_volume_affected"] == 100 * 99 / 2
 
     def test_histogram(self, spark):
         blocks = spark.createDataFrame(
