@@ -611,30 +611,24 @@ def q_doc_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected-components operator (distributed large-star/small-star
     above the driver gate).
     """
-    from .operators.cluster import connected_components
+    from .operators.cluster import cluster_records
 
     docs = _read(spark, sf_dir, "documents")
-    # Persist the pair list: connected_components consumes it three
-    # times (edges + both key unions) and each consumption would
-    # otherwise re-run the whole MinHash plan — signature UDF included
-    # (16 ArrowEvalPython nodes in the round-5 plan, 1 after;
-    # plans/r06/doc_dedup_groups_*.txt).
+    # cluster_records reads the pair list once (the edges), so the
+    # MinHash plan runs once without a persist.
     pairs = dedup.minhash_near_duplicates(
         docs,
         threshold=0.5,
         num_hashes=MINHASH_NUM_HASHES,
         num_bands=MINHASH_NUM_BANDS,
         shingle_size=MINHASH_SHINGLE,
-    ).persist()
-    comps = connected_components(pairs, key_a="doc_a", key_b="doc_b")
-    assigned = (
-        docs.select("doc_id")
-        .join(comps, docs["doc_id"] == comps["key"], "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", "doc_id").alias("group_id"),
-        )
     )
+    assigned = cluster_records(
+        docs.select("doc_id"),
+        pairs.select(F.col("doc_a").alias("key_a"),
+                     F.col("doc_b").alias("key_b")),
+        key_col="doc_id",
+    ).withColumnRenamed("cluster_id", "group_id")
     # group_size via groupBy + join, NOT count() OVER (PARTITION BY
     # group_id): a window materializes every group in one task and
     # cannot partial-aggregate, so the boilerplate mega-cluster of a

@@ -1,28 +1,25 @@
 """Transitive clustering: connected components over matched pairs.
 
-Alternating **large-star / small-star** label contraction (the standard
-MapReduce connected-components construction — converges in O(log² n)
-rounds on any graph, O(log n) in practice, unlike plain min-label
-propagation whose round count grows with component diameter):
+One entry point, :func:`cluster_records`: each record has an int64
+vertex id, computed from its key (:func:`_vertex`) or read from an id
+column it already carries, and its component's label joins onto it
+once, by that id. One solver, :func:`_component_labels`, labels every
+vertex with its component's minimum id on one of two paths:
 
-- *large-star*: every node's strictly-larger neighbours re-attach to the
-  minimum of its neighbourhood (including itself);
-- *small-star*: orienting each edge large→small, every node and its
-  smaller neighbours attach to the neighbourhood minimum.
-
-Both steps are one shuffle aggregation + one join each; edges shrink to
-stars (every vertex directly attached to its component's minimum id).
-
-Scale notes:
-- Vertices are int64 (hash of the key, or the key itself when callers
-  already work in a hashed-id domain) — iterative joins on longs, one
-  final join back to keys. :func:`cluster_records` joins the labels onto
-  the records by that vertex id directly (no key↔id map).
-- ``localCheckpoint`` per round truncates lineage (use
-  ``reliable=True`` → ``checkpoint`` on a real cluster).
-- Convergence is detected by an edge-set checksum (count + hash sum)
-  collected by an ``Observation`` on the round's materializing action —
-  one job per round, no data collect.
+- **driver**: graphs at or below an edge gate go to the driver via
+  Arrow and a vectorized union-find (:func:`_union_find_labels`);
+- **distributed**: alternating **large-star / small-star** contraction
+  (the standard MapReduce construction — O(log² n) rounds on any graph,
+  O(log n) in practice, unlike min-label propagation whose rounds grow
+  with component diameter). *Large-star* re-attaches every node's
+  strictly-larger neighbours to the minimum of its neighbourhood
+  (itself included); *small-star*, orienting edges large→small,
+  attaches every node and its smaller neighbours to the neighbourhood
+  minimum. Each is one shuffle aggregation + one join, and edges shrink
+  to stars. A lazy ``localCheckpoint`` per round cuts lineage, and an
+  ``Observation`` on the round's materializing action collects the
+  edge-set checksum (count + hash sum) that detects convergence — one
+  job per round, no data collect.
 """
 
 from __future__ import annotations
@@ -32,33 +29,23 @@ from typing import Callable, Optional, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["connected_components", "attach_cluster_ids", "cluster_records"]
-
-
-def _persist(df: DataFrame, reliable: bool) -> DataFrame:
-    """Truncate lineage between iterations."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+__all__ = ["cluster_records"]
 
 
 def _materialize_with_checksum(
-    df: DataFrame, reliable: bool
+    df: DataFrame,
 ) -> Tuple[DataFrame, Tuple[int, int]]:
     """Checkpoint + convergence checksum in ONE Spark job.
 
-    A non-eager (local)checkpoint materializes during the ``count``
+    A non-eager localCheckpoint materializes during the ``count``
     action, and an ``Observation`` rides the same action to collect the
     edge-set checksum — halving the per-round job count vs the old
     eager-checkpoint-then-aggregate pair (per-round driver latency is
     what dominates clustering wall time at small scale)."""
     from pyspark.sql import Observation
 
-    base = df.checkpoint(eager=False) if reliable else df.localCheckpoint(
-        eager=False
-    )
     obs = Observation()
-    out = base.observe(
+    out = df.localCheckpoint(eager=False).observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         # mod 2^31 per row so the sum can never overflow a long
@@ -147,9 +134,10 @@ def _union_find_labels(u, v) -> "object":
 
 
 def _vertex(key_type: str) -> Callable[[str], Column]:
-    """Hash-mode vertex id of a key column: integer keys pass through as
-    longs, other keys hash with xxhash64. It is also
-    :func:`attach_cluster_ids`' singleton fallback."""
+    """Computed vertex id of a key column: integer keys pass through as
+    longs, other keys hash with xxhash64 (collisions negligible below
+    ~10^9 distinct keys). A record's vertex id is also its singleton
+    cluster id."""
     if key_type in ("bigint", "int", "long"):
         return lambda c: F.col(c).cast("long")
     return lambda c: F.xxhash64(F.col(c))
@@ -173,7 +161,6 @@ def _driver_labels(edges: DataFrame) -> Optional[DataFrame]:
 def _component_labels(
     edges: DataFrame,
     max_iterations: int,
-    reliable: bool,
     small_graph_edges: int,
     known_edge_bound: Optional[int],
 ) -> Optional[DataFrame]:
@@ -181,14 +168,14 @@ def _component_labels(
     ``(u, v)`` (``u != v``; edges may repeat), labelled with the minimum
     id of its component; ``None`` when there are no edges.
 
-    ``known_edge_bound`` (``None`` under dense ids, whose per-run id map
-    must be pinned by a materialization) upper-bounds the edge count:
-    at or below the gate the edges go to the driver directly, repeats
+    ``known_edge_bound``, when given, upper-bounds the edge count: at or
+    below the gate the edges go to the driver directly, repeats
     included — the union-find accepts them — with no distinct and no
     materialize-and-checksum job. Otherwise the deduplicated edges are
     materialized once, their count rides that job's checksum, and the
     gate picks the driver union-find or the distributed star
-    contraction."""
+    contraction. A gate of 0 always takes the distributed path, even
+    for an empty edge set."""
     if (
         known_edge_bound is not None
         and small_graph_edges > 0  # a gate of 0 forces the distributed path
@@ -196,7 +183,7 @@ def _component_labels(
     ):
         return _driver_labels(edges)
 
-    edges, signature = _materialize_with_checksum(edges.distinct(), reliable)
+    edges, signature = _materialize_with_checksum(edges.distinct())
     if signature[0] == 0:
         return None
     if signature[0] <= small_graph_edges:
@@ -205,7 +192,7 @@ def _component_labels(
     converged = False
     for _ in range(max_iterations):
         edges, new_signature = _materialize_with_checksum(
-            _small_star(_large_star(edges)), reliable
+            _small_star(_large_star(edges))
         )
         if new_signature == signature:
             converged = True
@@ -217,7 +204,7 @@ def _component_labels(
         # silently wrong. O(log n) convergence makes this unreachable in
         # practice; fail loudly rather than mislabel.
         raise RuntimeError(
-            f"connected_components did not converge within "
+            f"cluster_records did not converge within "
             f"{max_iterations} iterations"
         )
 
@@ -233,172 +220,66 @@ def _component_labels(
     return labels.unionByName(roots)
 
 
-def connected_components(
-    pairs: DataFrame,
-    key_a: str = "key_a",
-    key_b: str = "key_b",
-    max_iterations: int = 50,
-    reliable: bool = False,
-    id_assignment: str = "hash",
-    small_graph_edges: int = 500_000,
-    known_edge_bound: Optional[int] = None,
-) -> DataFrame:
-    """Cluster pairs into components; returns ``(key, cluster_id)`` for
-    every key on a non-self pair (records without one are absent —
-    :func:`attach_cluster_ids` gives them singleton ids).
-
-    ``cluster_id`` is the minimum int64 vertex id in the component —
-    deterministic for a given input under ``id_assignment='hash'``.
-
-    ``id_assignment``:
-
-    - ``'hash'`` (default): string keys → xxhash64 (collisions
-      negligible below ~10^9 distinct keys); numeric keys pass through.
-    - ``'dense'``: assign each distinct key a unique per-run int64 via
-      ``monotonically_increasing_id`` — no birthday-collision risk at
-      any scale (the 10^12-row path), at the cost of one extra distinct
-      + two mapping joins, and cluster-id *values* that vary run-to-run
-      (membership does not).
-
-    Hybrid execution: the deduplicated edge count rides the first
-    materialization's checksum for free; at or below
-    ``small_graph_edges`` the components are solved driver-side —
-    edges arrive via Arrow (``toArrow``: 16 B/edge on the wire and in
-    numpy, no per-Row Python objects — so the transfer is
-    16 B × the configured gate: ~8 MB at this function's 500k
-    default, ~64 MB at the 4,000,000-edge gate the linkage pipeline
-    passes via ``LinkageConfig.cluster_driver_gate_edges``, plus a
-    labels DataFrame of up to 2×gate rows sent back through
-    ``createDataFrame``) and are labelled by one vectorized hook+jump
-    pass instead of O(log n) rounds of 3-4 Spark jobs each — at
-    small/medium scale the rounds are pure fixed latency (measured:
-    ~16 s for 29k edges at local[32]). Above the gate the standard
-    distributed large-star/small-star contraction runs;
-    ``small_graph_edges=0`` always takes the distributed path
-    (strict: even an empty edge set never collects). A
-    ``known_edge_bound`` (e.g. the pipeline's pairs-stage row count)
-    at or below the gate skips the materialization under hash ids.
-    """
-    key_type = dict(pairs.dtypes)[key_a]
-    dense = id_assignment == "dense"
-
-    if dense:
-        key_ids = (
-            pairs.select(F.col(key_a).alias("key"))
-            .union(pairs.select(F.col(key_b).alias("key")))
-            .distinct()
-            .withColumn("id", F.monotonically_increasing_id())
-        )
-        # The id map feeds both the edge build and the final join —
-        # persist so both consumers see ONE assignment (re-evaluation
-        # could repartition and renumber).
-        key_ids = _persist(key_ids, reliable)
-        edges = (
-            pairs.join(
-                key_ids.select(F.col("key").alias(key_a),
-                               F.col("id").alias("u")),
-                on=key_a,
-            )
-            .join(
-                key_ids.select(F.col("key").alias(key_b),
-                               F.col("id").alias("v")),
-                on=key_b,
-            )
-            .select("u", "v")
-        )
-    else:
-        vertex = _vertex(key_type)
-        edges = pairs.select(vertex(key_a).alias("u"),
-                             vertex(key_b).alias("v"))
-        key_ids = (
-            pairs.select(F.col(key_a).alias("key"))
-            .union(pairs.select(F.col(key_b).alias("key")))
-            .distinct()
-            .select("key", vertex("key").alias("id"))
-        )
-
-    labels = _component_labels(
-        edges.where(F.col("u") != F.col("v")), max_iterations, reliable,
-        small_graph_edges, None if dense else known_edge_bound,
-    )
-    if labels is None:
-        # No edges: every key is its own (absent) component; return the
-        # empty mapping (attach_cluster_ids fills singletons).
-        return key_ids.select(
-            "key", F.col("id").alias("cluster_id")
-        ).limit(0)
-    return (
-        key_ids.join(labels, on="id", how="inner")
-        .select("key", F.col("label").alias("cluster_id"))
-    )
-
-
-def attach_cluster_ids(
-    records: DataFrame,
-    clusters: DataFrame,
-    key_col: str = "url",
-    id_assignment: str = "hash",
-) -> DataFrame:
-    """Left-join :func:`connected_components`' ``(key, cluster_id)``
-    back onto records; singletons get their own id (their hash-mode
-    vertex id, or a fresh negative id under ``id_assignment='dense'`` —
-    disjoint from the non-negative dense component labels), so the
-    output is a total clustering. :func:`cluster_records` produces the
-    same rows from the pairs in one label join."""
-    key_type = dict(records.dtypes)[key_col]
-    if id_assignment == "dense":
-        fallback = F.monotonically_increasing_id().bitwiseOR(
-            F.lit(-(1 << 63))
-        )
-    else:
-        fallback = _vertex(key_type)(key_col)
-    joined = records.join(
-        clusters.withColumnRenamed("key", key_col), on=key_col, how="left"
-    )
-    return joined.withColumn(
-        "cluster_id", F.coalesce(F.col("cluster_id"), fallback)
-    )
-
-
 def cluster_records(
     records: DataFrame,
     pairs: DataFrame,
     key_col: str = "url",
-    id_assignment: str = "hash",
+    id_col: Optional[str] = None,
     small_graph_edges: int = 500_000,
     known_edge_bound: Optional[int] = None,
+    max_iterations: int = 50,
 ) -> DataFrame:
     """``records`` plus the ``cluster_id`` of each record's component in
-    the ``(key_a, key_b)`` pair graph: the rows of
-    ``attach_cluster_ids(records, connected_components(pairs, ...))``.
+    the ``(key_a, key_b)`` pair graph over ``records[key_col]``. A
+    record on no pair, or only on a self-pair, is its own singleton.
 
-    Under hash ids a record's vertex id is also its singleton id, so
-    the labels join onto the records once, by vertex id, as
-    ``coalesce(label, id)``: no key↔id map and, on the
-    ``known_edge_bound`` driver path, no edge distinct. Dense ids need
-    the key↔id map, so they take the two-step route."""
-    if id_assignment == "dense":
-        return attach_cluster_ids(
-            records,
-            connected_components(
-                pairs, id_assignment=id_assignment,
-                small_graph_edges=small_graph_edges,
-            ),
-            key_col=key_col, id_assignment=id_assignment,
-        )
-    vertex = _vertex(dict(records.dtypes)[key_col])
+    A record's vertex id is computed from its key by :func:`_vertex`
+    when ``id_col`` is ``None``, so ``cluster_id`` values are
+    deterministic. Otherwise it is read from ``records[id_col]``: a
+    unique int64 per key that stays stable across evaluations (e.g. a
+    materialized ``monotonically_increasing_id`` map, with no collision
+    risk at any scale); the pair keys map to ids through two joins on
+    ``records``, so a pair key that is no record's key drops its pair,
+    and the output drops ``id_col``. ``cluster_id`` is the
+    component's minimum vertex id, so the labels join onto the records
+    once, by vertex id, as ``coalesce(label, id)``.
+
+    Graphs of at most ``small_graph_edges`` edges are solved on the
+    driver (16 B/edge via Arrow: ~64 MB at the pipeline's
+    4,000,000-edge ``LinkageConfig.cluster_driver_gate_edges``) in one
+    vectorized pass instead of O(log n) rounds of Spark jobs, which at
+    small/medium scale are pure fixed latency (~16 s for 29k edges at
+    local[32]). Larger graphs, or any graph when
+    ``small_graph_edges=0``, run the star contraction, which raises if
+    it has not converged in ``max_iterations`` rounds. A
+    ``known_edge_bound`` (e.g. the pipeline's pairs-stage row count) at
+    or below the gate skips the edge distinct and its materialization.
+    """
+    if id_col is None:
+        vertex = _vertex(dict(records.dtypes)[key_col])
+        records = records.withColumn("_vid", vertex(key_col))
+        edges = pairs.select(vertex("key_a").alias("u"),
+                             vertex("key_b").alias("v"))
+    else:
+        records = records.withColumnRenamed(id_col, "_vid")
+
+        def ids(side: str, vid: str) -> DataFrame:
+            return records.select(F.col(key_col).alias(side),
+                                  F.col("_vid").alias(vid))
+
+        edges = (pairs.join(ids("key_a", "u"), on="key_a")
+                 .join(ids("key_b", "v"), on="key_b"))
+    columns = [c for c in records.columns if c != "_vid"]
     labels = _component_labels(
-        pairs.select(vertex("key_a").alias("u"), vertex("key_b").alias("v"))
-        .where(F.col("u") != F.col("v")),
-        max_iterations=50, reliable=False,
+        edges.select("u", "v").where(F.col("u") != F.col("v")),
+        max_iterations=max_iterations,
         small_graph_edges=small_graph_edges,
         known_edge_bound=known_edge_bound,
     )
     if labels is None:
-        return records.withColumn("cluster_id", vertex(key_col))
+        return records.select(*columns, F.col("_vid").alias("cluster_id"))
     return (
-        records.withColumn("_vid", vertex(key_col))
-        .join(labels.withColumnRenamed("id", "_vid"), on="_vid", how="left")
-        .select(*records.columns,
-                F.coalesce("label", "_vid").alias("cluster_id"))
+        records.join(labels.withColumnRenamed("id", "_vid"), on="_vid",
+                     how="left")
+        .select(*columns, F.coalesce("label", "_vid").alias("cluster_id"))
     )

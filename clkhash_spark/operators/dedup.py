@@ -301,7 +301,7 @@ def minhash_near_duplicates(
     # the sig_a/sig_b joins hash by different keys so no ReusedExchange
     # can deduplicate them — without the persist the signature UDF (the
     # CPU-heavy stage) is evaluated 3x per run (8 ArrowEvalPython nodes
-    # in the round-5 plan, 1 after; plans/r06/doc_minhash_pairs_*.txt).
+    # in the round-5 plan, 1 after; see OPTIMIZATION_r06.md).
     # MEMORY_AND_DISK spills instead of OOMing on a 100 TB corpus; at
     # that scale a real job would checkpoint signatures to a table.
     signatures = minhash_signatures(

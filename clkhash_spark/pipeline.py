@@ -21,7 +21,9 @@ Two stages keep their Spark actions few. ``blocks`` reads the skew
 cap's accounting from one aggregate over the block sizes, and joins
 sizes back only when a block is oversized. ``clusters`` labels the pair
 graph's components and joins the labels onto every record once, by
-vertex id (:func:`~.operators.cluster.cluster_records`).
+vertex id (:func:`~.operators.cluster.cluster_records`): under hash ids
+the vertex id is computed from the user key, under dense ids it is the
+record's ``_kid`` from its ``kids`` stage, so no second id map is made.
 
 With ``checkpoint_dir`` set, stage tables are parquet directories with
 a JSON manifest (`_clkhash_manifest.json`) — the sandbox stand-in for
@@ -46,7 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .core.schema import Schema
-from .operators.blocking import block_keys, block_size_histogram, cap_block_size
+from .operators.blocking import block_keys, cap_block_size
 from .operators.cluster import cluster_records
 from .operators.encode import encode_clks
 from .operators.scoring import (
@@ -236,7 +238,6 @@ class LinkageConfig:
     max_block_size: Optional[int] = 2000
     block_cap_mode: str = "split"
     validate: bool = False
-    pair_partitions: Optional[int] = None
     checkpoint_dir: Optional[str] = None
     resume: bool = True
     # 'hash': int64 keys via xxhash64 (deterministic; collisions
@@ -245,9 +246,6 @@ class LinkageConfig:
     # birthday-collision risk (cluster-id values then vary run-to-run;
     # membership does not).
     key_id_mode: str = "hash"
-    # Record the log2 block-size histogram (the skew observable) in
-    # metrics — one extra aggregate over the banded rows.
-    block_histogram: bool = False
     # Matched-pair graphs at or below this edge count are clustered
     # driver-side (Arrow transfer, 16 B/edge → ≤64 MB at the default;
     # vectorized hook+jump labelling) instead of O(log n) rounds of
@@ -349,8 +347,7 @@ def _banded_partitions(spark: SparkSession, banded_rows: int) -> int:
     shuffle-partitions conf: at 2M input rows x 64 bands on local[2]
     the static 8 partitions put 16M rows (~256 MB+) in each and the
     blocks stage spent its time spilling. Floor at the session conf
-    (never fewer partitions than plain shuffles use), cap at 65536
-    (10^12-row inputs run with explicit pair_partitions anyway)."""
+    (never fewer partitions than plain shuffles use), cap at 65536."""
     by_volume = (banded_rows + _BANDED_ROWS_PER_PARTITION - 1) // (
         _BANDED_ROWS_PER_PARTITION
     )
@@ -681,7 +678,7 @@ def _run_graph(
         "n_rows": n_rows,
         "measured_bit_agreement": measured_a,
     }
-    runner.block_partitions = config.pair_partitions or _banded_partitions(
+    runner.block_partitions = _banded_partitions(
         spark, n_rows * config.num_bands
     )
 
@@ -693,6 +690,7 @@ def _run_graph(
     # mega-block is a joint phenomenon (capping per party would
     # under-count its s_a × s_b pair volume).
     dense = config.key_id_mode == "dense"
+    kid_maps: List[DataFrame] = []  # the dense (key, _kid) stage tables
 
     def with_kids(clks_p: DataFrame, stage: str, fp: str,
                   party: Optional[int]) -> DataFrame:
@@ -708,6 +706,7 @@ def _run_graph(
             lambda: clks_p.select(key).withColumn(kid_col, kid),
             parents=(stage,),
         )
+        kid_maps.append(kids)
         return runner.scratch(
             clks_p.join(kids, on=key).persist(), until="pairs"
         )
@@ -720,11 +719,11 @@ def _run_graph(
     ]
 
     def build_blocks() -> DataFrame:
-        # ONE explicit shuffle by block_key: the cap's size aggregate,
-        # the histogram and both pair-join sides all require
-        # hashpartitioning(block_key), so deriving them from this
-        # exchange makes each of them exchange-free (600k rows: the
-        # banded rows previously re-shuffled 3x).
+        # ONE explicit shuffle by block_key: the cap's size aggregate and
+        # both pair-join sides require hashpartitioning(block_key), so
+        # deriving them from this exchange makes each of them
+        # exchange-free (600k rows: the banded rows previously
+        # re-shuffled 3x).
         blocks = runner.partition_blocks(functools.reduce(
             DataFrame.unionByName,
             [
@@ -748,11 +747,6 @@ def _run_graph(
                 mode=config.block_cap_mode,
                 key_cols=(kid_col,),
             )
-        if config.block_histogram:
-            metrics["block_size_histogram"] = {
-                int(r["log2_size"]): int(r["num_blocks"])
-                for r in block_size_histogram(capped).collect()
-            }
         if capped is not blocks:
             # The cap rewrote block keys: the runner re-partitions its
             # output, and the uncapped rows are scratch.
@@ -806,15 +800,18 @@ def _run_graph(
         parents=clks_stages + ("blocks",),
     )
 
+    # Dense vertex ids are the kids stages' own: already materialized
+    # (or read back), so the cluster operator mints no id map.
     clusters = runner.run(
         "clusters", _fingerprint(config, "clusters", pairs_fp),
         lambda: cluster_records(
-            all_clks.select(key), pairs, key_col=key,
-            id_assignment=config.key_id_mode,
+            (functools.reduce(DataFrame.unionByName, kid_maps) if dense
+             else all_clks.select(key)),
+            pairs, key_col=key, id_col=kid_col if dense else None,
             small_graph_edges=config.cluster_driver_gate_edges,
             # the materialized pairs-stage row count upper-bounds the
-            # edge count, letting the driver-gate path skip its
-            # materialize-and-checksum job (see connected_components)
+            # edge count, letting the driver-gate path skip the edge
+            # distinct and its materialize-and-checksum job
             known_edge_bound=metrics.get("pairs_rows"),
         ),
         parents=("pairs",),

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clkhash_spark.operators.blocking import cap_block_size
-from clkhash_spark.operators.cluster import connected_components
+from clkhash_spark.operators.cluster import cluster_records
 from clkhash_spark.operators.dedup import simhash, _WS
 from clkhash_spark.pipeline import (
     LinkageConfig,
@@ -19,6 +19,8 @@ from clkhash_spark.pipeline import (
     webpages_schema,
 )
 from clkhash_spark.sources.webpages import synthetic_webpages
+
+from .test_spark_pipeline import cluster_keys
 
 pytestmark = pytest.mark.spark
 
@@ -157,8 +159,17 @@ class TestDenseIdMode:
             [(f"k{i}", f"k{i+1}") for i in range(0, 400, 2)],
             ["key_a", "key_b"],
         )
-        out = connected_components(pairs, id_assignment="dense")
-        assert out.count() == out.select("key").distinct().count()
+        # the caller's own unique id per key, pinned by a materialization
+        keys = (
+            pairs.select(F.col("key_a").alias("key"))
+            .union(pairs.select(F.col("key_b").alias("key")))
+            .distinct()
+            .withColumn("id", F.monotonically_increasing_id())
+            .localCheckpoint()
+        )
+        out = cluster_records(keys, pairs, key_col="key", id_col="id")
+        assert out.columns == ["key", "cluster_id"]
+        assert out.count() == out.select("key").distinct().count() == 400
         # 200-edge perfect matching → 200 components of size 2
         assert out.groupBy("cluster_id").count().where(
             F.col("count") != 2
@@ -173,15 +184,13 @@ class TestConvergenceGuard:
         # small_graph_edges=0 forces the distributed rounds (the hybrid
         # driver path would solve a 64-edge chain without iterating).
         with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(
-                chain, max_iterations=1, small_graph_edges=0
-            )
+            cluster_keys(chain, max_iterations=1, small_graph_edges=0)
 
     def test_default_budget_converges(self, spark):
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(64)], ["key_a", "key_b"]
         )
-        out = connected_components(chain, small_graph_edges=0)
+        out = cluster_keys(chain, small_graph_edges=0)
         assert out.select("cluster_id").distinct().count() == 1
 
 

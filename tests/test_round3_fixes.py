@@ -293,18 +293,16 @@ class TestHybridConnectedComponents:
         """The union-find fast path must produce the exact (key,
         cluster_id) mapping of the star-contraction rounds — same
         min-hash-id labels, not just the same membership."""
-        from clkhash_spark.operators.cluster import connected_components
+        from .test_spark_pipeline import cluster_keys
 
         pairs = self._random_graph(spark)
         fast = {
             (r["key"], r["cluster_id"])
-            for r in connected_components(pairs).collect()
+            for r in cluster_keys(pairs).collect()
         }
         slow = {
             (r["key"], r["cluster_id"])
-            for r in connected_components(
-                pairs, small_graph_edges=0
-            ).collect()
+            for r in cluster_keys(pairs, small_graph_edges=0).collect()
         }
         assert fast == slow and fast
 
@@ -313,20 +311,20 @@ class TestHybridConnectedComponents:
         driver path wins on; labels must be the chain-wide minimum."""
         from pyspark.sql import functions as F2
 
-        from clkhash_spark.operators.cluster import connected_components
+        from .test_spark_pipeline import cluster_keys
 
         chain = spark.range(5000).select(
             F.col("id").alias("key_a"), (F.col("id") + 1).alias("key_b")
         )
-        out = connected_components(chain)
+        out = cluster_keys(chain)
         assert out.select("cluster_id").distinct().count() == 1
         assert out.agg(F2.min("cluster_id")).first()[0] == 0
 
     def test_empty_pairs(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
+        from .test_spark_pipeline import cluster_keys
 
         empty = spark.createDataFrame([], "key_a string, key_b string")
-        assert connected_components(empty).count() == 0
+        assert cluster_keys(empty).count() == 0
 
 
 class TestCalibratedBanding:

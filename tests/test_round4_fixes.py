@@ -206,28 +206,26 @@ class TestHybridCcRound4:
         """``small_graph_edges=0`` must never take the driver path, even
         for graphs at/below any gate — the convergence-guard tests rely
         on the literal contract."""
-        from clkhash_spark.operators.cluster import connected_components
+        from .test_spark_pipeline import cluster_keys
 
         pairs = spark.createDataFrame(
             [("a", "b"), ("b", "c")], ["key_a", "key_b"]
         )
         out = {
             (r["key"], r["cluster_id"])
-            for r in connected_components(
-                pairs, small_graph_edges=0
-            ).collect()
+            for r in cluster_keys(pairs, small_graph_edges=0).collect()
         }
         fast = {
             (r["key"], r["cluster_id"])
-            for r in connected_components(pairs).collect()
+            for r in cluster_keys(pairs).collect()
         }
         assert out == fast and len(out) == 3
 
     def test_empty_edges_with_zero_gate(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
+        from .test_spark_pipeline import cluster_keys
 
         empty = spark.createDataFrame([], "key_a string, key_b string")
-        assert connected_components(empty, small_graph_edges=0).count() == 0
+        assert cluster_keys(empty, small_graph_edges=0).count() == 0
 
     def test_vectorized_union_find_shapes(self):
         """Pure-numpy check: chain, star, two components, self-dups."""

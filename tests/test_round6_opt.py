@@ -8,6 +8,7 @@ round introduced must survive refactors.
   outputs persisted
 - per-stage Spark job counts of the blocks and clusters stages, and the
   cap's drop mode through the pipeline
+- a query leaves only the persisted RDDs it cannot avoid
 - single-evaluation MinHash plans (signature UDF appears once)
 - dedup-group sizes via partial aggregation, not a window over the
   skewed group key
@@ -136,9 +137,8 @@ class TestStageCaches:
     @pytest.mark.parametrize("key_id_mode, max_block_size, outputs", [
         # clks, blocks, pairs, clusters
         ("hash", 16, 4),
-        # + kids, and the cluster operator's own two dense-mode lineage
-        # cuts (its id map and edge set, operators/cluster.py)
-        ("dense", 2000, 7),
+        # + kids
+        ("dense", 2000, 5),
     ])
     def test_run_leaves_only_stage_outputs(self, spark, key_id_mode,
                                            max_block_size, outputs):
@@ -161,16 +161,22 @@ class TestStageCaches:
 
 
 class TestStageJobCounts:
-    # Spark jobs per stage group, one table, cap idle / cap split. The
-    # previous design ran 8 / 12 blocks jobs and 7 clusters jobs on both:
-    # separate max, idle-zeros and join-back accounting actions in the
-    # cap, and an edge distinct plus a key-id distinct and join in the
-    # clusters stage.
-    @pytest.mark.parametrize("max_block_size, blocks_jobs", [
-        (2000, 6), (16, 9),
-    ], ids=["cap_idle", "cap_split"])
-    def test_blocks_and_clusters_job_counts(self, spark, max_block_size,
-                                            blocks_jobs):
+    # Spark jobs per stage group, one table, cap idle / cap split, and
+    # dense key ids with the cap idle. The previous design ran 8 / 12
+    # blocks jobs and 7 clusters jobs on both hash paths: separate max,
+    # idle-zeros and join-back accounting actions in the cap, and an
+    # edge distinct plus a key-id distinct and join in the clusters
+    # stage. Under dense ids the clusters stage ran 15 jobs: the
+    # operator minted and checkpointed its own key-id map, and without
+    # the known edge bound its edges took the distinct + checkpoint
+    # path; it now reads the kids stage's ids.
+    @pytest.mark.parametrize("config, blocks_jobs, clusters_jobs", [
+        ({"max_block_size": 2000}, 6, 4),
+        ({"max_block_size": 16}, 9, 4),
+        ({"max_block_size": 2000, "key_id_mode": "dense"}, 8, 5),
+    ], ids=["cap_idle", "cap_split", "dense"])
+    def test_blocks_and_clusters_job_counts(self, spark, config,
+                                            blocks_jobs, clusters_jobs):
         tracker = spark.sparkContext.statusTracker()
         groups = ("clk:blocks", "clk:clusters")
 
@@ -179,9 +185,31 @@ class TestStageJobCounts:
 
         # groups accumulate over the session: count this run's jobs only
         before = jobs()
-        _run_skewed(spark, 1, max_block_size=max_block_size)
+        _run_skewed(spark, 1, **config)
         grown = [a - b for a, b in zip(jobs(), before)]
-        assert grown == [blocks_jobs, 4], dict(zip(groups, grown))
+        assert grown == [blocks_jobs, clusters_jobs], dict(zip(groups,
+                                                                grown))
+
+
+class TestQueryScratchCaches:
+    def test_dedup_groups_does_not_persist_pairs(self, spark):
+        from clkhash_spark.entry_queries import q_doc_dedup_groups
+
+        spark.catalog.clearCache()
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs())
+        q_doc_dedup_groups(spark, SF).collect()
+        persistent = jsc.getPersistentRDDs()
+        grown = set(persistent) - before
+        try:
+            # the MinHash signatures cache (read three times by the pair
+            # generator) and the solver's edge checkpoint; the cluster
+            # operator reads the pair list once, so it is not persisted
+            # (a pairs cache made this 3)
+            assert len(grown) == 2, sorted(grown)
+        finally:
+            for rdd_id in grown:
+                persistent[rdd_id].unpersist(True)
 
 
 class TestCapDropMode:
@@ -229,41 +257,43 @@ class TestWidenIfNarrow:
 
 class TestClusterEdgeBound:
     def test_known_edge_bound_matches_gated_path(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
+        from .test_spark_pipeline import cluster_keys
 
         pairs = spark.createDataFrame(
             [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f"), ("a", "c")],
             ["key_a", "key_b"],
         )
-        gated = sorted(
-            map(tuple, connected_components(pairs).collect())
-        )
+        gated = sorted(map(tuple, cluster_keys(pairs).collect()))
         fast = sorted(
-            map(
-                tuple,
-                connected_components(pairs, known_edge_bound=5).collect(),
-            )
+            map(tuple, cluster_keys(pairs, known_edge_bound=5).collect())
         )
-        assert fast == gated and len(fast) > 0
+        assert fast == gated and len(fast) == 6
+        # f is only on a self-pair: it is its own singleton
+        ids = dict(fast)
+        assert [k for k, c in ids.items() if c == ids["f"]] == ["f"]
 
     def test_known_edge_bound_empty_edges(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
+        from pyspark.sql import functions as F
+
+        from .test_spark_pipeline import cluster_keys
 
         pairs = spark.createDataFrame(
             [("x", "x")], ["key_a", "key_b"]  # self-loop only → no edges
         )
-        out = connected_components(pairs, known_edge_bound=1)
-        assert out.count() == 0
+        out = cluster_keys(pairs, known_edge_bound=1)
+        # a key only on a self-pair is its own singleton: its vertex id
+        (row,) = out.collect()
+        assert row["key"] == "x"
+        assert row["cluster_id"] == pairs.select(
+            F.xxhash64("key_a")).first()[0]
 
     def test_bound_above_gate_uses_gated_path(self, spark):
-        from clkhash_spark.operators.cluster import connected_components
+        from .test_spark_pipeline import cluster_keys
 
         pairs = spark.createDataFrame(
             [("a", "b")], ["key_a", "key_b"]
         )
-        out = connected_components(
-            pairs, small_graph_edges=0, known_edge_bound=1
-        )
+        out = cluster_keys(pairs, small_graph_edges=0, known_edge_bound=1)
         # bound > gate → falls through to the distributed contraction
         assert sorted(r["cluster_id"] is not None for r in out.collect())
 
@@ -272,17 +302,18 @@ class TestClusterEdgeBound:
     ):
         import clkhash_spark.operators.cluster as cluster
 
+        from .test_spark_pipeline import cluster_keys
+
         pairs = spark.createDataFrame(
             [("a", "b"), ("b", "c"), ("d", "e")], ["key_a", "key_b"]
         )
-        gated = sorted(map(tuple, cluster.connected_components(pairs)
-                           .collect()))
+        gated = sorted(map(tuple, cluster_keys(pairs).collect()))
 
         def driver_side(*args):
             raise AssertionError("gate 0 took the driver-side path")
 
         monkeypatch.setattr(cluster, "_union_find_labels", driver_side)
-        forced = sorted(map(tuple, cluster.connected_components(
+        forced = sorted(map(tuple, cluster_keys(
             pairs, small_graph_edges=0, known_edge_bound=0
         ).collect()))
         assert forced == gated and len(forced) == 5

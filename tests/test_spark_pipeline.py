@@ -12,10 +12,7 @@ from clkhash_spark.operators.blocking import (
     block_size_histogram,
     cap_block_size,
 )
-from clkhash_spark.operators.cluster import (
-    attach_cluster_ids,
-    connected_components,
-)
+from clkhash_spark.operators.cluster import cluster_records
 from clkhash_spark.operators.encode import encode_clks
 from clkhash_spark.operators.evaluate import (
     cluster_pairs,
@@ -260,6 +257,17 @@ class TestScoring:
         assert {(r["key_a"], r["key_b"]) for r in kept} == {("a1", "b1")}
 
 
+def cluster_keys(pairs, **kwargs):
+    """``cluster_records`` over the pairs' distinct keys: one
+    ``(key, cluster_id)`` row per key on a pair."""
+    keys = (
+        pairs.select(F.col("key_a").alias("key"))
+        .union(pairs.select(F.col("key_b").alias("key")))
+        .distinct()
+    )
+    return cluster_records(keys, pairs, key_col="key", **kwargs)
+
+
 class TestClustering:
     def test_connected_components_chain_and_triangle(self, spark):
         pairs = spark.createDataFrame(
@@ -270,7 +278,7 @@ class TestClustering:
             ],
             ["key_a", "key_b"],
         )
-        components = connected_components(pairs)
+        components = cluster_keys(pairs)
         got = {
             r["key"]: r["cluster_id"] for r in components.collect()
         }
@@ -285,7 +293,7 @@ class TestClustering:
             [(f"n{i:03d}", f"n{i+1:03d}") for i in range(n)],
             ["key_a", "key_b"],
         )
-        components = connected_components(pairs)
+        components = cluster_keys(pairs)
         assert components.select("cluster_id").distinct().count() == 1
 
     def test_very_long_chain_pointer_jumping(self, spark):
@@ -296,7 +304,7 @@ class TestClustering:
             [(f"c{i:04d}", f"c{i+1:04d}") for i in range(n)],
             ["key_a", "key_b"],
         )
-        components = connected_components(pairs, max_iterations=15)
+        components = cluster_keys(pairs, max_iterations=15)
         assert components.select("cluster_id").distinct().count() == 1
         assert components.count() == n + 1
 
@@ -304,10 +312,9 @@ class TestClustering:
         records = spark.createDataFrame(
             [("a",), ("b",), ("lonely",)], ["url"]
         )
-        clusters = connected_components(
-            spark.createDataFrame([("a", "b")], ["key_a", "key_b"])
+        total = cluster_records(
+            records, spark.createDataFrame([("a", "b")], ["key_a", "key_b"])
         )
-        total = attach_cluster_ids(records, clusters, key_col="url")
         got = {r["url"]: r["cluster_id"] for r in total.collect()}
         assert got["a"] == got["b"]
         assert got["lonely"] is not None

@@ -42,7 +42,7 @@ def warm_workers(spark: SparkSession, cores: int) -> None:
 
 
 def run_dedup(spark: SparkSession, rows: int) -> dict:
-    from clkhash_spark.operators.cluster import connected_components
+    from clkhash_spark.operators.cluster import cluster_records
     from clkhash_spark.operators.dedup import minhash_near_duplicates
     from clkhash_spark.sources.webpages import synthetic_webpages
 
@@ -74,14 +74,14 @@ def run_dedup(spark: SparkSession, rows: int) -> dict:
     t_pairs = time.time() - t0
 
     t1 = time.time()
-    comps = connected_components(pairs, key_a="doc_a", key_b="doc_b")
     keep = (
-        pages.select("doc_id")
-        .join(comps, pages["doc_id"] == comps["key"], "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", "doc_id").alias("group_id"),
+        cluster_records(
+            pages.select("doc_id"),
+            pairs.select(F.col("doc_a").alias("key_a"),
+                         F.col("doc_b").alias("key_b")),
+            key_col="doc_id",
         )
+        .withColumnRenamed("cluster_id", "group_id")
         .persist()
     )
     n_keep = keep.where(F.col("doc_id") == F.col("group_id")).count()
