@@ -20,15 +20,15 @@ Scale notes:
 - Block keys embed the band index and a salt, so a hot bit-pattern in one
   band never merges with another band's blocks, and different runs/salts
   re-randomize placement.
-- Skew control: ``cap_block_size`` drops or salt-splits blocks larger than
-  the cap (web-scale boilerplate pages create mega-blocks that would
-  otherwise produce O(s²) pairs). Dropped/split volume is observable via
+- Skew control: ``cap_block_size`` salt-splits blocks larger than the
+  cap (web-scale boilerplate pages create mega-blocks that would
+  otherwise produce O(s²) pairs). Split volume is observable via
   :func:`block_size_histogram`.
 """
 
 from __future__ import annotations
 
-from typing import Any, Dict, Optional, Sequence, Tuple
+from typing import Any, Dict, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -131,28 +131,25 @@ def block_size_histogram(
 def cap_block_size(
     blocks: DataFrame,
     max_block_size: int,
-    mode: str = "split",
-    split_salt_col: Optional[str] = None,
     key_cols: Sequence[str] = ("url",),
     block_col: str = "block_key",
 ) -> Tuple[DataFrame, Dict[str, Any]]:
     """Enforce a block-size cap; returns ``(capped_blocks, accounting)``.
 
-    ``mode='drop'`` removes oversized blocks entirely (their pair volume is
-    reported, not silently lost). ``mode='split'`` salts oversized blocks
-    into ``ceil(size / max_block_size)`` sub-blocks via a hash of the
-    record key — pairs split across sub-blocks are lost for *this* band but
-    near-duplicates still collide in the other ``num_bands - 1`` bands, so
-    recall degrades gracefully instead of runtime exploding.
+    Oversized blocks are salted into ``ceil(size / max_block_size)``
+    sub-blocks via a hash of the block key and the record key
+    (``key_cols[0]``) — pairs split across sub-blocks are lost for *this*
+    band but near-duplicates still collide in the other
+    ``num_bands - 1`` bands, so recall degrades gracefully instead of
+    runtime exploding.
 
     ``accounting`` is a dict read from ONE aggregate over the block sizes
     (one ``first()``): ``oversized_blocks`` and ``rows_in_oversized``
     (ints) and ``pair_volume_affected`` (float, an upper bound on the
-    pairs dropped). When no block exceeds the cap — the common case for
-    healthy band widths — ``blocks`` is returned as is, with no join-back.
+    pairs the split can lose). When no block exceeds the cap — the
+    common case for healthy band widths — ``blocks`` is returned as is,
+    with no join-back.
     """
-    if mode not in ("drop", "split"):
-        raise ValueError(f"unknown cap mode {mode!r}")
     size = F.col("_block_size")
     sizes = blocks.groupBy(block_col).agg(F.count("*").alias("_block_size"))
     over = size > max_block_size
@@ -167,14 +164,8 @@ def cap_block_size(
     if not accounting["oversized_blocks"]:
         return blocks, accounting
     # Join back only the oversized sizes: a null size means "not
-    # oversized", and those rows keep their block key in both modes.
+    # oversized", and those rows keep their block key.
     annotated = blocks.join(sizes.where(over), on=block_col, how="left")
-
-    if mode == "drop":
-        capped = annotated.where(size.isNull()).drop("_block_size")
-        return capped, accounting
-
-    salt_source = split_salt_col or key_cols[0]
     num_splits = F.ceil(size / F.lit(max_block_size))
     # Salt by (block_key, record key), not the record key alone: the
     # block key embeds the band index, so a pair separated by the split
@@ -184,7 +175,7 @@ def cap_block_size(
     # key would put a pair in the same sub-block in every band or in
     # none, turning the cap into an all-bands pair drop.
     sub_block = F.pmod(
-        F.xxhash64(F.col(block_col), F.col(salt_source)), num_splits
+        F.xxhash64(F.col(block_col), F.col(key_cols[0])), num_splits
     )
     # Collision-free rekey: any int64 is a valid block key, so hash
     # (block, sub_block) instead of packing the sub-block id into high

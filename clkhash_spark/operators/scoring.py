@@ -36,7 +36,6 @@ def candidate_pairs(
     other: Optional[DataFrame] = None,
     key_col: str = "url",
     block_col: str = "block_key",
-    repartition: Optional[int] = None,
     min_band_matches: int = 1,
 ) -> DataFrame:
     """Candidate pairs from shared block keys.
@@ -66,8 +65,6 @@ def candidate_pairs(
             F.col(block_col), F.col(key_col).alias("key_b")
         )
         condition = F.lit(True)
-    if repartition:
-        left = left.repartition(repartition, block_col)
     joined = (
         left.join(right, on=block_col, how="inner")
         .where(condition)

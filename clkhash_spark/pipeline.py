@@ -2,11 +2,14 @@
 
 One stage graph serves dedup of one table (:func:`run_linkage`) and
 linkage of two parties (:func:`run_linkage_two_party`): ``clks``
-(``clks_a``/``clks_b``) → ``kids`` (dense key ids only) → ``blocks`` →
-``pairs`` → ``clusters``. The party count changes four things:
+(``clks_a``/``clks_b``) → ``blocks`` → ``pairs`` → ``clusters``, in
+both key-id modes. Each clks stage table stores the record's int64 key
+id (``_kid``) next to its CLK, so a resumed stage reads back the same
+ids even when they are per-run dense ids. The party count changes four
+things:
 
-- the int64 key id (``_kid``): ``xxhash64(key)`` for one table; the
-  63-bit ``xxhash64(key) >>> 1`` with party B in the sign bit for two;
+- the int64 key id: ``xxhash64(key)`` for one table; the 63-bit
+  ``xxhash64(key) >>> 1`` with party B in the sign bit for two;
 - the pair predicate: ``key_a < key_b`` vs the kid's sign;
 - the pair orientation: least/greatest user key vs fixed A/B;
 - 1-1 matching, for two parties only.
@@ -14,8 +17,8 @@ linkage of two parties (:func:`run_linkage_two_party`): ``clks``
 One materialization rule, owned by ``_StageRunner``: ``blocks`` is
 hash-partitioned by ``block_key`` and persisted, so the skew cap and
 both pair-join sides reuse one exchange; every other stage ends in a
-lazy ``localCheckpoint`` + count that cuts its lineage. Scratch caches
-are released once the stage consuming them is materialized.
+lazy ``localCheckpoint`` + count that cuts its lineage. A scratch
+cache is released when the stage that made it ends.
 
 Two stages keep their Spark actions few. ``blocks`` reads the skew
 cap's accounting from one aggregate over the block sizes, and joins
@@ -23,7 +26,8 @@ sizes back only when a block is oversized. ``clusters`` labels the pair
 graph's components and joins the labels onto every record once, by
 vertex id (:func:`~.operators.cluster.cluster_records`): under hash ids
 the vertex id is computed from the user key, under dense ids it is the
-record's ``_kid`` from its ``kids`` stage, so no second id map is made.
+``_kid`` stored in the record's clks stage table, so no second id map
+is made.
 
 With ``checkpoint_dir`` set, stage tables are parquet directories with
 a JSON manifest (`_clkhash_manifest.json`) — the sandbox stand-in for
@@ -236,7 +240,6 @@ class LinkageConfig:
     lsh_seed: int = 42
     lsh_salt: int = 0
     max_block_size: Optional[int] = 2000
-    block_cap_mode: str = "split"
     validate: bool = False
     checkpoint_dir: Optional[str] = None
     resume: bool = True
@@ -244,7 +247,7 @@ class LinkageConfig:
     # negligible < ~10^9 rows). 'dense': unique per-run ids via
     # monotonically_increasing_id — survives 10^12-row inputs with no
     # birthday-collision risk (cluster-id values then vary run-to-run;
-    # membership does not).
+    # membership does not). Either id is stored in the clks stage table.
     key_id_mode: str = "hash"
     # Matched-pair graphs at or below this edge count are clustered
     # driver-side (Arrow transfer, 16 B/edge → ≤64 MB at the default;
@@ -382,19 +385,18 @@ def _secret_fingerprint(secret: Union[str, bytes]) -> str:
 # Stage → config fields that affect its OUTPUT (cumulative: a stage's
 # fingerprint covers everything upstream of it, so changing e.g. the
 # threshold invalidates pairs+clusters but keeps clks/blocks resumable).
-# "kids" is the dense-mode key↔id map: persisting it as its own stage is
-# what makes _kid-bearing downstream stages (blocks/pairs) safe to
-# resume — monotonically_increasing_id values are per-run, so the map
-# MUST be read back from the store rather than re-derived on resume.
+# The clks table stores each record's _kid, so key_id_mode is a clks
+# field: dense (monotonically_increasing_id) values are per-run, and the
+# _kid-bearing downstream stages (blocks/pairs) stay safe to resume only
+# because the ids are read back with the clks table, never re-derived.
 _STAGE_FIELDS = {
-    "clks": ("key_col", "feature_cols", "validate"),
-    "kids": ("key_id_mode",),
+    "clks": ("key_col", "feature_cols", "validate", "key_id_mode"),
     "blocks": ("num_bands", "bits_per_band", "lsh_seed", "lsh_salt",
-               "max_block_size", "block_cap_mode"),
+               "max_block_size"),
     "pairs": ("threshold", "min_band_matches"),
     "clusters": (),
 }
-_STAGE_ORDER = ("clks", "kids", "blocks", "pairs", "clusters")
+_STAGE_ORDER = ("clks", "blocks", "pairs", "clusters")
 
 
 def _fingerprint(
@@ -550,16 +552,16 @@ class _StageRunner:
         self.metrics = metrics
         # Set by the graph once banding fixes the banded-row volume.
         self.block_partitions: Optional[int] = None
-        self._scratch: Dict[str, List[DataFrame]] = {}
+        self._scratch: List[DataFrame] = []
 
     def partition_blocks(self, df: DataFrame) -> DataFrame:
         """Hash-partition banded rows by ``block_key`` and persist them."""
         return df.repartition(self.block_partitions, "block_key").persist()
 
-    def scratch(self, df: DataFrame, until: str) -> DataFrame:
-        """Register the cached ``df``; it is unpersisted once stage
-        ``until`` is materialized."""
-        self._scratch.setdefault(until, []).append(df)
+    def scratch(self, df: DataFrame) -> DataFrame:
+        """Register the cached ``df``; it is unpersisted when the running
+        stage ends."""
+        self._scratch.append(df)
         return df
 
     def _keep(self, name: str, df: DataFrame) -> DataFrame:
@@ -607,8 +609,8 @@ class _StageRunner:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-            for df in self._scratch.pop(name, ()):
-                df.unpersist()
+            while self._scratch:
+                self._scratch.pop().unpersist()
 
 
 def _kid_column(
@@ -649,12 +651,25 @@ def _run_graph(
     pairs_fp = (joint_fp if one_to_one is None
                 else f"{joint_fp}|one_to_one={one_to_one}")
 
+    # Work in an int64 key domain through the shuffle-heavy middle
+    # stages: banding, the pair join, and the CLK payload joins all
+    # move (long, long) rows instead of (long, url-string) — ~2.5x less
+    # shuffle volume. User keys rejoin only on the skinny final pairs.
+    # The clks stage table stores the key id, so a dense (per-run) id is
+    # read back with it, never re-derived.
+    dense = config.key_id_mode == "dense"
+
+    def build_clks(df: DataFrame, party: Optional[int]) -> DataFrame:
+        return encode_clks(
+            df, config.schema, config.secret, key_cols=(key,),
+            feature_cols=config.feature_cols, validate=config.validate,
+        ).withColumn(kid_col, _kid_column(key, dense, party))
+
     clks = [
         runner.run(stage, _fingerprint(config, stage, fp), functools.partial(
-            encode_clks, df, config.schema, config.secret, key_cols=(key,),
-            feature_cols=config.feature_cols, validate=config.validate,
-        ))
-        for stage, fp, df in zip(clks_stages, input_fps, parties)
+            build_clks, df, None if single else party))
+        for party, (stage, fp, df) in enumerate(
+            zip(clks_stages, input_fps, parties))
     ]
     all_clks = functools.reduce(DataFrame.unionByName, clks)
 
@@ -682,42 +697,9 @@ def _run_graph(
         spark, n_rows * config.num_bands
     )
 
-    # Work in an int64 key domain through the shuffle-heavy middle
-    # stages: banding, the pair join, and the CLK payload joins all
-    # move (long, long) rows instead of (long, url-string) — ~2.5x less
-    # shuffle volume. User keys rejoin only on the skinny final pairs.
     # Both parties' bands go through ONE skew cap: a boilerplate
     # mega-block is a joint phenomenon (capping per party would
     # under-count its s_a × s_b pair volume).
-    dense = config.key_id_mode == "dense"
-    kid_maps: List[DataFrame] = []  # the dense (key, _kid) stage tables
-
-    def with_kids(clks_p: DataFrame, stage: str, fp: str,
-                  party: Optional[int]) -> DataFrame:
-        kid = _kid_column(key, dense, party)
-        if not dense:
-            return clks_p.withColumn(kid_col, kid)
-        # Dense ids are per-run (partition-layout dependent), so the
-        # key↔id map is itself a stage: a resumed blocks/pairs table
-        # stores _kid values and must join against the same assignment.
-        kids_stage = stage.replace("clks", "kids")
-        kids = runner.run(
-            kids_stage, _fingerprint(config, kids_stage, fp),
-            lambda: clks_p.select(key).withColumn(kid_col, kid),
-            parents=(stage,),
-        )
-        kid_maps.append(kids)
-        return runner.scratch(
-            clks_p.join(kids, on=key).persist(), until="pairs"
-        )
-
-    clks_k = [
-        with_kids(df, stage, fp, None if single else party)
-        for party, (df, stage, fp) in enumerate(
-            zip(clks, clks_stages, input_fps)
-        )
-    ]
-
     def build_blocks() -> DataFrame:
         # ONE explicit shuffle by block_key: the cap's size aggregate and
         # both pair-join sides require hashpartitioning(block_key), so
@@ -736,7 +718,7 @@ def _run_graph(
                     salt=config.lsh_salt,
                     key_cols=(kid_col,),
                 )
-                for df in clks_k
+                for df in clks
             ],
         ))
         capped = blocks
@@ -744,13 +726,12 @@ def _run_graph(
             capped, metrics["block_cap_accounting"] = cap_block_size(
                 blocks,
                 config.max_block_size,
-                mode=config.block_cap_mode,
                 key_cols=(kid_col,),
             )
         if capped is not blocks:
             # The cap rewrote block keys: the runner re-partitions its
             # output, and the uncapped rows are scratch.
-            runner.scratch(blocks, until="blocks")
+            runner.scratch(blocks)
         return capped
 
     blocks = runner.run(
@@ -768,12 +749,11 @@ def _run_graph(
             candidate_pairs(
                 *sides,
                 key_col=kid_col,
-                repartition=None,  # blocks is partitioned by block_key
                 min_band_matches=config.min_band_matches,
             ),
-            clks_k[0],
+            clks[0],
             threshold=config.threshold,
-            other_clks=clks_k[-1],
+            other_clks=clks[-1],
             key_col=kid_col,
         )
 
@@ -787,8 +767,8 @@ def _run_graph(
         key_a, key_b = ((F.least(url_a, url_b), F.greatest(url_a, url_b))
                         if single else (url_a, url_b))
         pairs = (
-            scored.join(ids(clks_k[0], "a"), on="key_a")
-            .join(ids(clks_k[-1], "b"), on="key_b")
+            scored.join(ids(clks[0], "a"), on="key_a")
+            .join(ids(clks[-1], "b"), on="key_b")
             .select(key_a.alias("key_a"), key_b.alias("key_b"), "score")
         )
         # 1-1 matching runs on user keys: its mutual-best tie-break
@@ -800,13 +780,12 @@ def _run_graph(
         parents=clks_stages + ("blocks",),
     )
 
-    # Dense vertex ids are the kids stages' own: already materialized
-    # (or read back), so the cluster operator mints no id map.
+    # Dense vertex ids are the clks stage tables' own: already
+    # materialized (or read back), so the cluster operator mints no id map.
     clusters = runner.run(
         "clusters", _fingerprint(config, "clusters", pairs_fp),
         lambda: cluster_records(
-            (functools.reduce(DataFrame.unionByName, kid_maps) if dense
-             else all_clks.select(key)),
+            all_clks.select(key, kid_col) if dense else all_clks.select(key),
             pairs, key_col=key, id_col=kid_col if dense else None,
             small_graph_edges=config.cluster_driver_gate_edges,
             # the materialized pairs-stage row count upper-bounds the
@@ -818,8 +797,8 @@ def _run_graph(
     )
 
     return LinkageResult(
-        clks=all_clks, blocks=blocks, pairs=pairs, clusters=clusters,
-        metrics=metrics, config=config,
+        clks=all_clks.drop(kid_col), blocks=blocks, pairs=pairs,
+        clusters=clusters, metrics=metrics, config=config,
     )
 
 
@@ -831,8 +810,7 @@ def run_linkage(
     """Run the full dedup-linkage pipeline over one table.
 
     Stages (each checkpointed when ``config.checkpoint_dir`` is set):
-    ``clks`` → ``blocks`` → ``pairs`` → ``clusters`` (plus ``kids``
-    under ``key_id_mode='dense'``).
+    ``clks`` → ``blocks`` → ``pairs`` → ``clusters``.
     """
     return _run_graph(spark, [pages], config)
 
@@ -854,8 +832,7 @@ def run_linkage_two_party(
     the matched-pair components (useful when one_to_one=False).
 
     Stages ``clks_a`` / ``clks_b`` / ``blocks`` / ``pairs`` /
-    ``clusters`` (plus ``kids_a``/``kids_b`` under
-    ``key_id_mode='dense'``) of the same graph as :func:`run_linkage`.
+    ``clusters`` of the same graph as :func:`run_linkage`.
     """
     return _run_graph(spark, [party_a, party_b], config,
                       one_to_one=one_to_one)

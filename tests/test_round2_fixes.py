@@ -39,7 +39,7 @@ class TestBlockSplitOverflow:
             F.lit(3 << 48).alias("block_key"),
         )
         capped, acct = cap_block_size(
-            big.unionByName(small), 2000, mode="split", key_cols=("url",)
+            big.unionByName(small), 2000, key_cols=("url",)
         )
         sizes = capped.groupBy("block_key").count()
         stats = sizes.agg(

@@ -137,10 +137,10 @@ class TestBandIndependentSplit:
         band1 = keys.select(F.col("id").alias("url"),
                             F.lit(1 << 48).alias("block_key"))
         m0 = {r["url"]: r["block_key"]
-              for r in cap_block_size(band0, 25, mode="split",
+              for r in cap_block_size(band0, 25,
                                       key_cols=("url",))[0].collect()}
         m1 = {r["url"]: r["block_key"]
-              for r in cap_block_size(band1, 25, mode="split",
+              for r in cap_block_size(band1, 25,
                                       key_cols=("url",))[0].collect()}
         # Same-group relation must differ between the bands.
         same0 = {(i, j) for i in range(100) for j in range(i + 1, 100)
@@ -386,9 +386,9 @@ class TestDenseKidResume:
         self, spark, tmp_path
     ):
         """ADVICE r2 (medium): under key_id_mode='dense' the _kid values
-        are per-run. The kid↔key map is now its own checkpointed stage;
-        a killed job that resumes blocks (written with run 1's kids)
-        while recomputing pairs must read the SAME kid map back, not
+        are per-run. The clks stage table stores each record's _kid; a
+        killed job that resumes blocks (written with run 1's kids) while
+        recomputing pairs must read the SAME kid map back with clks, not
         mint a fresh assignment."""
         path = str(tmp_path / "pages")
         synthetic_webpages(spark, 200, seed=3).select(
@@ -422,7 +422,7 @@ class TestDenseKidResume:
         # resumed blocks table; the stored kid map must not.
         pages2 = spark.read.parquet(path).repartition(7)
         second = run_linkage(spark, pages2, config)
-        assert second.metrics.get("kids_resumed") is True
+        assert second.metrics.get("clks_resumed") is True
         assert second.metrics.get("blocks_resumed") is True
         assert "pairs_resumed" not in second.metrics
         second_pairs = sorted(

@@ -6,8 +6,7 @@ round introduced must survive refactors.
   for one and two parties, with the skew cap idle or splitting; blocks
   stay a block_key-partitioned cache, and a run leaves only its stage
   outputs persisted
-- per-stage Spark job counts of the blocks and clusters stages, and the
-  cap's drop mode through the pipeline
+- per-stage Spark job counts of the blocks and clusters stages
 - a query leaves only the persisted RDDs it cannot avoid
 - single-evaluation MinHash plans (signature UDF appears once)
 - dedup-group sizes via partial aggregation, not a window over the
@@ -134,24 +133,28 @@ def _run_skewed(spark, parties, **config):
 
 
 class TestStageCaches:
-    @pytest.mark.parametrize("key_id_mode, max_block_size, outputs", [
+    @pytest.mark.parametrize("parties, key_id_mode, max_block_size, outputs", [
         # clks, blocks, pairs, clusters
-        ("hash", 16, 4),
-        # + kids
-        ("dense", 2000, 5),
-    ])
-    def test_run_leaves_only_stage_outputs(self, spark, key_id_mode,
+        (1, "hash", 16, 4),
+        # the dense ids live in the clks stage table: no extra output
+        (1, "dense", 2000, 4),
+        # clks_a, clks_b, blocks, pairs, clusters
+        (2, "dense", 2000, 5),
+    ], ids=["hash-16-4", "dense-2000-4", "two_party-dense-2000-5"])
+    def test_run_leaves_only_stage_outputs(self, spark, parties, key_id_mode,
                                            max_block_size, outputs):
         jsc = spark.sparkContext._jsc
         before = set(jsc.getPersistentRDDs())
-        result = _run_skewed(spark, 1, key_id_mode=key_id_mode,
+        result = _run_skewed(spark, parties, key_id_mode=key_id_mode,
                              max_block_size=max_block_size)
         persistent = jsc.getPersistentRDDs()
         grown = set(persistent) - before
         try:
-            # the scratch caches (the dense clks+kids join, the uncapped
-            # blocks the cap rewrote) are released once consumed
+            # the scratch cache (the uncapped blocks the cap rewrote) is
+            # released when the blocks stage ends
             assert len(grown) == outputs, sorted(grown)
+            # the key id is stage-internal
+            assert "_kid" not in result.clks.columns
             m = result.metrics
             assert result.blocks.count() == m["blocks_rows"] > 0
             assert result.pairs.count() == m["pairs_rows"] > 0
@@ -169,11 +172,13 @@ class TestStageJobCounts:
     # stage. Under dense ids the clusters stage ran 15 jobs: the
     # operator minted and checkpointed its own key-id map, and without
     # the known edge bound its edges took the distinct + checkpoint
-    # path; it now reads the kids stage's ids.
+    # path; it now reads the ids stored in the clks stage table. Dense
+    # blocks ran 8 jobs while a separate kids stage fed them through a
+    # persisted clks-kids join.
     @pytest.mark.parametrize("config, blocks_jobs, clusters_jobs", [
         ({"max_block_size": 2000}, 6, 4),
         ({"max_block_size": 16}, 9, 4),
-        ({"max_block_size": 2000, "key_id_mode": "dense"}, 8, 5),
+        ({"max_block_size": 2000, "key_id_mode": "dense"}, 6, 5),
     ], ids=["cap_idle", "cap_split", "dense"])
     def test_blocks_and_clusters_job_counts(self, spark, config,
                                             blocks_jobs, clusters_jobs):
@@ -181,12 +186,14 @@ class TestStageJobCounts:
         groups = ("clk:blocks", "clk:clusters")
 
         def jobs():
-            return [len(tracker.getJobIdsForGroup(g)) for g in groups]
+            return [set(tracker.getJobIdsForGroup(g)) for g in groups]
 
-        # groups accumulate over the session: count this run's jobs only
+        # groups accumulate over the session: count this run's jobs as
+        # new job ids, which the status store's eviction of older jobs
+        # (past spark.ui.retainedJobs) cannot skew
         before = jobs()
         _run_skewed(spark, 1, **config)
-        grown = [a - b for a, b in zip(jobs(), before)]
+        grown = [len(a - b) for a, b in zip(jobs(), before)]
         assert grown == [blocks_jobs, clusters_jobs], dict(zip(groups,
                                                                 grown))
 
@@ -210,24 +217,6 @@ class TestQueryScratchCaches:
         finally:
             for rdd_id in grown:
                 persistent[rdd_id].unpersist(True)
-
-
-class TestCapDropMode:
-    def test_drop_through_pipeline(self, spark):
-        from pyspark.sql import functions as F
-
-        split = _run_skewed(spark, 1, max_block_size=16)
-        drop = _run_skewed(spark, 1, max_block_size=16,
-                           block_cap_mode="drop")
-        acct = drop.metrics["block_cap_accounting"]
-        assert acct == split.metrics["block_cap_accounting"]
-        assert acct["oversized_blocks"] > 0
-        # blocks below the cap keep their rows: only the oversized go
-        largest = (drop.blocks.groupBy("block_key").count()
-                   .agg(F.max("count")).first()[0])
-        assert largest <= 16
-        assert drop.metrics["blocks_rows"] == (
-            split.metrics["blocks_rows"] - acct["rows_in_oversized"])
 
 
 class TestWidenIfNarrow:

@@ -184,19 +184,16 @@ class TestBlocking:
             unsalted, on=["url", "block_key"], how="inner"
         ).count() == 0
 
-    def test_block_size_cap_split_and_drop(self, spark):
+    def test_block_size_cap_split(self, spark):
         rows = [(f"k{i}", 1) for i in range(100)] + [("solo", 2)]
         blocks = spark.createDataFrame(rows, ["url", "block_key"])
-        capped, acct = cap_block_size(blocks, 10, mode="split")
+        capped, acct = cap_block_size(blocks, 10)
         sizes = capped.groupBy("block_key").count().collect()
         assert max(r["count"] for r in sizes) <= 25  # hash split is uneven
         assert capped.count() == 101
         assert acct["oversized_blocks"] == 1
         assert acct["rows_in_oversized"] == 100
-
-        dropped, acct2 = cap_block_size(blocks, 10, mode="drop")
-        assert dropped.count() == 1
-        assert acct2["pair_volume_affected"] == 100 * 99 / 2
+        assert acct["pair_volume_affected"] == 100 * 99 / 2
 
     def test_histogram(self, spark):
         blocks = spark.createDataFrame(

@@ -207,9 +207,8 @@ def run_two_party(rows: int, small: int, factor: int,
             small, big),
         "|---|---|---|---|",
     ]
-    for key in ("clks_a_seconds", "clks_b_seconds", "kids_a_seconds",
-                "kids_b_seconds", "blocks_seconds", "pairs_seconds",
-                "clusters_seconds"):
+    for key in ("clks_a_seconds", "clks_b_seconds", "blocks_seconds",
+                "pairs_seconds", "clusters_seconds"):
         lo = low["stage_seconds"].get(key)
         hi = high["stage_seconds"].get(key)
         if lo and hi:
@@ -349,9 +348,9 @@ def main() -> None:
         ]
         order = sorted(
             shuffle,
-            key=lambda g: ["clk:clks", "clk:kids", "clk:blocks",
-                           "clk:pairs", "clk:clusters"].index(g)
-            if g in ("clk:clks", "clk:kids", "clk:blocks", "clk:pairs",
+            key=lambda g: ["clk:clks", "clk:blocks", "clk:pairs",
+                           "clk:clusters"].index(g)
+            if g in ("clk:clks", "clk:blocks", "clk:pairs",
                      "clk:clusters") else 99,
         )
         for group in order:
