@@ -141,7 +141,11 @@ def cap_block_size(
     (``key_cols[0]``) — pairs split across sub-blocks are lost for *this*
     band but near-duplicates still collide in the other
     ``num_bands - 1`` bands, so recall degrades gracefully instead of
-    runtime exploding.
+    runtime exploding. The salt is deterministic only if the record key
+    is: under ``key_id_mode='dense'`` the pipeline passes the per-run
+    ``_kid``, which follows the input's partition layout, so which pairs
+    a split keeps (and the cluster membership built on them) can change
+    with that layout.
 
     ``accounting`` is a dict read from ONE aggregate over the block sizes
     (one ``first()``): ``oversized_blocks`` and ``rows_in_oversized``

@@ -246,8 +246,11 @@ class LinkageConfig:
     # 'hash': int64 keys via xxhash64 (deterministic; collisions
     # negligible < ~10^9 rows). 'dense': unique per-run ids via
     # monotonically_increasing_id — survives 10^12-row inputs with no
-    # birthday-collision risk (cluster-id values then vary run-to-run;
-    # membership does not). Either id is stored in the clks stage table.
+    # birthday-collision risk. The ids depend on the input's partition
+    # layout: with the cap idle only cluster-id values vary run-to-run,
+    # but when the cap splits a block its salt xxhash64(block_key, _kid)
+    # reads the id, so pairs and cluster membership then depend on the
+    # layout too. Either id is stored in the clks stage table.
     key_id_mode: str = "hash"
     # Matched-pair graphs at or below this edge count are clustered
     # driver-side (Arrow transfer, 16 B/edge → ≤64 MB at the default;
@@ -580,9 +583,9 @@ class _StageRunner:
                 self.metrics[f"{name}_rows"] = entry.get("rows")
                 return self._keep(name, store.read(name))
             # Tag every job this stage triggers with a job group, so the
-            # event log (and the UI) can attribute shuffle bytes / task
-            # time to pipeline stages — tools/linkage_job.py aggregates
-            # these into per-stage shuffle counters. Restored in the
+            # status-store reader (perfbench/telemetry.py) can attribute
+            # shuffle records / task time to pipeline stages by the
+            # "clk:<stage>" group and description. Restored in the
             # finally below; lazily-consumed upstream work is attributed
             # to the stage whose action forced it, which is the
             # wall-clock-honest attribution.

@@ -1,4 +1,4 @@
-"""Physical-plan regression tests: the properties PLANS.md documents
+"""Physical-plan regression tests: the plan properties the engine relies on
 must survive refactors — filters pushed to the parquet scan, columns
 pruned, dimensions broadcast, no cartesian products.
 

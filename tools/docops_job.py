@@ -10,10 +10,10 @@ Modes (``--mode``):
   tables), and auto-sized IVF probe top-k — recall@10 of both measured
   against the brute-force result.
 
-Prints exactly one JSON line; the orchestrator
-(tools/docops_scaling.py) runs it at two parallelism levels via
-``spark-submit --py-files dist/clkhash_spark.zip``, exactly like
-tools/linkage_job.py does for the CLK pipeline.
+Prints exactly one JSON line; ``tools/scaling_bench.py ... dedup|ann``
+runs it at two parallelism levels via ``spark-submit --py-files
+dist/clkhash_spark.zip``, exactly as it runs tools/linkage_job.py for
+the CLK pipeline.
 """
 
 from __future__ import annotations

@@ -65,16 +65,26 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
 
+    summary = (run_two_party if args.two_party else run_single)(
+        spark, args, cores)
+    spark.stop()
+
+    line = json.dumps(summary)
+    print(line)
+    if args.json_out:
+        with open(args.json_out, "w") as fp:
+            fp.write(line + "\n")
+
+
+def run_single(spark, args, cores: int) -> dict:
+    """One-table linkage: times the CLK encode stage alone, then the
+    full pipeline."""
     # Imported after getOrCreate and resolved from --py-files, as on a
     # real cluster.
     from clkhash_spark.operators.encode import encode_clks
     from clkhash_spark.pipeline import (LinkageConfig, run_linkage,
                                         webpages_schema)
     from clkhash_spark.sources.webpages import synthetic_webpages
-
-    if args.two_party:
-        run_two_party(spark, args, cores)
-        return
 
     pages = synthetic_webpages(spark, args.rows, seed=args.seed)
     pages = pages.select("url", "text").repartition(4 * cores).persist()
@@ -134,35 +144,10 @@ def main() -> None:
         )
         summary["quality"] = {k: round(v, 6) if isinstance(v, float) else v
                               for k, v in m.items()}
-
-    # Per-stage shuffle counters: _StageRunner tags every job with a
-    # "clk:<stage>" group; with the event log enabled we can attribute
-    # shuffle bytes/records to pipeline stages after the app stops (the
-    # log is finalized by stop()).
-    event_dir = None
-    app_id = spark.sparkContext.applicationId
-    try:
-        if spark.conf.get("spark.eventLog.enabled", "false") == "true":
-            event_dir = spark.conf.get("spark.eventLog.dir")
-    except Exception:
-        event_dir = None
-    spark.stop()
-    if event_dir:
-        summary["shuffle_by_stage"] = parse_shuffle_metrics(
-            event_dir, app_id
-        )
-        summary["occupancy_by_stage"] = parse_stage_occupancy(
-            event_dir, app_id, cores
-        )
-
-    line = json.dumps(summary)
-    print(line)
-    if args.json_out:
-        with open(args.json_out, "w") as fp:
-            fp.write(line + "\n")
+    return summary
 
 
-def run_two_party(spark, args, cores: int) -> None:
+def run_two_party(spark, args, cores: int) -> dict:
     """Two-party cross-linkage over overlapping synthetic parties: the
     headline workload of a linkage engine at scale (the single-table
     path deduplicates; this one matches A against B under one secret).
@@ -170,8 +155,6 @@ def run_two_party(spark, args, cores: int) -> None:
     ``--rows`` is the TOTAL encoded rows: rows/2 entities per party,
     50% overlap (rows/4 true cross-party matches, each a near-duplicate
     variant pair — never byte-identical)."""
-    import time as _time
-
     from pyspark.sql import functions as F
 
     from clkhash_spark.pipeline import (LinkageConfig,
@@ -210,7 +193,7 @@ def run_two_party(spark, args, cores: int) -> None:
         schema=webpages_schema(), secret=args.secret, key_col="key",
         target_candidates_per_row=args.target_candidates,
     )
-    t0 = _time.time()
+    t0 = time.time()
     result = run_linkage_two_party(
         spark,
         party_a.select("key", "text"),
@@ -219,14 +202,14 @@ def run_two_party(spark, args, cores: int) -> None:
     )
     result.pairs.persist()
     n_matched = result.pairs.count()
-    pipeline_s = _time.time() - t0
+    pipeline_s = time.time() - t0
 
     correct = (
         result.pairs.join(ent_a, on="key_a").join(ent_b, on="key_b")
         .where(F.col("_ent_a") == F.col("_ent_b"))
         .count()
     )
-    summary = {
+    return {
         "mode": "two_party",
         "cores": cores,
         "rows": args.rows,
@@ -241,157 +224,6 @@ def run_two_party(spark, args, cores: int) -> None:
                           if k.endswith("_seconds")},
         "banding": result.metrics.get("banding"),
     }
-
-    event_dir = None
-    app_id = spark.sparkContext.applicationId
-    try:
-        if spark.conf.get("spark.eventLog.enabled", "false") == "true":
-            event_dir = spark.conf.get("spark.eventLog.dir")
-    except Exception:
-        event_dir = None
-    spark.stop()
-    if event_dir:
-        summary["shuffle_by_stage"] = parse_shuffle_metrics(
-            event_dir, app_id
-        )
-        summary["occupancy_by_stage"] = parse_stage_occupancy(
-            event_dir, app_id, cores
-        )
-
-    line = json.dumps(summary)
-    print(line)
-    if args.json_out:
-        with open(args.json_out, "w") as fp:
-            fp.write(line + "\n")
-
-
-def parse_stage_occupancy(event_dir: str, app_id: str, cores: int) -> dict:
-    """Scheduler occupancy per job group from the event log:
-    ``sum(task finish - task launch) / (group wall span x cores)``.
-
-    Low occupancy means cores sat idle inside the stage's wall window —
-    fixed driver rounds, AQE barriers, Python-worker waves — while high
-    occupancy with a sub-linear speedup means the cores were busy but
-    each task ran slower (a shared-substrate ceiling: DRAM bandwidth /
-    SMT contention). This is the discriminator the round-4 scaling
-    debate needed: the two explanations predict opposite occupancy
-    signatures at the bigger core count.
-    """
-    import os
-
-    path = event_dir
-    for prefix in ("file://", "file:"):
-        if path.startswith(prefix):
-            path = path[len(prefix):]
-            break
-    log_path = os.path.join(path, app_id)
-    if not os.path.exists(log_path):
-        if os.path.exists(log_path + ".inprogress"):
-            log_path += ".inprogress"
-        else:
-            return {}
-
-    stage_group: dict = {}
-    spans: dict = {}
-    with open(log_path) as fp:
-        for raw in fp:
-            try:
-                event = json.loads(raw)
-            except json.JSONDecodeError:
-                continue
-            kind = event.get("Event")
-            if kind == "SparkListenerJobStart":
-                group = (event.get("Properties") or {}).get(
-                    "spark.jobGroup.id"
-                )
-                for info in event.get("Stage Infos", []):
-                    stage_group.setdefault(info["Stage ID"], group)
-            elif kind == "SparkListenerTaskEnd":
-                info = event.get("Task Info") or {}
-                group = stage_group.get(event.get("Stage ID"))
-                if group is None:
-                    continue
-                launch = info.get("Launch Time")
-                finish = info.get("Finish Time")
-                if not launch or not finish:
-                    continue
-                entry = spans.setdefault(
-                    group,
-                    {"task_ms": 0, "first_launch": launch,
-                     "last_finish": finish},
-                )
-                entry["task_ms"] += finish - launch
-                entry["first_launch"] = min(entry["first_launch"], launch)
-                entry["last_finish"] = max(entry["last_finish"], finish)
-
-    out = {}
-    for group, entry in spans.items():
-        wall_s = (entry["last_finish"] - entry["first_launch"]) / 1000.0
-        task_s = entry["task_ms"] / 1000.0
-        out[group] = {
-            "task_seconds": round(task_s, 2),
-            "wall_seconds": round(wall_s, 2),
-            "occupancy": round(task_s / (wall_s * cores), 3)
-            if wall_s > 0 else None,
-        }
-    return out
-
-
-def parse_shuffle_metrics(event_dir: str, app_id: str) -> dict:
-    """Aggregate shuffle read/write bytes+records per job group from the
-    Spark event log (pure JSON-lines scan; no UI/REST dependency)."""
-    import os
-
-    path = event_dir
-    for prefix in ("file://", "file:"):
-        if path.startswith(prefix):
-            path = path[len(prefix):]
-            break
-    log_path = os.path.join(path, app_id)
-    if not os.path.exists(log_path):
-        if os.path.exists(log_path + ".inprogress"):
-            log_path += ".inprogress"
-        else:
-            return {}
-
-    stage_group: dict = {}
-    agg: dict = {}
-    with open(log_path) as fp:
-        for raw in fp:
-            try:
-                event = json.loads(raw)
-            except json.JSONDecodeError:
-                continue
-            kind = event.get("Event")
-            if kind == "SparkListenerJobStart":
-                group = (event.get("Properties") or {}).get(
-                    "spark.jobGroup.id"
-                )
-                for info in event.get("Stage Infos", []):
-                    stage_group.setdefault(info["Stage ID"], group)
-            elif kind == "SparkListenerTaskEnd":
-                metrics = event.get("Task Metrics")
-                if not metrics:
-                    continue
-                group = stage_group.get(event.get("Stage ID"))
-                if group is None:
-                    continue
-                entry = agg.setdefault(group, {
-                    "write_bytes": 0, "write_records": 0,
-                    "read_bytes": 0, "read_records": 0,
-                })
-                sw = metrics.get("Shuffle Write Metrics") or {}
-                sr = metrics.get("Shuffle Read Metrics") or {}
-                entry["write_bytes"] += sw.get("Shuffle Bytes Written", 0)
-                entry["write_records"] += sw.get(
-                    "Shuffle Records Written", 0
-                )
-                entry["read_bytes"] += (
-                    sr.get("Local Bytes Read", 0)
-                    + sr.get("Remote Bytes Read", 0)
-                )
-                entry["read_records"] += sr.get("Total Records Read", 0)
-    return agg
 
 
 if __name__ == "__main__":
