@@ -1,10 +1,10 @@
 """Transitive clustering: connected components over matched pairs.
 
 One entry point, :func:`cluster_records`: each record has an int64
-vertex id, computed from its key (:func:`_vertex`) or read from an id
-column it already carries, and its component's label joins onto it
-once, by that id. One solver, :func:`_component_labels`, labels every
-vertex with its component's minimum id on one of two paths:
+vertex id, computed from its key (:func:`_vertex`), and its component's
+label joins onto it once, by that id. One solver,
+:func:`_component_labels`, labels every vertex with its component's
+minimum id on one of two paths:
 
 - **driver**: graphs at or below an edge gate go to the driver via
   Arrow and a vectorized union-find (:func:`_union_find_labels`);
@@ -224,7 +224,6 @@ def cluster_records(
     records: DataFrame,
     pairs: DataFrame,
     key_col: str = "url",
-    id_col: Optional[str] = None,
     small_graph_edges: int = 500_000,
     known_edge_bound: Optional[int] = None,
     max_iterations: int = 50,
@@ -233,16 +232,12 @@ def cluster_records(
     the ``(key_a, key_b)`` pair graph over ``records[key_col]``. A
     record on no pair, or only on a self-pair, is its own singleton.
 
-    A record's vertex id is computed from its key by :func:`_vertex`
-    when ``id_col`` is ``None``, so ``cluster_id`` values are
-    deterministic. Otherwise it is read from ``records[id_col]``: a
-    unique int64 per key that stays stable across evaluations (e.g. a
-    materialized ``monotonically_increasing_id`` map, with no collision
-    risk at any scale); the pair keys map to ids through two joins on
-    ``records``, so a pair key that is no record's key drops its pair,
-    and the output drops ``id_col``. ``cluster_id`` is the
-    component's minimum vertex id, so the labels join onto the records
-    once, by vertex id, as ``coalesce(label, id)``.
+    A record's vertex id is computed from its key by :func:`_vertex`,
+    so ``cluster_id`` values are deterministic; keys must not collide
+    on it (the linkage pipeline checks its keys' xxhash64 ids before
+    banding). ``cluster_id`` is the component's minimum vertex id, so
+    the labels join onto the records once, by vertex id, as
+    ``coalesce(label, id)``.
 
     Graphs of at most ``small_graph_edges`` edges are solved on the
     driver (16 B/edge via Arrow: ~64 MB at the pipeline's
@@ -255,23 +250,13 @@ def cluster_records(
     ``known_edge_bound`` (e.g. the pipeline's pairs-stage row count) at
     or below the gate skips the edge distinct and its materialization.
     """
-    if id_col is None:
-        vertex = _vertex(dict(records.dtypes)[key_col])
-        records = records.withColumn("_vid", vertex(key_col))
-        edges = pairs.select(vertex("key_a").alias("u"),
-                             vertex("key_b").alias("v"))
-    else:
-        records = records.withColumnRenamed(id_col, "_vid")
-
-        def ids(side: str, vid: str) -> DataFrame:
-            return records.select(F.col(key_col).alias(side),
-                                  F.col("_vid").alias(vid))
-
-        edges = (pairs.join(ids("key_a", "u"), on="key_a")
-                 .join(ids("key_b", "v"), on="key_b"))
-    columns = [c for c in records.columns if c != "_vid"]
+    columns = records.columns
+    vertex = _vertex(dict(records.dtypes)[key_col])
+    records = records.withColumn("_vid", vertex(key_col))
+    edges = pairs.select(vertex("key_a").alias("u"),
+                         vertex("key_b").alias("v"))
     labels = _component_labels(
-        edges.select("u", "v").where(F.col("u") != F.col("v")),
+        edges.where(F.col("u") != F.col("v")),
         max_iterations=max_iterations,
         small_graph_edges=small_graph_edges,
         known_edge_bound=known_edge_bound,

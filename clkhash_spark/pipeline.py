@@ -2,11 +2,10 @@
 
 One stage graph serves dedup of one table (:func:`run_linkage`) and
 linkage of two parties (:func:`run_linkage_two_party`): ``clks``
-(``clks_a``/``clks_b``) → ``blocks`` → ``pairs`` → ``clusters``, in
-both key-id modes. Each clks stage table stores the record's int64 key
-id (``_kid``) next to its CLK, so a resumed stage reads back the same
-ids even when they are per-run dense ids. The party count changes four
-things:
+(``clks_a``/``clks_b``) → ``blocks`` → ``pairs`` → ``clusters``. Each
+clks stage table stores the record's int64 key id (``_kid``) next to
+its CLK, and one aggregate then checks that no two records share an id
+(:func:`_check_unique_kids`). The party count changes four things:
 
 - the int64 key id: ``xxhash64(key)`` for one table; the 63-bit
   ``xxhash64(key) >>> 1`` with party B in the sign bit for two;
@@ -24,10 +23,8 @@ Two stages keep their Spark actions few. ``blocks`` reads the skew
 cap's accounting from one aggregate over the block sizes, and joins
 sizes back only when a block is oversized. ``clusters`` labels the pair
 graph's components and joins the labels onto every record once, by
-vertex id (:func:`~.operators.cluster.cluster_records`): under hash ids
-the vertex id is computed from the user key, under dense ids it is the
-``_kid`` stored in the record's clks stage table, so no second id map
-is made.
+vertex id (:func:`~.operators.cluster.cluster_records`), computed from
+the user key and unique because the checked key ids are.
 
 With ``checkpoint_dir`` set, stage tables are parquet directories with
 a JSON manifest (`_clkhash_manifest.json`) — the sandbox stand-in for
@@ -59,8 +56,8 @@ from .operators.scoring import (
     candidate_pairs, one_to_one_matching, score_candidates,
 )
 
-__all__ = ["LinkageConfig", "LinkageResult", "StageStore",
-           "estimate_bit_agreement", "run_linkage",
+__all__ = ["KeyIdCollisionError", "LinkageConfig", "LinkageResult",
+           "StageStore", "estimate_bit_agreement", "run_linkage",
            "run_linkage_two_party", "tuned_blocking",
            "WEBPAGES_SCHEMA_DICT", "webpages_schema"]
 
@@ -243,15 +240,6 @@ class LinkageConfig:
     validate: bool = False
     checkpoint_dir: Optional[str] = None
     resume: bool = True
-    # 'hash': int64 keys via xxhash64 (deterministic; collisions
-    # negligible < ~10^9 rows). 'dense': unique per-run ids via
-    # monotonically_increasing_id — survives 10^12-row inputs with no
-    # birthday-collision risk. The ids depend on the input's partition
-    # layout: with the cap idle only cluster-id values vary run-to-run,
-    # but when the cap splits a block its salt xxhash64(block_key, _kid)
-    # reads the id, so pairs and cluster membership then depend on the
-    # layout too. Either id is stored in the clks stage table.
-    key_id_mode: str = "hash"
     # Matched-pair graphs at or below this edge count are clustered
     # driver-side (Arrow transfer, 16 B/edge → ≤64 MB at the default;
     # vectorized hook+jump labelling) instead of O(log n) rounds of
@@ -388,12 +376,9 @@ def _secret_fingerprint(secret: Union[str, bytes]) -> str:
 # Stage → config fields that affect its OUTPUT (cumulative: a stage's
 # fingerprint covers everything upstream of it, so changing e.g. the
 # threshold invalidates pairs+clusters but keeps clks/blocks resumable).
-# The clks table stores each record's _kid, so key_id_mode is a clks
-# field: dense (monotonically_increasing_id) values are per-run, and the
-# _kid-bearing downstream stages (blocks/pairs) stay safe to resume only
-# because the ids are read back with the clks table, never re-derived.
+# The _kid the clks table stores is a pure function of key_col's values.
 _STAGE_FIELDS = {
-    "clks": ("key_col", "feature_cols", "validate", "key_id_mode"),
+    "clks": ("key_col", "feature_cols", "validate"),
     "blocks": ("num_bands", "bits_per_band", "lsh_seed", "lsh_salt",
                "max_block_size"),
     "pairs": ("threshold", "min_band_matches"),
@@ -616,21 +601,49 @@ class _StageRunner:
                 self._scratch.pop().unpersist()
 
 
-def _kid_column(
-    key_col: str, dense: bool, party: Optional[int]
-) -> Column:
-    """The int64 key id (``_kid``): ``party`` is ``None`` for one
-    table, else 0 (A) or 1 (B, tagged in the sign bit). Dense mode uses
-    ``monotonically_increasing_id`` under the same tag. The two hash
-    forms stay apart on purpose: the skew cap salts split sub-blocks
-    with the kid, so the one-table form pins its outputs."""
-    if dense:
-        kid = F.monotonically_increasing_id()
-    elif party is None:
+def _key_id(key_col: str, party: Optional[int]) -> Column:
+    """The int64 key id (``_kid``): ``xxhash64(key)`` for one table
+    (``party`` is ``None``); for two, the 63-bit ``xxhash64(key) >>> 1``
+    with party 1 (B) tagged in the sign bit. The two forms stay apart on
+    purpose: the skew cap salts split sub-blocks with the kid, so the
+    one-table form pins its outputs."""
+    if party is None:
         return F.xxhash64(F.col(key_col))
-    else:
-        kid = F.shiftrightunsigned(F.xxhash64(F.col(key_col)), 1)
+    kid = F.shiftrightunsigned(F.xxhash64(F.col(key_col)), 1)
     return kid.bitwiseOR(F.lit(-(1 << 63))) if party == 1 else kid
+
+
+class KeyIdCollisionError(ValueError):
+    """Two distinct user keys hash to one int64 key id."""
+
+
+def _check_unique_kids(clks: DataFrame, key_col: str, single: bool) -> None:
+    """Raise unless each ``_kid`` of ``clks`` (all clks stage tables) is
+    one record's. One aggregate keeps the ids on more than one row,
+    normally none; two parties group without the sign bit, so a key in
+    both lands in one group. A collision is at most ~n²/2^64 likely."""
+    kid = F.col("_kid")
+    if not single:
+        kid = kid.bitwiseAND(F.lit((1 << 63) - 1))
+    # Count only: a min/max buffer over the string keys would turn the
+    # hash aggregate into a sort aggregate. Keys are read on failure.
+    shared = [row[0] for row in clks.groupBy(kid.alias("_id")).count()
+              .where(F.col("count") > 1).limit(5).collect()]
+    if not shared:
+        return
+    groups: Dict[int, List[Any]] = {}
+    for row in (clks.select(kid.alias("_id"), key_col)
+                .where(F.col("_id").isin(shared)).collect()):
+        groups.setdefault(row[0], []).append(row[1])
+    repeated = sorted({k for keys in groups.values() for k in keys
+                       if keys.count(k) > 1}, key=str)
+    if repeated:
+        raise ValueError(f"duplicate {key_col!r} values {repeated}: every "
+                         f"record needs its own {key_col}")
+    first, second = groups[shared[0]][:2]
+    raise KeyIdCollisionError(
+        f"{key_col!r} values {first!r} and {second!r} hash to one int64 "
+        "key id; rename one of them")
 
 
 def _run_graph(
@@ -643,7 +656,7 @@ def _run_graph(
     ``one_to_one`` is ``None`` for one table."""
     metrics: Dict[str, Any] = {}
     runner = _StageRunner(spark, config, metrics)
-    key, kid_col = config.key_col, "_kid"
+    key, kid = config.key_col, "_kid"
     single = len(parties) == 1
     clks_stages = ("clks",) if single else ("clks_a", "clks_b")
     input_fps = [
@@ -658,15 +671,11 @@ def _run_graph(
     # stages: banding, the pair join, and the CLK payload joins all
     # move (long, long) rows instead of (long, url-string) — ~2.5x less
     # shuffle volume. User keys rejoin only on the skinny final pairs.
-    # The clks stage table stores the key id, so a dense (per-run) id is
-    # read back with it, never re-derived.
-    dense = config.key_id_mode == "dense"
-
     def build_clks(df: DataFrame, party: Optional[int]) -> DataFrame:
         return encode_clks(
             df, config.schema, config.secret, key_cols=(key,),
             feature_cols=config.feature_cols, validate=config.validate,
-        ).withColumn(kid_col, _kid_column(key, dense, party))
+        ).withColumn(kid, _key_id(key, party))
 
     clks = [
         runner.run(stage, _fingerprint(config, stage, fp), functools.partial(
@@ -675,6 +684,8 @@ def _run_graph(
             zip(clks_stages, input_fps, parties))
     ]
     all_clks = functools.reduce(DataFrame.unionByName, clks)
+    # Resumed clks are checked too: a run that raised here stored them.
+    _check_unique_kids(all_clks, key, single)
 
     # Band geometry must scale with n (candidate volume grows n²,
     # true pairs n) — resolve auto settings from the materialized count
@@ -719,7 +730,7 @@ def _run_graph(
                     bits_per_band=config.bits_per_band,
                     seed=config.lsh_seed,
                     salt=config.lsh_salt,
-                    key_cols=(kid_col,),
+                    key_cols=(kid,),
                 )
                 for df in clks
             ],
@@ -729,7 +740,7 @@ def _run_graph(
             capped, metrics["block_cap_accounting"] = cap_block_size(
                 blocks,
                 config.max_block_size,
-                key_cols=(kid_col,),
+                key_cols=(kid,),
             )
         if capped is not blocks:
             # The cap rewrote block keys: the runner re-partitions its
@@ -746,22 +757,22 @@ def _run_graph(
         # Pair predicate: key_a < key_b within one table; across two
         # parties, the kid's sign bit.
         sides = ((blocks,) if single else
-                 (blocks.where(F.col(kid_col) >= 0),
-                  blocks.where(F.col(kid_col) < 0)))
+                 (blocks.where(F.col(kid) >= 0),
+                  blocks.where(F.col(kid) < 0)))
         scored = score_candidates(
             candidate_pairs(
                 *sides,
-                key_col=kid_col,
+                key_col=kid,
                 min_band_matches=config.min_band_matches,
             ),
             clks[0],
             threshold=config.threshold,
             other_clks=clks[-1],
-            key_col=kid_col,
+            key_col=kid,
         )
 
         def ids(df: DataFrame, side: str) -> DataFrame:
-            return df.select(F.col(kid_col).alias(f"key_{side}"),
+            return df.select(F.col(kid).alias(f"key_{side}"),
                              F.col(key).alias(f"_url_{side}"))
 
         # Back to user keys. Orientation: one table re-canonicalizes
@@ -783,13 +794,10 @@ def _run_graph(
         parents=clks_stages + ("blocks",),
     )
 
-    # Dense vertex ids are the clks stage tables' own: already
-    # materialized (or read back), so the cluster operator mints no id map.
     clusters = runner.run(
         "clusters", _fingerprint(config, "clusters", pairs_fp),
         lambda: cluster_records(
-            all_clks.select(key, kid_col) if dense else all_clks.select(key),
-            pairs, key_col=key, id_col=kid_col if dense else None,
+            all_clks.select(key), pairs, key_col=key,
             small_graph_edges=config.cluster_driver_gate_edges,
             # the materialized pairs-stage row count upper-bounds the
             # edge count, letting the driver-gate path skip the edge
@@ -800,7 +808,7 @@ def _run_graph(
     )
 
     return LinkageResult(
-        clks=all_clks.drop(kid_col), blocks=blocks, pairs=pairs,
+        clks=all_clks.drop(kid), blocks=blocks, pairs=pairs,
         clusters=clusters, metrics=metrics, config=config,
     )
 
@@ -814,6 +822,11 @@ def run_linkage(
 
     Stages (each checkpointed when ``config.checkpoint_dir`` is set):
     ``clks`` → ``blocks`` → ``pairs`` → ``clusters``.
+
+    Every row must carry a distinct ``config.key_col`` value. A repeated
+    key raises ``ValueError``, and two keys whose xxhash64 ids collide
+    raise :class:`KeyIdCollisionError` (rename one); both are raised
+    after the clks stage, before any blocking work.
     """
     return _run_graph(spark, [pages], config)
 
@@ -829,8 +842,9 @@ def run_linkage_two_party(
     encode both datasets under the SAME secret/schema, block together,
     score cross-party pairs, optionally enforce a 1-1 matching).
 
-    ``party_a``/``party_b`` rows must carry distinct ``config.key_col``
-    values across parties (prefix them if needed). Returns pairs as
+    Every ``config.key_col`` value must be distinct, within and across
+    the parties (prefix them if needed); repeats and key-id collisions
+    raise as in :func:`run_linkage`. Returns pairs as
     (key_a from party_a, key_b from party_b, score); ``clusters`` holds
     the matched-pair components (useful when one_to_one=False).
 

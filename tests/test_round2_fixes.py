@@ -1,17 +1,19 @@
 """Round-2 regression tests: split-cap overflow, auto-tuned banding,
-dense-id mode, stage-fingerprint safety, two-party resume, vectorized
-simhash, convergence guard."""
+the unique key-id check, stage-fingerprint safety, two-party resume,
+vectorized simhash, convergence guard."""
 
 import hashlib
+import json
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from clkhash_spark.operators.blocking import cap_block_size
-from clkhash_spark.operators.cluster import cluster_records
 from clkhash_spark.operators.dedup import simhash, _WS
 from clkhash_spark.pipeline import (
+    KeyIdCollisionError,
     LinkageConfig,
     run_linkage,
     run_linkage_two_party,
@@ -134,46 +136,100 @@ class TestTunedBlockingWiring:
         pages.unpersist()
 
 
-class TestDenseIdMode:
-    def test_dense_membership_matches_hash_mode(self, spark):
-        pages = synthetic_webpages(spark, 500, seed=5).select("url", "text")
-        base = dict(schema=webpages_schema(), secret="dense")
-        hash_result = run_linkage(spark, pages, LinkageConfig(**base))
-        dense_result = run_linkage(
-            spark, pages, LinkageConfig(**base, key_id_mode="dense")
-        )
+def _group_jobs(spark, group):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
-        def membership(clusters):
-            rows = clusters.select("url", "cluster_id").collect()
-            groups = {}
-            for r in rows:
-                groups.setdefault(r["cluster_id"], set()).add(r["url"])
-            return {frozenset(g) for g in groups.values()}
 
-        assert membership(hash_result.clusters) == membership(
-            dense_result.clusters
-        )
+class TestUniqueKeyIds:
+    """Between the clks stages and banding the pipeline checks that no
+    two records share a key id: a repeated key, in one table or across
+    two parties, and a key-id hash collision each raise a named error
+    before any blocks job runs."""
 
-    def test_dense_ids_unique_per_key(self, spark):
-        pairs = spark.createDataFrame(
-            [(f"k{i}", f"k{i+1}") for i in range(0, 400, 2)],
-            ["key_a", "key_b"],
-        )
-        # the caller's own unique id per key, pinned by a materialization
-        keys = (
-            pairs.select(F.col("key_a").alias("key"))
-            .union(pairs.select(F.col("key_b").alias("key")))
-            .distinct()
-            .withColumn("id", F.monotonically_increasing_id())
-            .localCheckpoint()
-        )
-        out = cluster_records(keys, pairs, key_col="key", id_col="id")
-        assert out.columns == ["key", "cluster_id"]
-        assert out.count() == out.select("key").distinct().count() == 400
-        # 200-edge perfect matching → 200 components of size 2
-        assert out.groupBy("cluster_id").count().where(
-            F.col("count") != 2
-        ).count() == 0
+    @staticmethod
+    def _pages(spark):
+        pages = synthetic_webpages(spark, 200, seed=5).select("url", "text")
+        return pages, sorted(r["url"] for r in pages.select("url").collect())
+
+    @staticmethod
+    def _config(**kwargs):
+        return LinkageConfig(schema=webpages_schema(), secret="kid-check",
+                             num_bands=16, bits_per_band=16, **kwargs)
+
+    @staticmethod
+    def _rekey(df, old, new):
+        url = F.col("url")
+        return df.withColumn("url", F.when(url == old, new).otherwise(url))
+
+    @staticmethod
+    def _assert_repeated(err, key):
+        assert not isinstance(err.value, KeyIdCollisionError)
+        assert f"duplicate 'url' values [{key!r}]" in str(err.value)
+
+    def test_repeated_key_raises_before_blocking(self, spark):
+        pages, urls = self._pages(spark)
+        before = _group_jobs(spark, "clk:blocks")
+        with pytest.raises(ValueError) as err:
+            run_linkage(spark, self._rekey(pages, urls[0], urls[1]),
+                        self._config())
+        self._assert_repeated(err, urls[1])
+        assert _group_jobs(spark, "clk:blocks") == before
+
+    @pytest.mark.parametrize("repeat", ["across_parties", "within_b"])
+    def test_two_party_repeated_key_raises(self, spark, repeat):
+        pages, urls = self._pages(spark)
+        party_a = pages.where(F.col("url") < urls[100])
+        party_b = pages.where(F.col("url") >= urls[100])
+        key = urls[0] if repeat == "across_parties" else urls[101]
+        before = _group_jobs(spark, "clk:blocks")
+        with pytest.raises(ValueError) as err:
+            run_linkage_two_party(
+                spark, party_a, self._rekey(party_b, urls[100], key),
+                self._config(),
+            )
+        self._assert_repeated(err, key)
+        assert _group_jobs(spark, "clk:blocks") == before
+
+    @pytest.mark.parametrize("parties", [1, 2])
+    def test_forced_collision_names_both_keys(self, spark, monkeypatch,
+                                              parties):
+        from clkhash_spark import pipeline
+
+        key_id = pipeline._key_id
+        # keep 2 hash bits plus the party (sign) bit: 200 keys, 4 ids
+        monkeypatch.setattr(
+            pipeline, "_key_id", lambda key_col, party: key_id(
+                key_col, party).bitwiseAND(F.lit(3 | -(1 << 63))))
+        pages, urls = self._pages(spark)
+        with pytest.raises(KeyIdCollisionError) as err:
+            if parties == 1:
+                run_linkage(spark, pages, self._config())
+            else:
+                run_linkage_two_party(
+                    spark, pages.where(F.col("url") < urls[100]),
+                    pages.where(F.col("url") >= urls[100]), self._config())
+        found = re.search(r"'url' values '([^']+)' and '([^']+)' hash",
+                          str(err.value))
+        assert found, str(err.value)
+        assert found[1] != found[2] and {found[1], found[2]} <= set(urls)
+
+    def test_resumed_clks_are_checked(self, spark, tmp_path):
+        pages, urls = self._pages(spark)
+        pages = self._rekey(pages, urls[0], urls[1])
+        stages = tmp_path / "stages"
+        config = self._config(checkpoint_dir=str(stages))
+        with pytest.raises(ValueError):
+            run_linkage(spark, pages, config)
+        with open(stages / "_clkhash_manifest.json") as fp:
+            written = json.load(fp)["stages"]
+        # the failed run left a complete clks stage and nothing after it
+        assert list(written) == ["clks"] and written["clks"]["complete"]
+        before = _group_jobs(spark, "clk:clks")
+        with pytest.raises(ValueError) as err:
+            run_linkage(spark, pages, config)
+        self._assert_repeated(err, urls[1])
+        # the second run resumed clks instead of encoding again
+        assert _group_jobs(spark, "clk:clks") == before
 
 
 class TestConvergenceGuard:

@@ -1,6 +1,6 @@
 """Round-3 regression tests: two-party skew cap in the int64 kid
-domain, band-independent block splitting, and the dense-mode kid-map
-resume hazard (ADVICE r2, medium)."""
+domain, band-independent block splitting, and resuming with the key ids
+stored in the clks stage table (ADVICE r2, medium)."""
 
 import json
 import os
@@ -385,11 +385,10 @@ class TestDenseKidResume:
     def test_pairs_recompute_after_partial_resume_matches(
         self, spark, tmp_path
     ):
-        """ADVICE r2 (medium): under key_id_mode='dense' the _kid values
-        are per-run. The clks stage table stores each record's _kid; a
-        killed job that resumes blocks (written with run 1's kids) while
-        recomputing pairs must read the SAME kid map back with clks, not
-        mint a fresh assignment."""
+        """ADVICE r2 (medium): the clks stage table stores each record's
+        _kid; a killed job that resumes blocks (written with run 1's
+        kids) while recomputing pairs must pair the same records as the
+        first run, even over a re-read with another partition layout."""
         path = str(tmp_path / "pages")
         synthetic_webpages(spark, 200, seed=3).select(
             "url", "text"
@@ -397,7 +396,7 @@ class TestDenseKidResume:
         pages = spark.read.parquet(path)
         config = LinkageConfig(
             schema=webpages_schema(), secret="r3-dense",
-            key_id_mode="dense", checkpoint_dir=str(tmp_path / "stages"),
+            checkpoint_dir=str(tmp_path / "stages"),
             num_bands=32, bits_per_band=16,
         )
         first = run_linkage(spark, pages, config)
@@ -417,9 +416,8 @@ class TestDenseKidResume:
         with open(manifest_path, "w") as fp:
             json.dump(manifest, fp)
 
-        # Re-read the input with a DIFFERENT partition layout: a fresh
-        # monotonically_increasing_id assignment would disagree with the
-        # resumed blocks table; the stored kid map must not.
+        # Re-read the input with a DIFFERENT partition layout: the kids
+        # hash the keys, so the resumed blocks still match them.
         pages2 = spark.read.parquet(path).repartition(7)
         second = run_linkage(spark, pages2, config)
         assert second.metrics.get("clks_resumed") is True

@@ -6,7 +6,8 @@ round introduced must survive refactors.
   for one and two parties, with the skew cap idle or splitting; blocks
   stay a block_key-partitioned cache, and a run leaves only its stage
   outputs persisted
-- per-stage Spark job counts of the blocks and clusters stages
+- per-stage Spark job counts of the blocks and clusters stages, and
+  of the key-id check
 - a query leaves only the persisted RDDs it cannot avoid
 - single-evaluation MinHash plans (signature UDF appears once)
 - dedup-group sizes via partial aggregation, not a window over the
@@ -133,20 +134,16 @@ def _run_skewed(spark, parties, **config):
 
 
 class TestStageCaches:
-    @pytest.mark.parametrize("parties, key_id_mode, max_block_size, outputs", [
+    @pytest.mark.parametrize("parties, outputs", [
         # clks, blocks, pairs, clusters
-        (1, "hash", 16, 4),
-        # the dense ids live in the clks stage table: no extra output
-        (1, "dense", 2000, 4),
+        (1, 4),
         # clks_a, clks_b, blocks, pairs, clusters
-        (2, "dense", 2000, 5),
-    ], ids=["hash-16-4", "dense-2000-4", "two_party-dense-2000-5"])
-    def test_run_leaves_only_stage_outputs(self, spark, parties, key_id_mode,
-                                           max_block_size, outputs):
+        (2, 5),
+    ], ids=["hash-16-4", "two_party-hash-16-5"])
+    def test_run_leaves_only_stage_outputs(self, spark, parties, outputs):
         jsc = spark.sparkContext._jsc
         before = set(jsc.getPersistentRDDs())
-        result = _run_skewed(spark, parties, key_id_mode=key_id_mode,
-                             max_block_size=max_block_size)
+        result = _run_skewed(spark, parties, max_block_size=16)
         persistent = jsc.getPersistentRDDs()
         grown = set(persistent) - before
         try:
@@ -164,26 +161,17 @@ class TestStageCaches:
 
 
 class TestStageJobCounts:
-    # Spark jobs per stage group, one table, cap idle / cap split, and
-    # dense key ids with the cap idle. The previous design ran 8 / 12
-    # blocks jobs and 7 clusters jobs on both hash paths: separate max,
-    # idle-zeros and join-back accounting actions in the cap, and an
-    # edge distinct plus a key-id distinct and join in the clusters
-    # stage. Under dense ids the clusters stage ran 15 jobs: the
-    # operator minted and checkpointed its own key-id map, and without
-    # the known edge bound its edges took the distinct + checkpoint
-    # path; it now reads the ids stored in the clks stage table. Dense
-    # blocks ran 8 jobs while a separate kids stage fed them through a
-    # persisted clks-kids join.
+    # Spark jobs per stage group, one table, cap idle / cap split. With
+    # banding pinned the only ungrouped (None) jobs are the key-id check
+    # between the clks stages and banding.
     @pytest.mark.parametrize("config, blocks_jobs, clusters_jobs", [
         ({"max_block_size": 2000}, 6, 4),
         ({"max_block_size": 16}, 9, 4),
-        ({"max_block_size": 2000, "key_id_mode": "dense"}, 6, 5),
-    ], ids=["cap_idle", "cap_split", "dense"])
+    ], ids=["cap_idle", "cap_split"])
     def test_blocks_and_clusters_job_counts(self, spark, config,
                                             blocks_jobs, clusters_jobs):
         tracker = spark.sparkContext.statusTracker()
-        groups = ("clk:blocks", "clk:clusters")
+        groups = ("clk:blocks", "clk:clusters", None)
 
         def jobs():
             return [set(tracker.getJobIdsForGroup(g)) for g in groups]
@@ -194,8 +182,8 @@ class TestStageJobCounts:
         before = jobs()
         _run_skewed(spark, 1, **config)
         grown = [len(a - b) for a, b in zip(jobs(), before)]
-        assert grown == [blocks_jobs, clusters_jobs], dict(zip(groups,
-                                                                grown))
+        assert grown == [blocks_jobs, clusters_jobs, 2], dict(zip(groups,
+                                                                   grown))
 
 
 class TestQueryScratchCaches:
