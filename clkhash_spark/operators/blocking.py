@@ -69,8 +69,6 @@ def block_keys(
     seed: int = 42,
     salt: int = 0,
     key_cols: Sequence[str] = ("url",),
-    clk_col: str = "clk",
-    block_col: str = "block_key",
 ) -> DataFrame:
     """Explode each CLK into ``num_bands`` (key, block_key) rows.
 
@@ -108,16 +106,14 @@ def block_keys(
         return pd.Series(list(keyed))
 
     exploded = clks.select(
-        *key_cols, F.explode(band_values(F.col(clk_col))).alias(block_col)
+        *key_cols, F.explode(band_values(F.col("clk"))).alias("block_key")
     )
     return exploded
 
 
-def block_size_histogram(
-    blocks: DataFrame, block_col: str = "block_key"
-) -> DataFrame:
+def block_size_histogram(blocks: DataFrame) -> DataFrame:
     """Histogram of block sizes (log2 buckets) — the skew observable."""
-    sizes = blocks.groupBy(block_col).count()
+    sizes = blocks.groupBy("block_key").count()
     return (
         sizes.select(
             F.floor(F.log2(F.col("count"))).cast("int").alias("log2_size")
@@ -132,7 +128,6 @@ def cap_block_size(
     blocks: DataFrame,
     max_block_size: int,
     key_cols: Sequence[str] = ("url",),
-    block_col: str = "block_key",
 ) -> Tuple[DataFrame, Dict[str, Any]]:
     """Enforce a block-size cap; returns ``(capped_blocks, accounting)``.
 
@@ -153,7 +148,7 @@ def cap_block_size(
     with no join-back.
     """
     size = F.col("_block_size")
-    sizes = blocks.groupBy(block_col).agg(F.count("*").alias("_block_size"))
+    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("_block_size"))
     over = size > max_block_size
     accounting = sizes.agg(
         F.count_if(over).alias("oversized_blocks"),
@@ -167,7 +162,7 @@ def cap_block_size(
         return blocks, accounting
     # Join back only the oversized sizes: a null size means "not
     # oversized", and those rows keep their block key.
-    annotated = blocks.join(sizes.where(over), on=block_col, how="left")
+    annotated = blocks.join(sizes.where(over), on="block_key", how="left")
     num_splits = F.ceil(size / F.lit(max_block_size))
     # Salt by (block_key, record key), not the record key alone: the
     # block key embeds the band index, so a pair separated by the split
@@ -177,7 +172,7 @@ def cap_block_size(
     # key would put a pair in the same sub-block in every band or in
     # none, turning the cap into an all-bands pair drop.
     sub_block = F.pmod(
-        F.xxhash64(F.col(block_col), F.col(key_cols[0])), num_splits
+        F.xxhash64(F.col("block_key"), F.col(key_cols[0])), num_splits
     )
     # Collision-free rekey: any int64 is a valid block key, so hash
     # (block, sub_block) instead of packing the sub-block id into high
@@ -187,12 +182,12 @@ def cap_block_size(
     # disjoint from unsplit band keys, which are always non-negative
     # (band_id occupies bits 48+, value/salt bits 0-47).
     capped = annotated.withColumn(
-        block_col,
+        "block_key",
         F.when(
             size.isNotNull(),
             F.xxhash64(
-                F.lit("block-split"), F.col(block_col), sub_block
+                F.lit("block-split"), F.col("block_key"), sub_block
             ).bitwiseOR(F.lit(-(1 << 63))),
-        ).otherwise(F.col(block_col)),
+        ).otherwise(F.col("block_key")),
     ).drop("_block_size")
     return capped, accounting

@@ -9,6 +9,10 @@ Scale notes:
   self-join runs on the block key with AQE skew-join enabled. Cross-band
   duplicate pairs are removed *before* CLK bytes are attached, so each
   candidate pair's 2x128 B payload is shuffled exactly once.
+- The payload join is the one point where a record's attributes enter
+  the pair stream: every clks column besides the key, ``clk`` and
+  ``popcount`` (e.g. the user key of an int64 key id) rides through
+  Dice side-tagged, so no caller joins the clks table a second time.
 - Dice is computed in an Arrow UDF over uint8 matrices with a popcount
   LUT — no per-row Python. Stored popcounts are reused for the
   denominator (no re-count of a and b).
@@ -21,7 +25,6 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -35,7 +38,6 @@ def candidate_pairs(
     blocks: DataFrame,
     other: Optional[DataFrame] = None,
     key_col: str = "url",
-    block_col: str = "block_key",
     min_band_matches: int = 1,
 ) -> DataFrame:
     """Candidate pairs from shared block keys.
@@ -52,21 +54,15 @@ def candidate_pairs(
     ~1e-5 recall. This is what keeps the scored-pair volume O(n) as n
     grows; see ``tuned_blocking`` for the band-width side of the law.
     """
-    left = blocks.select(
-        F.col(block_col), F.col(key_col).alias("key_a")
-    )
+    left = blocks.select("block_key", F.col(key_col).alias("key_a"))
     if other is None:
-        right = blocks.select(
-            F.col(block_col), F.col(key_col).alias("key_b")
-        )
+        right = blocks.select("block_key", F.col(key_col).alias("key_b"))
         condition = F.col("key_a") < F.col("key_b")
     else:
-        right = other.select(
-            F.col(block_col), F.col(key_col).alias("key_b")
-        )
+        right = other.select("block_key", F.col(key_col).alias("key_b"))
         condition = F.lit(True)
     joined = (
-        left.join(right, on=block_col, how="inner")
+        left.join(right, on="block_key", how="inner")
         .where(condition)
         .select("key_a", "key_b")
     )
@@ -80,34 +76,43 @@ def candidate_pairs(
     )
 
 
+def _payload(clks: DataFrame, key_col: str, side: str) -> DataFrame:
+    """``clks`` renamed for one pair side: ``key_<side>``,
+    ``clk_<side>``, ``popcount_<side>`` and every other column ``c`` as
+    ``<side>_c`` (never ``key_<side>``, whatever ``c`` is)."""
+    return clks.select(
+        F.col(key_col).alias(f"key_{side}"),
+        F.col("clk").alias(f"clk_{side}"),
+        F.col("popcount").alias(f"popcount_{side}"),
+        *(F.col(c).alias(f"{side}_{c}") for c in clks.columns
+          if c not in (key_col, "clk", "popcount")),
+    )
+
+
 def score_candidates(
     pairs: DataFrame,
     clks: DataFrame,
     threshold: float,
     other_clks: Optional[DataFrame] = None,
     key_col: str = "url",
-    clk_col: str = "clk",
-    popcount_col: str = "popcount",
-    score_col: str = "score",
 ) -> DataFrame:
     """Join CLK payloads onto candidate pairs and keep Dice ≥ threshold.
 
     ``clks`` serves ``key_a``; ``other_clks`` (defaults to ``clks``)
-    serves ``key_b``.
+    serves ``key_b``. Each clks table is joined once, and every column
+    of it other than ``key_col``, ``clk`` and ``popcount`` is carried
+    through to the output as ``a_<col>`` (from ``clks``) or ``b_<col>``
+    (from ``other_clks``). Output: ``key_a``, ``key_b``, the carried
+    ``a_*`` then ``b_*`` columns, ``score``; no CLK or popcount column.
     """
     if other_clks is None:
         other_clks = clks
-    payload_a = clks.select(
-        F.col(key_col).alias("key_a"),
-        F.col(clk_col).alias("clk_a"),
-        F.col(popcount_col).alias("popcount_a"),
-    )
-    payload_b = other_clks.select(
-        F.col(key_col).alias("key_b"),
-        F.col(clk_col).alias("clk_b"),
-        F.col(popcount_col).alias("popcount_b"),
-    )
+    payload_a = _payload(clks, key_col, "a")
+    payload_b = _payload(other_clks, key_col, "b")
     joined = pairs.join(payload_a, on="key_a").join(payload_b, on="key_b")
+    kept = ["key_a", "key_b"] + [
+        c for payload in (payload_a, payload_b) for c in payload.columns[3:]
+    ]
 
     # Score + threshold in ONE Arrow pass. The natural
     # ``withColumn(score, udf).where(score >= t)`` makes Catalyst push
@@ -115,11 +120,10 @@ def score_candidates(
     # twice (once for the Filter, once for the Project); mapInPandas
     # computes Dice once per batch and sub-threshold pairs never cross
     # back over the Arrow boundary.
-    out_schema = StructType([
-        joined.schema["key_a"],
-        joined.schema["key_b"],
-        StructField(score_col, DoubleType(), False),
-    ])
+    out_schema = StructType(
+        [joined.schema[c] for c in kept]
+        + [StructField("score", DoubleType(), False)]
+    )
 
     def score_partition(batches):
         for pdf in batches:
@@ -136,20 +140,14 @@ def score_candidates(
             with np.errstate(divide="ignore", invalid="ignore"):
                 score = np.where(denom > 0, 2.0 * inter / denom, 0.0)
             keep = score >= threshold
-            yield pd.DataFrame({
-                "key_a": pdf["key_a"].to_numpy()[keep],
-                "key_b": pdf["key_b"].to_numpy()[keep],
-                score_col: score[keep],
-            })
+            yield pdf.loc[keep, kept].assign(score=score[keep])
 
     return joined.select(
-        "key_a", "key_b", "clk_a", "clk_b", "popcount_a", "popcount_b"
+        *kept, "clk_a", "clk_b", "popcount_a", "popcount_b"
     ).mapInPandas(score_partition, out_schema)
 
 
-def one_to_one_matching(
-    scored_pairs: DataFrame, score_col: str = "score"
-) -> DataFrame:
+def one_to_one_matching(scored_pairs: DataFrame) -> DataFrame:
     """Greedy-style 1-1 matching via mutual best match.
 
     The reference tutorial uses anonlink's ``greedy_solve``
@@ -161,10 +159,10 @@ def one_to_one_matching(
     from pyspark.sql import Window
 
     w_a = Window.partitionBy("key_a").orderBy(
-        F.desc(score_col), F.asc("key_b")
+        F.desc("score"), F.asc("key_b")
     )
     w_b = Window.partitionBy("key_b").orderBy(
-        F.desc(score_col), F.asc("key_a")
+        F.desc("score"), F.asc("key_a")
     )
     return (
         scored_pairs.withColumn("_rank_a", F.row_number().over(w_a))

@@ -562,14 +562,10 @@ class _StageRunner:
     def run(self, name: str, fp: str, build, parents=()) -> DataFrame:
         store, sc = self.store, self.spark.sparkContext
         try:
-            if store is not None and self.resume and store.has(name, fp):
-                self.metrics[f"{name}_resumed"] = True
-                entry = store.manifest["stages"][name]
-                self.metrics[f"{name}_rows"] = entry.get("rows")
-                return self._keep(name, store.read(name))
-            # Tag every job this stage triggers with a job group, so the
-            # status-store reader (perfbench/telemetry.py) can attribute
-            # shuffle records / task time to pipeline stages by the
+            # Tag every job this stage triggers, a resumed stage's
+            # read-back included, with a job group, so the status-store
+            # reader (perfbench/telemetry.py) can attribute shuffle
+            # records / task time to pipeline stages by the
             # "clk:<stage>" group and description. Restored in the
             # finally below; lazily-consumed upstream work is attributed
             # to the stage whose action forced it, which is the
@@ -578,6 +574,11 @@ class _StageRunner:
             sc.setLocalProperty(
                 "spark.job.description", f"clkhash stage {name}"
             )
+            if store is not None and self.resume and store.has(name, fp):
+                self.metrics[f"{name}_resumed"] = True
+                entry = store.manifest["stages"][name]
+                self.metrics[f"{name}_rows"] = entry.get("rows")
+                return self._keep(name, store.read(name))
             start = time.time()
             if store is not None:
                 df = self._keep(name, store.write(name, build(), fp, parents))
@@ -668,9 +669,10 @@ def _run_graph(
                 else f"{joint_fp}|one_to_one={one_to_one}")
 
     # Work in an int64 key domain through the shuffle-heavy middle
-    # stages: banding, the pair join, and the CLK payload joins all
-    # move (long, long) rows instead of (long, url-string) — ~2.5x less
-    # shuffle volume. User keys rejoin only on the skinny final pairs.
+    # stages: banding and the pair join move (long, long) rows instead
+    # of (long, url-string) — ~2.5x less shuffle volume. User keys
+    # enter only with the CLK payload join, on the few candidates
+    # that reach Dice.
     def build_clks(df: DataFrame, party: Optional[int]) -> DataFrame:
         return encode_clks(
             df, config.schema, config.secret, key_cols=(key,),
@@ -759,6 +761,8 @@ def _run_graph(
         sides = ((blocks,) if single else
                  (blocks.where(F.col(kid) >= 0),
                   blocks.where(F.col(kid) < 0)))
+        # The CLK payload join (one per clks table) carries each side's
+        # user key through Dice as a_<key> / b_<key>.
         scored = score_candidates(
             candidate_pairs(
                 *sides,
@@ -770,21 +774,13 @@ def _run_graph(
             other_clks=clks[-1],
             key_col=kid,
         )
-
-        def ids(df: DataFrame, side: str) -> DataFrame:
-            return df.select(F.col(kid).alias(f"key_{side}"),
-                             F.col(key).alias(f"_url_{side}"))
-
-        # Back to user keys. Orientation: one table re-canonicalizes
-        # (string order != hash order); two parties keep key_a from A.
-        url_a, url_b = F.col("_url_a"), F.col("_url_b")
-        key_a, key_b = ((F.least(url_a, url_b), F.greatest(url_a, url_b))
-                        if single else (url_a, url_b))
-        pairs = (
-            scored.join(ids(clks[0], "a"), on="key_a")
-            .join(ids(clks[-1], "b"), on="key_b")
-            .select(key_a.alias("key_a"), key_b.alias("key_b"), "score")
-        )
+        # Orientation: one table re-canonicalizes (string order != hash
+        # order); two parties keep key_a from A.
+        user_a, user_b = F.col(f"a_{key}"), F.col(f"b_{key}")
+        key_a, key_b = ((F.least(user_a, user_b), F.greatest(user_a, user_b))
+                        if single else (user_a, user_b))
+        pairs = scored.select(
+            key_a.alias("key_a"), key_b.alias("key_b"), "score")
         # 1-1 matching runs on user keys: its mutual-best tie-break
         # orders by key, which must stay the user-key ordering.
         return one_to_one_matching(pairs) if one_to_one else pairs

@@ -6,8 +6,10 @@ round introduced must survive refactors.
   for one and two parties, with the skew cap idle or splitting; blocks
   stay a block_key-partitioned cache, and a run leaves only its stage
   outputs persisted
-- per-stage Spark job counts of the blocks and clusters stages, and
-  of the key-id check
+- per-stage Spark job counts of the blocks, pairs and clusters
+  stages and of the key-id check, for one and two parties, with the
+  skew cap idle or splitting; a fully resumed run starts no ungrouped
+  job besides the key-id check
 - a query leaves only the persisted RDDs it cannot avoid
 - single-evaluation MinHash plans (signature UDF appears once)
 - dedup-group sizes via partial aggregation, not a window over the
@@ -160,18 +162,46 @@ class TestStageCaches:
                 persistent[rdd_id].unpersist(True)
 
 
+def _new_jobs(spark, run):
+    """Groups of the Spark jobs ``run()`` starts: ``{group: count}``,
+    read from the status store (newest job first)."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def newest():
+        jobs = store.jobsList(None)
+        return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+    mark = newest()
+    run()
+    counts = {}
+    it = store.jobsList(None).iterator()
+    while it.hasNext():
+        job = it.next()
+        if job.jobId() <= mark:
+            break
+        group = job.jobGroup()
+        group = group.get() if group.isDefined() else None
+        counts[group] = counts.get(group, 0) + 1
+    return counts
+
+
 class TestStageJobCounts:
-    # Spark jobs per stage group, one table, cap idle / cap split. With
-    # banding pinned the only ungrouped (None) jobs are the key-id check
-    # between the clks stages and banding.
-    @pytest.mark.parametrize("config, blocks_jobs, clusters_jobs", [
-        ({"max_block_size": 2000}, 6, 4),
-        ({"max_block_size": 16}, 9, 4),
-    ], ids=["cap_idle", "cap_split"])
-    def test_blocks_and_clusters_job_counts(self, spark, config,
-                                            blocks_jobs, clusters_jobs):
+    # Spark jobs per stage group, one table or two parties, cap idle /
+    # cap split. With banding pinned the only ungrouped (None) jobs are
+    # the key-id check between the clks stages and banding.
+    @pytest.mark.parametrize(
+        "parties, config, blocks_jobs, pairs_jobs, clusters_jobs", [
+            (1, {"max_block_size": 2000}, 6, 5, 4),
+            (1, {"max_block_size": 16}, 9, 5, 4),
+            (2, {"max_block_size": 2000}, 6, 8, 4),
+            (2, {"max_block_size": 16}, 9, 8, 4),
+        ], ids=["cap_idle", "cap_split", "two_party-cap_idle",
+                "two_party-cap_split"])
+    def test_blocks_and_clusters_job_counts(self, spark, parties, config,
+                                            blocks_jobs, pairs_jobs,
+                                            clusters_jobs):
         tracker = spark.sparkContext.statusTracker()
-        groups = ("clk:blocks", "clk:clusters", None)
+        groups = ("clk:blocks", "clk:pairs", "clk:clusters", None)
 
         def jobs():
             return [set(tracker.getJobIdsForGroup(g)) for g in groups]
@@ -180,12 +210,25 @@ class TestStageJobCounts:
         # new job ids, which the status store's eviction of older jobs
         # (past spark.ui.retainedJobs) cannot skew
         before = jobs()
-        _run_skewed(spark, 1, **config)
+        _run_skewed(spark, parties, **config)
         grown = [len(a - b) for a, b in zip(jobs(), before)]
-        assert grown == [blocks_jobs, clusters_jobs, 2], dict(zip(groups,
-                                                                   grown))
+        assert grown == [blocks_jobs, pairs_jobs, clusters_jobs, 2], dict(
+            zip(groups, grown))
 
-
+    @pytest.mark.parametrize("parties", [1, 2])
+    def test_resumed_run_groups_every_stage_job(self, spark, tmp_path,
+                                                parties):
+        # A fully resumed run reads every stage back from the StageStore
+        # under the stage's own group; only the key-id check (2 jobs)
+        # runs ungrouped.
+        config = {"max_block_size": 16, "checkpoint_dir": str(tmp_path),
+                  "input_fingerprint": "skewed"}
+        _run_skewed(spark, parties, **config)
+        jobs = _new_jobs(spark, lambda: _run_skewed(spark, parties,
+                                                    **config))
+        ungrouped = jobs.pop(None, 0)
+        assert ungrouped == 2, (ungrouped, jobs)
+        assert jobs and all(g.startswith("clk:") for g in jobs), jobs
 class TestQueryScratchCaches:
     def test_dedup_groups_does_not_persist_pairs(self, spark):
         from clkhash_spark.entry_queries import q_doc_dedup_groups

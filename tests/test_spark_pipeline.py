@@ -206,13 +206,7 @@ class TestBlocking:
 class TestScoring:
     def test_dice_matches_numpy_oracle(self, spark, small_linkage):
         pages, config, result = small_linkage
-        sample = result.pairs.limit(50)
-        joined = score_candidates(
-            sample.select("key_a", "key_b"),
-            result.clks,
-            threshold=0.0,
-            key_col="url",
-        ).collect()
+        sample = result.pairs.limit(50).select("key_a", "key_b").cache()
         clk_map = {
             r["url"]: (bytes(r["clk"]), r["popcount"])
             for r in result.clks.collect()
@@ -220,16 +214,47 @@ class TestScoring:
         lut = np.unpackbits(
             np.arange(256, dtype=np.uint8)[:, None], axis=1
         ).sum(1)
-        for row in joined:
-            a, pa = clk_map[row["key_a"]]
-            b, pb = clk_map[row["key_b"]]
+
+        def oracle(url_a, url_b):
+            a, pa = clk_map[url_a]
+            b, pb = clk_map[url_b]
             inter = int(
                 lut[
                     np.frombuffer(a, np.uint8) & np.frombuffer(b, np.uint8)
                 ].sum()
             )
-            expected = 2 * inter / (pa + pb)
-            assert abs(row["score"] - expected) < 1e-12
+            return 2 * inter / (pa + pb)
+
+        joined = score_candidates(
+            sample, result.clks, threshold=0.0, key_col="url",
+        ).collect()
+        assert len(joined) == 50
+        for row in joined:
+            assert abs(row["score"] - oracle(row["key_a"], row["key_b"])
+                       ) < 1e-12
+
+        # Keyed by an int64 id, the clks' other columns (here the url)
+        # ride through the payload join, tagged by side.
+        kid = F.xxhash64
+        carried = score_candidates(
+            sample.select(kid("key_a").alias("key_a"),
+                          kid("key_b").alias("key_b")),
+            result.clks.withColumn("_kid", kid("url")),
+            threshold=0.0, key_col="_kid",
+        )
+        assert carried.columns == ["key_a", "key_b", "a_url", "b_url",
+                                   "score"]
+        kids = {r["url"]: r["_kid"] for r in
+                result.clks.select("url", kid("url").alias("_kid"))
+                .collect()}
+        rows = carried.collect()
+        assert len(rows) == 50
+        for row in rows:
+            assert (kids[row["a_url"]], kids[row["b_url"]]) == (
+                row["key_a"], row["key_b"])
+            assert abs(row["score"] - oracle(row["a_url"], row["b_url"])
+                       ) < 1e-12
+        sample.unpersist()
 
     def test_pairs_are_canonical_and_deduped(self, spark, small_linkage):
         pages, config, result = small_linkage
