@@ -140,29 +140,29 @@ def cap_block_size(
     the ``_kid``, a hash of the user key, so which pairs a split keeps
     does not depend on the input's partition layout.
 
-    ``accounting`` is a dict read from ONE aggregate over the block sizes
-    (one ``first()``): ``oversized_blocks`` and ``rows_in_oversized``
-    (ints) and ``pair_volume_affected`` (float, an upper bound on the
-    pairs the split can lose). When no block exceeds the cap — the
-    common case for healthy band widths — ``blocks`` is returned as is,
-    with no join-back.
+    ONE query finds the oversized blocks (exchange-free only on input
+    hash-partitioned by ``block_key``, as the pipeline's blocks cache
+    is). Its collect gives ``accounting``: ``oversized_blocks`` and
+    ``rows_in_oversized`` (ints) and ``pair_volume_affected`` (float, an
+    upper bound on the pairs the split can lose). When it is empty — the
+    common case for healthy band widths — ``blocks`` is returned as is;
+    otherwise the same query is joined back. ``max_block_size`` >= 1.
     """
+    if max_block_size is None or max_block_size < 1:
+        raise ValueError(f"max_block_size must be >= 1: {max_block_size!r}")
     size = F.col("_block_size")
-    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("_block_size"))
-    over = size > max_block_size
-    accounting = sizes.agg(
-        F.count_if(over).alias("oversized_blocks"),
-        F.coalesce(F.sum(F.when(over, size)), F.lit(0)).alias(
-            "rows_in_oversized"),
-        F.coalesce(
-            F.sum(F.when(over, size * (size - 1) / 2)), F.lit(0.0)
-        ).alias("pair_volume_affected"),
-    ).first().asDict()
-    if not accounting["oversized_blocks"]:
+    oversized = blocks.groupBy("block_key").agg(
+        F.count("*").alias("_block_size")).where(size > max_block_size)
+    sizes = [row["_block_size"] for row in oversized.collect()]
+    accounting = {
+        "oversized_blocks": len(sizes),
+        "rows_in_oversized": sum(sizes),
+        "pair_volume_affected": float(sum(s * (s - 1) // 2 for s in sizes)),
+    }
+    if not sizes:
         return blocks, accounting
-    # Join back only the oversized sizes: a null size means "not
-    # oversized", and those rows keep their block key.
-    annotated = blocks.join(sizes.where(over), on="block_key", how="left")
+    # A null size means "not oversized": those rows keep their block key.
+    annotated = blocks.join(oversized, on="block_key", how="left")
     num_splits = F.ceil(size / F.lit(max_block_size))
     # Salt by (block_key, record key), not the record key alone: the
     # block key embeds the band index, so a pair separated by the split

@@ -17,14 +17,15 @@ One materialization rule, owned by ``_StageRunner``: ``blocks`` is
 hash-partitioned by ``block_key`` and persisted, so the skew cap and
 both pair-join sides reuse one exchange; every other stage ends in a
 lazy ``localCheckpoint`` + count that cuts its lineage. A scratch
-cache is released when the stage that made it ends.
+cache is released when the stage that made it ends, unless it is that
+stage's output; a resumed stage restores the metrics its build added.
 
-Two stages keep their Spark actions few. ``blocks`` reads the skew
-cap's accounting from one aggregate over the block sizes, and joins
-sizes back only when a block is oversized. ``clusters`` labels the pair
-graph's components and joins the labels onto every record once, by
-vertex id (:func:`~.operators.cluster.cluster_records`), computed from
-the user key and unique because the checked key ids are.
+Two stages keep their Spark actions few. ``blocks`` certifies the skew
+cap with one query, the oversized blocks' sizes: normally empty, and
+joined back only when not. ``clusters`` labels the pair graph's
+components and joins the labels onto every record once, by vertex id
+(:func:`~.operators.cluster.cluster_records`), computed from the user
+key and unique because the checked key ids are.
 
 With ``checkpoint_dir`` set, stage tables are parquet directories with
 a JSON manifest (`_clkhash_manifest.json`) — the sandbox stand-in for
@@ -236,7 +237,7 @@ class LinkageConfig:
     min_band_matches: int = 2
     lsh_seed: int = 42
     lsh_salt: int = 0
-    max_block_size: Optional[int] = 2000
+    max_block_size: int = 2000
     validate: bool = False
     checkpoint_dir: Optional[str] = None
     resume: bool = True
@@ -264,6 +265,14 @@ class LinkageResult:
     metrics: Dict[str, Any] = field(default_factory=dict)
     # The config actually executed — banding resolved (never None).
     config: Optional[LinkageConfig] = None
+
+
+def _counted(df: DataFrame, start: float) -> Dict[str, Any]:
+    """Count ``df``: its rows, and the seconds and rows/s since ``start``."""
+    rows = df.count()
+    elapsed = time.time() - start
+    return {"rows": rows, "seconds": round(elapsed, 3),
+            "rows_per_sec": round(rows / elapsed, 1) if elapsed else None}
 
 
 class StageStore:
@@ -301,27 +310,26 @@ class StageStore:
         return self.spark.read.parquet(os.path.join(self.root, stage))
 
     def write(
-        self, stage: str, df: DataFrame, fingerprint: str, parents=()
+        self, stage: str, df: DataFrame, fingerprint: str, parents=(),
+        metrics: Optional[Dict[str, Any]] = None,
     ) -> DataFrame:
         """Write a stage table; ``parents`` names the upstream stages
         whose fingerprints are recorded as its lineage — the audit trail
-        an Iceberg snapshot chain would carry."""
+        an Iceberg snapshot chain would carry — and ``metrics`` holds
+        the values a resumed run restores."""
         path = os.path.join(self.root, stage)
         start = time.time()
         df.write.mode("overwrite").parquet(path)
         out = self.spark.read.parquet(path)
-        rows = out.count()
-        elapsed = time.time() - start
         self.manifest["stages"][stage] = {
             "fingerprint": fingerprint,
-            "rows": rows,
-            "seconds": round(elapsed, 3),
-            "rows_per_sec": round(rows / elapsed, 1) if elapsed > 0 else None,
+            **_counted(out, start),
             "complete": True,
             "lineage": {
                 p: self.manifest["stages"].get(p, {}).get("fingerprint")
                 for p in parents
             },
+            "metrics": metrics or {},
         }
         self._save_manifest()
         return out
@@ -543,14 +551,11 @@ class _StageRunner:
         self._scratch: List[DataFrame] = []
 
     def partition_blocks(self, df: DataFrame) -> DataFrame:
-        """Hash-partition banded rows by ``block_key`` and persist them."""
-        return df.repartition(self.block_partitions, "block_key").persist()
-
-    def scratch(self, df: DataFrame) -> DataFrame:
-        """Register the cached ``df``; it is unpersisted when the running
-        stage ends."""
-        self._scratch.append(df)
-        return df
+        """Hash-partition banded rows by ``block_key`` and persist them,
+        as scratch unless the cache becomes the running stage's output."""
+        cache = df.repartition(self.block_partitions, "block_key").persist()
+        self._scratch.append(cache)
+        return cache
 
     def _keep(self, name: str, df: DataFrame) -> DataFrame:
         if name == "blocks":
@@ -561,6 +566,7 @@ class _StageRunner:
 
     def run(self, name: str, fp: str, build, parents=()) -> DataFrame:
         store, sc = self.store, self.spark.sparkContext
+        output = None
         try:
             # Tag every job this stage triggers, a resumed stage's
             # read-back included, with a job group, so the status-store
@@ -578,28 +584,31 @@ class _StageRunner:
                 self.metrics[f"{name}_resumed"] = True
                 entry = store.manifest["stages"][name]
                 self.metrics[f"{name}_rows"] = entry.get("rows")
-                return self._keep(name, store.read(name))
-            start = time.time()
+                self.metrics.update(entry.get("metrics", {}))
+                output = self._keep(name, store.read(name))
+                return output
+            start, known = time.time(), set(self.metrics)
+            df = build()
             if store is not None:
-                df = self._keep(name, store.write(name, build(), fp, parents))
+                added = {k: v for k, v in self.metrics.items()
+                         if k not in known}  # e.g. the cap's accounting
+                df = self._keep(name, store.write(name, df, fp, parents,
+                                                  added))
                 entry = store.manifest["stages"][name]
             else:
-                df = self._keep(name, build())
-                rows, elapsed = df.count(), time.time() - start
-                entry = {
-                    "rows": rows,
-                    "seconds": round(elapsed, 3),
-                    "rows_per_sec": (round(rows / elapsed, 1) if elapsed
-                                     else None),
-                }
+                df = self._keep(name, df)
+                entry = _counted(df, start)
             for stat in ("rows", "seconds", "rows_per_sec"):
                 self.metrics[f"{name}_{stat}"] = entry[stat]
+            output = df
             return df
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
             while self._scratch:
-                self._scratch.pop().unpersist()
+                cache = self._scratch.pop()
+                if cache is not output:
+                    cache.unpersist()
 
 
 def _key_id(key_col: str, party: Optional[int]) -> Column:
@@ -737,17 +746,8 @@ def _run_graph(
                 for df in clks
             ],
         ))
-        capped = blocks
-        if config.max_block_size:
-            capped, metrics["block_cap_accounting"] = cap_block_size(
-                blocks,
-                config.max_block_size,
-                key_cols=(kid,),
-            )
-        if capped is not blocks:
-            # The cap rewrote block keys: the runner re-partitions its
-            # output, and the uncapped rows are scratch.
-            runner.scratch(blocks)
+        capped, metrics["block_cap_accounting"] = cap_block_size(
+            blocks, config.max_block_size, key_cols=(kid,))
         return capped
 
     blocks = runner.run(

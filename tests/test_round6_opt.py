@@ -5,11 +5,13 @@ round introduced must survive refactors.
   the driver-gap pathology was ~10 s of zero-task Catalyst time per run),
   for one and two parties, with the skew cap idle or splitting; blocks
   stay a block_key-partitioned cache, and a run leaves only its stage
-  outputs persisted
+  outputs persisted (with a StageStore, only the blocks cache)
 - per-stage Spark job counts of the blocks, pairs and clusters
   stages and of the key-id check, for one and two parties, with the
   skew cap idle or splitting; a fully resumed run starts no ungrouped
   job besides the key-id check
+- the skew cap's accounting: a resumed blocks stage restores the fresh
+  run's, and an empty table or party B links nothing and reports zeros
 - a query leaves only the persisted RDDs it cannot avoid
 - single-evaluation MinHash plans (signature UDF appears once)
 - dedup-group sizes via partial aggregation, not a window over the
@@ -136,21 +138,30 @@ def _run_skewed(spark, parties, **config):
 
 
 class TestStageCaches:
-    @pytest.mark.parametrize("parties, outputs", [
+    @pytest.mark.parametrize("parties, max_block_size, store, outputs", [
         # clks, blocks, pairs, clusters
-        (1, 4),
+        (1, 16, False, 4),
         # clks_a, clks_b, blocks, pairs, clusters
-        (2, 5),
-    ], ids=["hash-16-4", "two_party-hash-16-5"])
-    def test_run_leaves_only_stage_outputs(self, spark, parties, outputs):
+        (2, 16, False, 5),
+        # with a StageStore only blocks is cached: the other stages are
+        # parquet read-backs
+        (1, 2000, True, 1),
+        (2, 2000, True, 1),
+    ], ids=["hash-16-4", "two_party-hash-16-5", "store-2000-1",
+            "two_party-store-2000-1"])
+    def test_run_leaves_only_stage_outputs(self, spark, tmp_path, parties,
+                                           max_block_size, store, outputs):
         jsc = spark.sparkContext._jsc
         before = set(jsc.getPersistentRDDs())
-        result = _run_skewed(spark, parties, max_block_size=16)
+        config = {"checkpoint_dir": str(tmp_path)} if store else {}
+        result = _run_skewed(spark, parties, max_block_size=max_block_size,
+                             **config)
         persistent = jsc.getPersistentRDDs()
         grown = set(persistent) - before
         try:
-            # the scratch cache (the uncapped blocks the cap rewrote) is
-            # released when the blocks stage ends
+            # the scratch cache (the uncapped blocks) is released when the
+            # blocks stage ends unless it is that stage's output, which it
+            # is not when the cap rewrote it or a StageStore read it back
             assert len(grown) == outputs, sorted(grown)
             # the key id is stage-internal
             assert "_kid" not in result.clks.columns
@@ -191,10 +202,10 @@ class TestStageJobCounts:
     # the key-id check between the clks stages and banding.
     @pytest.mark.parametrize(
         "parties, config, blocks_jobs, pairs_jobs, clusters_jobs", [
-            (1, {"max_block_size": 2000}, 6, 5, 4),
-            (1, {"max_block_size": 16}, 9, 5, 4),
-            (2, {"max_block_size": 2000}, 6, 8, 4),
-            (2, {"max_block_size": 16}, 9, 8, 4),
+            (1, {"max_block_size": 2000}, 5, 5, 4),
+            (1, {"max_block_size": 16}, 8, 5, 4),
+            (2, {"max_block_size": 2000}, 5, 8, 4),
+            (2, {"max_block_size": 16}, 8, 8, 4),
         ], ids=["cap_idle", "cap_split", "two_party-cap_idle",
                 "two_party-cap_split"])
     def test_blocks_and_clusters_job_counts(self, spark, parties, config,
@@ -229,6 +240,63 @@ class TestStageJobCounts:
         ungrouped = jobs.pop(None, 0)
         assert ungrouped == 2, (ungrouped, jobs)
         assert jobs and all(g.startswith("clk:") for g in jobs), jobs
+
+
+_NO_CAP_ACCOUNTING = {"oversized_blocks": 0, "rows_in_oversized": 0,
+                      "pair_volume_affected": 0.0}
+
+
+def _assert_accounting_types(acct):
+    assert [type(acct[k]) for k in _NO_CAP_ACCOUNTING] == [int, int, float]
+
+
+class TestCapAccounting:
+    @pytest.mark.parametrize("parties", [1, 2])
+    @pytest.mark.parametrize("max_block_size", [2000, 16],
+                             ids=["cap_idle", "cap_split"])
+    def test_resumed_blocks_restore_accounting(self, spark, tmp_path,
+                                               parties, max_block_size):
+        config = {"max_block_size": max_block_size,
+                  "checkpoint_dir": str(tmp_path)}
+        fresh = _run_skewed(spark, parties, **config).metrics
+        resumed = _run_skewed(spark, parties, **config).metrics
+        assert resumed["blocks_resumed"] and "blocks_resumed" not in fresh
+        acct = fresh["block_cap_accounting"]
+        assert bool(acct["oversized_blocks"]) == (max_block_size == 16)
+        assert resumed["block_cap_accounting"] == acct
+        _assert_accounting_types(resumed["block_cap_accounting"])
+
+    @pytest.mark.parametrize("banding", [
+        {}, {"num_bands": 16, "bits_per_band": 16},
+    ], ids=["auto", "pinned"])
+    @pytest.mark.parametrize("parties", [1, 2])
+    def test_empty_party(self, spark, parties, banding):
+        # One empty table, or two parties with B empty: nothing to pair,
+        # so the cap's collect is empty; every A record is a cluster.
+        from clkhash_spark.pipeline import (
+            LinkageConfig, run_linkage, run_linkage_two_party,
+            webpages_schema,
+        )
+
+        from .test_round3_fixes import _two_party_with_boilerplate
+
+        party_a, party_b, _ = _two_party_with_boilerplate(spark)
+        config = LinkageConfig(schema=webpages_schema(), secret="s",
+                               **banding)
+        if parties == 1:
+            result = run_linkage(spark, party_a.limit(0), config)
+            records = 0
+        else:
+            result = run_linkage_two_party(spark, party_a,
+                                           party_b.limit(0), config)
+            records = party_a.count()
+        assert result.pairs.count() == 0
+        acct = result.metrics["block_cap_accounting"]
+        assert acct == _NO_CAP_ACCOUNTING
+        _assert_accounting_types(acct)
+        assert result.clusters.count() == records
+
+
 class TestQueryScratchCaches:
     def test_dedup_groups_does_not_persist_pairs(self, spark):
         from clkhash_spark.entry_queries import q_doc_dedup_groups

@@ -184,16 +184,27 @@ class TestBlocking:
             unsalted, on=["url", "block_key"], how="inner"
         ).count() == 0
 
-    def test_block_size_cap_split(self, spark):
+    @staticmethod
+    def _cap_blocks(spark):
+        """One 100-row block and one singleton."""
         rows = [(f"k{i}", 1) for i in range(100)] + [("solo", 2)]
-        blocks = spark.createDataFrame(rows, ["url", "block_key"])
-        capped, acct = cap_block_size(blocks, 10)
+        return spark.createDataFrame(rows, ["url", "block_key"])
+
+    def test_block_size_cap_split(self, spark):
+        capped, acct = cap_block_size(self._cap_blocks(spark), 10)
         sizes = capped.groupBy("block_key").count().collect()
         assert max(r["count"] for r in sizes) <= 25  # hash split is uneven
         assert capped.count() == 101
         assert acct["oversized_blocks"] == 1
         assert acct["rows_in_oversized"] == 100
         assert acct["pair_volume_affected"] == 100 * 99 / 2
+
+    @pytest.mark.parametrize("max_block_size", [None, 0, -1])
+    def test_block_size_cap_rejects_out_of_range(self, spark,
+                                                 max_block_size):
+        # None, 0 or a negative cap would silently disable the cap
+        with pytest.raises(ValueError, match="max_block_size"):
+            cap_block_size(self._cap_blocks(spark), max_block_size)
 
     def test_histogram(self, spark):
         blocks = spark.createDataFrame(
