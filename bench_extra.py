@@ -50,7 +50,7 @@ def profile_suite(which: set) -> dict:
         run_linkage_two_party,
         webpages_schema,
     )
-    from clkhash_spark.session import build_session
+    from clkhash_spark.session import build_session, warm_python_workers
     from clkhash_spark.sources.webpages import (
         synthetic_webpage_parties,
         synthetic_webpages,
@@ -59,16 +59,7 @@ def profile_suite(which: set) -> dict:
     spark = build_session(app_name="bench-extra", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same worker warm-up as bench.py
-    def _touch(batches):
-        import numpy  # noqa: F401
-
-        for batch in batches:
-            yield batch
-
-    spark.range(0, 4 * CPUS, 1, 4 * CPUS).mapInPandas(
-        _touch, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_python_workers(spark)
 
     out: dict = {}
 

@@ -903,17 +903,27 @@ GROUP BY n_name
 # Embedding similarity (SQL-oracled, integer-exact)
 # ---------------------------------------------------------------------------
 
-def q_emb_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < TOPK_NUM_QUERIES).select(
+def _topk_queries(emb: DataFrame) -> DataFrame:
+    """The top-k query set: the first ``TOPK_NUM_QUERIES`` vectors."""
+    return emb.where(F.col("vec_id") < TOPK_NUM_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = similarity.brute_force_topk(emb, queries, k=TOPK_K)
-    return out.select(
+
+
+def _topk_out(ranked: DataFrame) -> DataFrame:
+    """The top-k output types every ``SQL_EMB_*TOPK`` oracle mirrors."""
+    return ranked.select(
         F.col("query_id").cast("long"),
         F.col("vec_id").cast("long"),
         F.col("dot_q").cast("long"),
         F.col("rank").cast("int"),
+    )
+
+
+def q_emb_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _read(spark, sf_dir, "embeddings")
+    return _topk_out(
+        similarity.brute_force_topk(emb, _topk_queries(emb), k=TOPK_K)
     )
 
 
@@ -954,18 +964,9 @@ def q_emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force is measured in tests/test_round3_fixes.py and reported
     in COVERAGE.md."""
     emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < TOPK_NUM_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = similarity.lsh_topk(
-        emb, queries, k=TOPK_K, num_planes=8, dim=64
-    )
-    return out.select(
-        F.col("query_id").cast("long"),
-        F.col("vec_id").cast("long"),
-        F.col("dot_q").cast("long"),
-        F.col("rank").cast("int"),
-    )
+    return _topk_out(similarity.lsh_topk(
+        emb, _topk_queries(emb), k=TOPK_K, num_planes=8, dim=64
+    ))
 
 
 SQL_EMB_LSH_TOPK = f"""
@@ -1011,19 +1012,10 @@ def q_emb_lsh_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     table-tagged buckets, the skinny candidate dedup across tables, and
     the shared integer-dot ranking."""
     emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < TOPK_NUM_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = similarity.lsh_topk(
-        emb, queries, k=TOPK_K,
+    return _topk_out(similarity.lsh_topk(
+        emb, _topk_queries(emb), k=TOPK_K,
         num_planes=MULTI_LSH_PLANES, num_tables=MULTI_LSH_TABLES, dim=64,
-    )
-    return out.select(
-        F.col("query_id").cast("long"),
-        F.col("vec_id").cast("long"),
-        F.col("dot_q").cast("long"),
-        F.col("rank").cast("int"),
-    )
+    ))
 
 
 def _sql_multi_table_buckets(
@@ -1052,19 +1044,10 @@ def q_emb_lsh_topk_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle expands all 16 tables' plane terms (16 x 4 x 64 =
     4,096 products) — heavier SQL, same semantics."""
     emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < TOPK_NUM_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = similarity.lsh_topk(
-        emb, queries, k=TOPK_K,
+    return _topk_out(similarity.lsh_topk(
+        emb, _topk_queries(emb), k=TOPK_K,
         num_planes=PROD_LSH_PLANES, num_tables=PROD_LSH_TABLES, dim=64,
-    )
-    return out.select(
-        F.col("query_id").cast("long"),
-        F.col("vec_id").cast("long"),
-        F.col("dot_q").cast("long"),
-        F.col("rank").cast("int"),
-    )
+    ))
 
 
 def _sql_emb_lsh_topk_multi(
@@ -1190,18 +1173,10 @@ def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical plan shape with trained centroids (recall measured in
     COVERAGE.md)."""
     emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < TOPK_NUM_QUERIES)
-    out = similarity.ivf_topk_fixed(
-        emb,
-        queries.selectExpr("vec_id as query_id", "embedding"),
+    return _topk_out(similarity.ivf_topk_fixed(
+        emb, _topk_queries(emb),
         k=TOPK_K, num_centroids=8, nprobe=IVF_TOPK_NPROBE, dim=64,
-    )
-    return out.select(
-        F.col("query_id").cast("long"),
-        F.col("vec_id").cast("long"),
-        F.col("dot_q").cast("long"),
-        F.col("rank").cast("int"),
-    )
+    ))
 
 
 SQL_EMB_IVF_TOPK = f"""
@@ -1362,36 +1337,13 @@ def q_emb_ivf_two_level_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = similarity.ivf_probe_two_level(
         qemb.where(F.col("vec_id") < TOPK_NUM_QUERIES).select(
             F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("_qemb"),
+            F.col("embedding").alias("_qvec"),
             F.col("qv").alias("_qqv"),
         ),
         quantizer, nprobe=IVF_2L_NPROBE, vec_col="_qqv",
     )
-    joined = corpus.join(F.broadcast(probes), on="centroid_id").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = joined.select(
-        "query_id",
-        "vec_id",
-        similarity.batched_quantized_dot(
-            F.col("_qemb"), F.col("embedding")
-        ).alias("dot_q"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_q"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK_K)
-        .select(
-            F.col("query_id").cast("long"),
-            F.col("vec_id").cast("long"),
-            F.col("dot_q").cast("long"),
-            F.col("rank").cast("int"),
-        )
-    )
+    joined = similarity.ivf_probe_join(corpus, probes, "centroid_id")
+    return _topk_out(similarity.rank_topk(joined, TOPK_K))
 
 
 def _sql_emb_ivf_two_level_topk() -> str:

@@ -15,7 +15,13 @@ Three paths:
   hash-ordered sample, every vector assigned to its nearest cell
   (Arrow-batched numpy argmax — no per-element Catalyst lambdas), each
   query probes its ``nprobe`` nearest cells. Better recall/probe control
-  than sign LSH when the corpus is clustered.
+  than sign LSH when the corpus is clustered. Every IVF path joins its
+  probes to the corpus through :func:`ivf_probe_join`.
+
+Every top-k path ends in the same tail, :func:`rank_topk`: score each
+(query, candidate) row with the quantized integer dot and keep the
+``k`` best per query (ties to the lower key). A path only decides which
+candidates reach it.
 
 Also: embedding-cosine near-duplicate detection for dedup.
 """
@@ -36,6 +42,7 @@ __all__ = [
     "batched_quantized_dot",
     "cosine",
     "batched_cosine",
+    "rank_topk",
     "brute_force_topk",
     "hyperplane_signatures",
     "lsh_topk",
@@ -43,13 +50,13 @@ __all__ = [
     "embedding_near_duplicates_exact",
     "kmeans_centroids",
     "ivf_assign",
+    "ivf_probe_join",
     "ivf_topk",
     "ivf_topk_auto",
     "IvfIndex",
     "ivf_fit_auto",
     "ivf_probe_two_level",
     "fixed_two_level_quantizer",
-    "ivf_cell_fixed_with_vec",
     "ivf_probe_fixed",
     "ivf_topk_fixed",
     "TwoLevelQuantizer",
@@ -156,6 +163,35 @@ def cosine(a: Column, b: Column) -> Column:
     return dot / (norm(a) * norm(b))
 
 
+def rank_topk(
+    candidates: DataFrame,
+    k: int,
+    key_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_key_col: str = "query_id",
+) -> DataFrame:
+    """Score and rank (query, candidate) rows: the tail of every top-k.
+
+    ``candidates`` carries the query embedding as ``_qvec`` and the
+    candidate's as ``vec_col``. Each row is scored with
+    :func:`batched_quantized_dot` as ``dot_q``; ``row_number() OVER
+    (PARTITION BY query ORDER BY dot_q DESC, key ASC) <= k`` is kept as
+    ``rank``. Returns (query_key_col, key_col, dot_q, rank).
+    """
+    scored = candidates.select(
+        query_key_col,
+        key_col,
+        batched_quantized_dot(F.col("_qvec"), F.col(vec_col)).alias("dot_q"),
+    )
+    w = Window.partitionBy(query_key_col).orderBy(
+        F.desc("dot_q"), F.asc(key_col)
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -174,21 +210,10 @@ def brute_force_topk(
             F.col(query_key_col), F.col(vec_col).alias("_qvec")
         )
     )
-    scored = vectors.crossJoin(q).where(
+    pairs = vectors.crossJoin(q).where(
         F.col(key_col) != F.col(query_key_col)
     )
-    scored = scored.select(
-        query_key_col,
-        key_col,
-        batched_quantized_dot(F.col("_qvec"), F.col(vec_col)).alias("dot_q"),
-    )
-    w = Window.partitionBy(query_key_col).orderBy(
-        F.desc("dot_q"), F.asc(key_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(pairs, k, key_col, vec_col, query_key_col)
 
 
 def rademacher_planes(num_planes: int, dim: int, seed: int = 42):
@@ -340,18 +365,7 @@ def lsh_topk(
     joined = candidates.join(
         vectors.select(F.col(key_col), F.col(vec_col)), on=key_col
     ).join(q_payload, on=query_key_col)
-    scored = joined.select(
-        query_key_col,
-        key_col,
-        batched_quantized_dot(F.col("_qvec"), F.col(vec_col)).alias("dot_q"),
-    )
-    w = Window.partitionBy(query_key_col).orderBy(
-        F.desc("dot_q"), F.asc(key_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(joined, k, key_col, vec_col, query_key_col)
 
 
 def fixed_integer_centroids(
@@ -492,8 +506,12 @@ class _single_thread_blas:
                 ))
                 for cand in libs:
                     lib = ctypes.CDLL(cand)
+                    # numpy >= 2 wheels bundle scipy-openblas, which
+                    # prefixes its symbols with scipy_.
                     for sym in ("openblas_set_num_threads64_",
-                                "openblas_set_num_threads"):
+                                "openblas_set_num_threads",
+                                "scipy_openblas_set_num_threads64_",
+                                "scipy_openblas_set_num_threads"):
                         if hasattr(lib, sym):
                             cls._lib = (
                                 getattr(lib, sym),
@@ -584,20 +602,18 @@ def _hash_ordered_sample(
     return np.array(col.to_pylist(), dtype=np.float64)
 
 
-def ivf_cell_fixed_with_vec(
-    vectors: DataFrame,
-    num_centroids: int = 8,
-    dim: int = 64,
-    seed: int = 42,
+def ivf_probe_join(
+    corpus: DataFrame,
+    probes: DataFrame,
+    cell_col: str,
     key_col: str = "vec_id",
-    vec_col: str = "embedding",
+    query_key_col: str = "query_id",
 ) -> DataFrame:
-    """:func:`ivf_cell_fixed` keeping the embedding column — the cell
-    is a pure projection of the vector, so this stays a zero-shuffle
-    select (no join back to the source)."""
-    cell = _fixed_cell_expr(num_centroids, dim, seed, vec_col)
-    return vectors.select(
-        F.col(key_col), F.col(vec_col), cell.alias("cell")
+    """The candidate join of every IVF path: ``corpus ⋈ broadcast(probes)``
+    on the cell column, minus self-matches. Probes are skinny
+    (cell, query) rows, so the broadcast ships no corpus data."""
+    return corpus.join(F.broadcast(probes), on=cell_col).where(
+        F.col(key_col) != F.col(query_key_col)
     )
 
 
@@ -651,30 +667,19 @@ def ivf_topk_fixed(
     corpus assigned once, queries explode to skinny (cell, query) rows
     broadcast into the cell join, integer-dot ranking). Each corpus
     vector lives in exactly one cell and a query's probed cells are
-    distinct, so candidates need no dedup."""
-    corpus = ivf_cell_fixed_with_vec(
-        vectors, num_centroids, dim, seed, key_col, vec_col
+    distinct, so candidates need no dedup. The cell is a pure projection
+    of the vector, so assignment is a zero-shuffle select."""
+    cell = _fixed_cell_expr(num_centroids, dim, seed, vec_col)
+    corpus = vectors.select(
+        F.col(key_col), F.col(vec_col), cell.alias("cell")
     )
     probes = ivf_probe_fixed(
         queries, num_centroids, nprobe, dim, seed, query_key_col, vec_col
     ).select(
         query_key_col, F.col(vec_col).alias("_qvec"), "cell"
     )
-    joined = corpus.join(F.broadcast(probes), on="cell").where(
-        F.col(key_col) != F.col(query_key_col)
-    )
-    scored = joined.select(
-        query_key_col,
-        key_col,
-        batched_quantized_dot(F.col("_qvec"), F.col(vec_col)).alias("dot_q"),
-    )
-    w = Window.partitionBy(query_key_col).orderBy(
-        F.desc("dot_q"), F.asc(key_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    joined = ivf_probe_join(corpus, probes, "cell", key_col, query_key_col)
+    return rank_topk(joined, k, key_col, vec_col, query_key_col)
 
 
 def kmeans_centroids(
@@ -823,22 +828,10 @@ def ivf_topk(
         F.col(vec_col).alias("_qvec"),
         probe_col.alias("centroid_id"),
     )
-    joined = assigned.join(
-        F.broadcast(query_cells), on="centroid_id"
-    ).where(F.col(key_col) != F.col(query_key_col))
-
-    scored = joined.select(
-        query_key_col,
-        key_col,
-        batched_quantized_dot(F.col("_qvec"), F.col(vec_col)).alias("dot_q"),
+    joined = ivf_probe_join(
+        assigned, query_cells, "centroid_id", key_col, query_key_col
     )
-    w = Window.partitionBy(query_key_col).orderBy(
-        F.desc("dot_q"), F.asc(key_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(joined, k, key_col, vec_col, query_key_col)
 
 
 class TwoLevelQuantizer:
@@ -1189,21 +1182,10 @@ def ivf_topk_two_level(
         ),
         quantizer, nprobe=nprobe, vec_col="_qvec",
     )
-    joined = assigned.join(
-        F.broadcast(query_cells), on="centroid_id"
-    ).where(F.col(key_col) != F.col(query_key_col))
-    scored = joined.select(
-        query_key_col,
-        key_col,
-        batched_quantized_dot(F.col("_qvec"), F.col(vec_col)).alias("dot_q"),
+    joined = ivf_probe_join(
+        assigned, query_cells, "centroid_id", key_col, query_key_col
     )
-    w = Window.partitionBy(query_key_col).orderBy(
-        F.desc("dot_q"), F.asc(key_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(joined, k, key_col, vec_col, query_key_col)
 
 
 class IvfIndex:

@@ -703,10 +703,7 @@ def _run_graph(
     # AND the measured unrelated-pair bit agreement (the leakage base of
     # the law; assuming it costs an order of magnitude in join volume —
     # see estimate_bit_agreement).
-    n_rows = sum(
-        metrics.get(f"{stage}_rows") or df.count()
-        for stage, df in zip(clks_stages, clks)
-    )
+    n_rows = sum(metrics[f"{stage}_rows"] for stage in clks_stages)
     measured_a = None
     if config.num_bands is None or config.bits_per_band is None:
         measured_a = estimate_bit_agreement(all_clks, key_col=key)

@@ -3,12 +3,14 @@
 ``session_confs`` is the one conf table: ``build_session`` sets it on a
 local builder, and ``tools/scaling_bench.py`` puts the same table on the
 ``spark-submit`` line, so the same code runs at N and 4N executors
-unchanged.
+unchanged. ``warm_python_workers`` pays the Python workers' start-up
+before a job times anything.
 """
 
 from __future__ import annotations
 
 import os
+import time
 from typing import Dict, Optional
 
 from pyspark.sql import SparkSession
@@ -55,3 +57,29 @@ def build_session(
     for key, value in confs.items():
         builder = builder.config(key, str(value))
     return builder.getOrCreate()
+
+
+def _import_udf_modules(batches):
+    # Runs in each Python worker: pays the fork and the imports the
+    # package's UDFs need, once per worker.
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
+    from .core import vectorized  # noqa: F401
+    from .operators import blocking, scoring  # noqa: F401
+
+    yield from batches
+
+
+def warm_python_workers(spark: SparkSession) -> float:
+    """Start every Python worker and load the UDF modules in it: one
+    tiny batch on each of 4 × ``defaultParallelism`` partitions, so a
+    job's first Arrow UDF does not pay the cold start inside its timed
+    region. Returns the seconds it took."""
+    start = time.perf_counter()
+    n = 4 * spark.sparkContext.defaultParallelism
+    spark.range(0, n, 1, n).mapInPandas(
+        _import_udf_modules, "id long"
+    ).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - start

@@ -11,16 +11,18 @@ round introduced must survive refactors.
   skew cap idle or splitting; a fully resumed run starts no ungrouped
   job besides the key-id check
 - the skew cap's accounting: a resumed blocks stage restores the fresh
-  run's, and an empty table or party B links nothing and reports zeros
+  run's, and an empty table or party B links nothing, reports zeros
+  and is not counted again
 - a query leaves only the persisted RDDs it cannot avoid
 - single-evaluation MinHash plans (signature UDF appears once)
 - dedup-group sizes via partial aggregation, not a window over the
   skewed group key
-- narrow-scan widening fires only when it should
+- narrow-scan widening fires only when it should, and starts no job
+  on an input whose plan has an exchange
 - two-level IVF: executor-side sub-fit is bit-identical to the driver
   loop; the quantizer ships as ONE explicit broadcast, not per-UDF
   closure pickles; the BLAS thread pin is only taken when it can be
-  restored
+  restored, and is found under scipy-openblas's prefixed symbol names
 """
 
 import os
@@ -273,6 +275,9 @@ class TestCapAccounting:
     def test_empty_party(self, spark, parties, banding):
         # One empty table, or two parties with B empty: nothing to pair,
         # so the cap's collect is empty; every A record is a cluster.
+        # With banding pinned, the only ungrouped jobs are the key-id
+        # check's (none over an empty table): banding reads the clks
+        # stages' recorded row counts and recounts no empty one.
         from clkhash_spark.pipeline import (
             LinkageConfig, run_linkage, run_linkage_two_party,
             webpages_schema,
@@ -283,13 +288,19 @@ class TestCapAccounting:
         party_a, party_b, _ = _two_party_with_boilerplate(spark)
         config = LinkageConfig(schema=webpages_schema(), secret="s",
                                **banding)
+        results = []
         if parties == 1:
-            result = run_linkage(spark, party_a.limit(0), config)
+            jobs = _new_jobs(spark, lambda: results.append(
+                run_linkage(spark, party_a.limit(0), config)))
             records = 0
         else:
-            result = run_linkage_two_party(spark, party_a,
-                                           party_b.limit(0), config)
+            jobs = _new_jobs(spark, lambda: results.append(
+                run_linkage_two_party(spark, party_a, party_b.limit(0),
+                                      config)))
             records = party_a.count()
+        (result,) = results
+        if banding:
+            assert jobs.get(None, 0) == (0 if parties == 1 else 2), jobs
         assert result.pairs.count() == 0
         acct = result.metrics["block_cap_accounting"]
         assert acct == _NO_CAP_ACCOUNTING
@@ -341,6 +352,16 @@ class TestWidenIfNarrow:
 
         stream = spark.readStream.format("rate").load()
         assert widen_if_narrow(stream) is stream
+
+    def test_shuffled_input_starts_no_job(self, spark):
+        # An exchange already set the partitioning; reading the plan
+        # must not run the upstream shuffle stage to count partitions.
+        from clkhash_spark.operators._util import widen_if_narrow
+
+        df = spark.range(0, 100_000, 1, 8).repartition(3, "id")
+        out = []
+        jobs = _new_jobs(spark, lambda: out.append(widen_if_narrow(df)))
+        assert jobs == {} and out == [df], jobs
 
 
 class TestClusterEdgeBound:
@@ -424,6 +445,30 @@ class TestSingleThreadBlas:
         with S._single_thread_blas():
             pass
         assert seen == calls
+
+
+    def test_probes_prefixed_openblas_symbols(self, monkeypatch):
+        # numpy >= 2 wheels ship scipy-openblas, whose control symbols
+        # carry a scipy_ prefix and a 64_ suffix.
+        import ctypes
+        import glob
+        import types
+
+        import clkhash_spark.operators.similarity as S
+
+        seen = []
+        stub = types.SimpleNamespace(
+            scipy_openblas_set_num_threads64_=seen.append,
+            scipy_openblas_get_num_threads64_=lambda: 3,
+        )
+        monkeypatch.setattr(glob, "glob",
+                            lambda pattern: ["libscipy_openblas64_.so"])
+        monkeypatch.setattr(ctypes, "CDLL", lambda path: stub)
+        monkeypatch.setattr(S._single_thread_blas, "_probed", False)
+        monkeypatch.setattr(S._single_thread_blas, "_lib", None)
+        with S._single_thread_blas():
+            pass
+        assert seen == [1, 3]
 
 
 class TestTwoLevelFit:

@@ -41,6 +41,8 @@ def test_spark_submit_job_runs_from_zip(mode):
     assert result["cores"] == 2
     assert result["rows"] == 500
     assert result["pipeline_seconds"] > 0
+    # the package's worker warm-up runs, off the pipeline's clock
+    assert result["warmup_seconds"] > 0
     if mode == "single":
         assert result["encode_seconds"] > 0
         assert result["encode_rows_per_sec"] > 0

@@ -26,21 +26,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
-def warm_workers(spark: SparkSession, cores: int) -> None:
-    """Pay the Python-worker fork + numpy import cost before timing."""
-    import pandas as pd
-
-    def touch(batches):
-        import numpy  # noqa: F401
-
-        for pdf in batches:
-            yield pd.DataFrame({"x": [len(pdf)]})
-
-    spark.range(0, cores * 4, 1, cores * 4).mapInPandas(
-        touch, "x long"
-    ).count()
-
-
 def run_dedup(spark: SparkSession, rows: int) -> dict:
     from clkhash_spark.operators.cluster import cluster_records
     from clkhash_spark.operators.dedup import minhash_near_duplicates
@@ -257,15 +242,17 @@ def main() -> None:
 
     spark = SparkSession.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    cores = spark.sparkContext.defaultParallelism
-    warm_workers(spark, cores)
+    from clkhash_spark.session import warm_python_workers
+
+    warmup_s = warm_python_workers(spark)
 
     result = (
         run_dedup(spark, args.rows)
         if args.mode == "dedup"
         else run_ann(spark, args.rows)
     )
-    result["cores"] = cores
+    result["cores"] = spark.sparkContext.defaultParallelism
+    result["warmup_seconds"] = round(warmup_s, 2)
     print(json.dumps(result))
     spark.stop()
 

@@ -64,9 +64,15 @@ def main() -> None:
     spark = SparkSession.builder.appName("clk-linkage-job").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
+    # Resolved from --py-files, as on a real cluster. Every Python
+    # worker starts here, off the pipeline's clock.
+    from clkhash_spark.session import warm_python_workers
+
+    warmup_s = warm_python_workers(spark)
 
     summary = (run_two_party if args.two_party else run_single)(
         spark, args, cores)
+    summary["warmup_seconds"] = round(warmup_s, 2)
     spark.stop()
 
     line = json.dumps(summary)
@@ -92,9 +98,9 @@ def run_single(spark, args, cores: int) -> dict:
 
     clks = encode_clks(pages, webpages_schema(), args.secret,
                        key_cols=("url",))
-    # Warm-up pass: spin up + import-load every Python worker once so the
-    # timed region measures steady-state throughput (what a long job
-    # sees), not per-worker cold start.
+    # Warm-up pass over the encode plan (code generation, the workers'
+    # hasher caches), so the timed region measures steady-state
+    # throughput (what a long job sees).
     clks.write.format("noop").mode("overwrite").save()
 
     t0 = time.time()
@@ -175,19 +181,6 @@ def run_two_party(spark, args, cores: int) -> dict:
                            F.col("entity_id").alias("_ent_b")).persist()
     for df in (party_a, party_b, ent_a, ent_b):
         df.count()  # materialize input outside the timed region
-
-    # Warm every Python worker before timing (same discipline as the
-    # single-table job: first pandas-UDF pass costs ~15 s across
-    # workers).
-    def _touch(batches):
-        import numpy  # noqa: F401
-
-        for batch in batches:
-            yield batch
-
-    spark.range(0, 4 * cores, 1, 4 * cores).mapInPandas(
-        _touch, "id long"
-    ).write.format("noop").mode("overwrite").save()
 
     config = LinkageConfig(
         schema=webpages_schema(), secret=args.secret, key_col="key",
