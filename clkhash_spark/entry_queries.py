@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import dedup, similarity, text as text_ops
+from .operators.scoring import candidate_pairs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -710,13 +711,9 @@ def q_doc_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     # persisted: both self-join sides consume the fingerprint transform
     fps = text_ops.fingerprints(docs).persist()
-    left = fps.select(F.col("shingle_fp"), F.col("doc_id").alias("doc_a"))
-    right = fps.select(F.col("shingle_fp"), F.col("doc_id").alias("doc_b"))
-    candidates = (
-        left.join(right, on="shingle_fp")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    candidates = candidate_pairs(
+        fps.select(F.col("shingle_fp").alias("block_key"), "doc_id"),
+        key_col="doc_id",
     )
     return dedup.shingle_jaccard(docs, candidates, shingle_size=3)
 

@@ -4,15 +4,20 @@ Five families, each Spark-first and shuffle-conscious:
 
 - **exact**: group by digest of normalized text — one shuffle of
   (digest, doc_id).
-- **MinHash + LSH**: word-shingle MinHash signatures computed JVM-side
-  (array expressions, no UDF, no explode), banded into LSH keys; the only
-  shuffle is the skinny (band_key, doc_id) self-join. Signature hashes are
-  md5-derived so a SQL oracle can reproduce them bit-for-bit.
-- **SimHash**: 64-bit sign-vote fingerprint over word hashes, computed
-  with array expressions; near-dup candidates via 16-bit chunk banding
-  (pigeonhole: hamming ≤ 3 ⇒ ≥1 of 4 chunks equal).
+- **MinHash + LSH**: word-shingle MinHash signatures (Arrow-batched
+  numpy UDF), banded into int64 LSH keys; the only shuffle is the skinny
+  (block_key, doc_id) self-join. Signature hashes are md5-derived so a
+  SQL oracle can reproduce them bit-for-bit.
+- **SimHash**: 60-bit sign-vote fingerprint over md5 word hashes.
 - **n-gram Jaccard**: exact word-shingle Jaccard for candidate pairs
   (verification step after any LSH family).
+
+Linkage and document dedup share one bucket → self-join → verify plan:
+candidates come from :func:`~clkhash_spark.operators.scoring.candidate_pairs`
+(the package's one banded self-join) and each side's signature or
+shingle set joins on through
+:func:`~clkhash_spark.operators.scoring.pair_payload` (its one payload
+join), the same two steps that feed CLK Dice scoring.
 - **embedding cosine**: see :mod:`clkhash_spark.operators.similarity`.
 """
 
@@ -20,13 +25,14 @@ from __future__ import annotations
 
 import hashlib
 import re
-from typing import Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+
+from .scoring import candidate_pairs, pair_payload
 
 # ASCII \s to mirror the JVM/RE2 regex class used by the SQL oracles.
 _WS = re.compile(r"\s+", re.ASCII)
@@ -36,10 +42,8 @@ __all__ = [
     "exact_duplicates",
     "word_shingles",
     "minhash_signatures",
-    "minhash_candidates",
     "minhash_near_duplicates",
     "simhash",
-    "simhash_candidates",
     "shingle_jaccard",
 ]
 
@@ -92,14 +96,6 @@ def word_shingles(text: Column, shingle_size: int = 3) -> Column:
     ).otherwise(F.array(F.array_join(words, " ")))
 
 
-def _md5_hash64(value: Column, salt: Column) -> Column:
-    """Deterministic 60-bit integer hash via md5 — reproducible in any
-    engine with md5 + hex parsing (the SQL-oracle contract)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(salt, F.lit(":"), value)), 1, 15), 16, 10
-    ).cast("long")
-
-
 # The affine maps live in GF(p) with p = 2^31 - 1 (Mersenne prime):
 # shingle base hashes and coefficients are both < p, so a*h + b < 2^62
 # is exact in int64 for Spark, DuckDB, and numpy alike — and, unlike a
@@ -124,8 +120,6 @@ def minhash_coefficients(num_hashes: int, seed: int = 42):
     ``a`` is what makes each map reorder the domain (see the modulus
     note above).
     """
-    import hashlib
-
     coeffs = []
     for i in range(num_hashes):
         digest = hashlib.sha256(
@@ -233,19 +227,16 @@ def minhash_signatures(
     )
 
 
-def minhash_candidates(
-    signatures: DataFrame,
-    num_bands: int = 16,
-    key_col: str = "doc_id",
+def _minhash_bands(
+    signatures: DataFrame, num_bands: int, key_col: str
 ) -> DataFrame:
-    """LSH banding over MinHash signatures → distinct candidate pairs.
+    """LSH banding over MinHash signatures: one ``(block_key, key)`` row
+    per document and band.
 
     Band key = int64 digest of that band's signature slice (low 60 bits
     of md5 — 8-byte longs shuffle ~4x less volume than 32-char hex
     strings, and DuckDB reproduces the value via
-    ``CAST('0x' || substr(md5(..), 1, 15) AS BIGINT)``). Only skinny
-    (band_key, doc_id) rows shuffle; pairs colliding in several bands
-    are deduplicated before verification.
+    ``CAST('0x' || substr(md5(..), 1, 15) AS BIGINT)``).
     """
     sig = F.col("signature")
     rows_per_band = F.floor(F.size(sig) / num_bands).cast("int")
@@ -269,16 +260,8 @@ def minhash_candidates(
             16, 10,
         ).cast("long"),
     )
-    exploded = signatures.select(
-        F.col(key_col), F.explode(bands).alias("band_key")
-    )
-    left = exploded.select("band_key", F.col(key_col).alias("doc_a"))
-    right = exploded.select("band_key", F.col(key_col).alias("doc_b"))
-    return (
-        left.join(right, on="band_key")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    return signatures.select(
+        F.explode(bands).alias("block_key"), F.col(key_col)
     )
 
 
@@ -293,12 +276,13 @@ def minhash_near_duplicates(
 ) -> DataFrame:
     """Near-duplicate pairs with the MinHash-estimated Jaccard.
 
-    Candidates from banding, verified by the fraction of agreeing
-    signature positions (an unbiased Jaccard estimator).
+    Candidates from banding (pairs colliding in several bands are
+    deduplicated before verification), verified by the fraction of
+    agreeing signature positions (an unbiased Jaccard estimator).
     """
     # Persist the signatures: the plan consumes them THREE times (the
-    # banding self-join plus the sig_a / sig_b verification joins), and
-    # the sig_a/sig_b joins hash by different keys so no ReusedExchange
+    # banding self-join plus the two payload joins), and the payload
+    # joins hash by different keys so no ReusedExchange
     # can deduplicate them — without the persist the signature UDF (the
     # CPU-heavy stage) is evaluated 3x per run (8 ArrowEvalPython nodes
     # in the round-5 plan, 1 after; see OPTIMIZATION_r06.md).
@@ -308,30 +292,24 @@ def minhash_near_duplicates(
         df, num_hashes=num_hashes, shingle_size=shingle_size,
         text_col=text_col, key_col=key_col,
     ).persist()
-    candidates = minhash_candidates(
-        signatures, num_bands=num_bands, key_col=key_col
-    )
-    sig_a = signatures.select(
-        F.col(key_col).alias("doc_a"), F.col("signature").alias("sig_a")
-    )
-    sig_b = signatures.select(
-        F.col(key_col).alias("doc_b"), F.col("signature").alias("sig_b")
+    candidates = candidate_pairs(
+        _minhash_bands(signatures, num_bands, key_col), key_col=key_col
     )
     matches = F.size(
         F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
+            F.zip_with("a_signature", "b_signature", lambda x, y: x == y),
             lambda eq: eq,
         )
     )
     return (
-        candidates.join(sig_a, on="doc_a")
-        .join(sig_b, on="doc_b")
+        pair_payload(candidates, signatures, key_col)
         .withColumn(
             "est_jaccard",
             F.round(matches.cast("double") / F.lit(num_hashes), 6),
         )
         .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
+        .select(F.col("key_a").alias("doc_a"), F.col("key_b").alias("doc_b"),
+                "est_jaccard")
     )
 
 
@@ -422,57 +400,6 @@ def simhash(
     )
 
 
-def simhash_candidates(
-    fingerprints: DataFrame, key_col: str = "doc_id"
-) -> DataFrame:
-    """Candidate pairs whose SimHashes agree on ≥1 of four 15-bit chunks
-    (pigeonhole: hamming distance ≤ 3 guarantees a chunk match)."""
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk_id"),
-                F.shiftright(F.col("simhash"), c * 15)
-                .bitwiseAND(F.lit((1 << 15) - 1))
-                .alias("chunk"),
-            )
-            for c in range(4)
-        ]
-    )
-    exploded = fingerprints.select(
-        F.col(key_col), F.col("simhash"), F.explode(chunks).alias("c")
-    ).select(
-        key_col, "simhash",
-        # int64 key: chunk_id in bits 16+, 15-bit chunk value below —
-        # longs shuffle far cheaper than formatted strings.
-        (
-            F.shiftleft(F.col("c.chunk_id").cast("long"), 16)
-            + F.col("c.chunk")
-        ).alias("chunk_key"),
-    )
-    left = exploded.select(
-        "chunk_key",
-        F.col(key_col).alias("doc_a"), F.col("simhash").alias("sim_a"),
-    )
-    right = exploded.select(
-        "chunk_key",
-        F.col(key_col).alias("doc_b"), F.col("simhash").alias("sim_b"),
-    )
-    pairs = (
-        left.join(right, on="chunk_key")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sim_a", "sim_b")
-        .distinct()
-    )
-    # Hamming distance via popcount of XOR (bit_count is JVM-side).
-    return pairs.select(
-        "doc_a",
-        "doc_b",
-        F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias(
-            "hamming"
-        ),
-    )
-
-
 def shingle_jaccard(
     df: DataFrame,
     candidates: DataFrame,
@@ -480,33 +407,24 @@ def shingle_jaccard(
     text_col: str = "text",
     key_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact word-shingle Jaccard for candidate pairs (verification)."""
+    """Exact word-shingle Jaccard for ``(key_a, key_b)`` candidate pairs
+    (verification)."""
     from ._util import widen_if_narrow
 
     df = widen_if_narrow(df.select(key_col, text_col))
-    # Persisted: the doc_a and doc_b payload joins hash by different
-    # keys, so without it the shingle transform (the expensive
-    # array-heavy stage) is computed once per side.
+    # Persisted: the two payload joins hash by different keys, so
+    # without it the shingle transform (the expensive array-heavy
+    # stage) is computed once per side.
     shingled = df.select(
         F.col(key_col),
         F.array_distinct(word_shingles(F.col(text_col), shingle_size)).alias(
             "shingles"
         ),
     ).persist()
-    a = shingled.select(
-        F.col(key_col).alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    b = shingled.select(
-        F.col(key_col).alias("doc_b"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        candidates.join(a, on="doc_a")
-        .join(b, on="doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
+    inter = F.size(F.array_intersect("a_shingles", "b_shingles"))
+    union = F.size(F.array_union("a_shingles", "b_shingles"))
+    return pair_payload(candidates, shingled, key_col).select(
+        F.col("key_a").alias("doc_a"),
+        F.col("key_b").alias("doc_b"),
+        F.round(inter.cast("double") / union, 6).alias("jaccard"),
     )

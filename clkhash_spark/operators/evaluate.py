@@ -36,17 +36,7 @@ def cluster_pairs(clusters: DataFrame, key_col: str = "key",
 def truth_pairs(truth: DataFrame, key_col: str = "url",
                 entity_col: str = "entity_id") -> DataFrame:
     """All same-entity pairs (key_a < key_b) from a labeled table."""
-    a = truth.select(
-        F.col(entity_col).alias("_e"), F.col(key_col).alias("key_a")
-    )
-    b = truth.select(
-        F.col(entity_col).alias("_e"), F.col(key_col).alias("key_b")
-    )
-    return (
-        a.join(b, on="_e")
-        .where(F.col("key_a") < F.col("key_b"))
-        .select("key_a", "key_b")
-    )
+    return cluster_pairs(truth, key_col=key_col, cluster_col=entity_col)
 
 
 def pairwise_metrics(

@@ -1,18 +1,26 @@
-"""Candidate-pair generation and batched Dice-coefficient scoring.
+"""Candidate-pair generation, the pair payload join and batched Dice
+scoring.
 
 Dice semantics pinned by the reference's tests
 (/root/reference/tests/test_bloomfilter.py:112-113):
 ``sim(a, b) = 2 * popcount(a & b) / (popcount(a) + popcount(b))``.
 
+Linkage and document dedup share one bucket → self-join → verify plan:
+``candidate_pairs`` is the package's only banded self-join (CLK bands
+here, MinHash bands and shingle fingerprints in
+:mod:`clkhash_spark.operators.dedup` and the entry queries), and
+``pair_payload`` its only "join each side's row onto a pair" step
+(CLKs for Dice, signatures and shingle sets for the dedup verifiers).
+
 Scale notes:
 - Pair generation shuffles only skinny ``(block_key, key)`` rows; the
   self-join runs on the block key with AQE skew-join enabled. Cross-band
-  duplicate pairs are removed *before* CLK bytes are attached, so each
-  candidate pair's 2x128 B payload is shuffled exactly once.
+  duplicate pairs are removed *before* the payload is attached, so each
+  candidate pair's payload (2x128 B of CLK) is shuffled exactly once.
 - The payload join is the one point where a record's attributes enter
-  the pair stream: every clks column besides the key, ``clk`` and
-  ``popcount`` (e.g. the user key of an int64 key id) rides through
-  Dice side-tagged, so no caller joins the clks table a second time.
+  the pair stream: every column besides the key (for Dice: ``clk``,
+  ``popcount`` and e.g. the user key of an int64 key id) rides through
+  side-tagged, so no caller joins a side table a second time.
 - Dice is computed in an Arrow UDF over uint8 matrices with a popcount
   LUT — no per-row Python. Stored popcounts are reused for the
   denominator (no re-count of a and b).
@@ -22,7 +30,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -31,7 +39,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..core.vectorized import _POPCOUNT_LUT
 
-__all__ = ["candidate_pairs", "score_candidates"]
+__all__ = ["candidate_pairs", "pair_payload", "score_candidates"]
 
 
 def candidate_pairs(
@@ -76,16 +84,34 @@ def candidate_pairs(
     )
 
 
-def _payload(clks: DataFrame, key_col: str, side: str) -> DataFrame:
-    """``clks`` renamed for one pair side: ``key_<side>``,
-    ``clk_<side>``, ``popcount_<side>`` and every other column ``c`` as
-    ``<side>_c`` (never ``key_<side>``, whatever ``c`` is)."""
-    return clks.select(
-        F.col(key_col).alias(f"key_{side}"),
-        F.col("clk").alias(f"clk_{side}"),
-        F.col("popcount").alias(f"popcount_{side}"),
-        *(F.col(c).alias(f"{side}_{c}") for c in clks.columns
-          if c not in (key_col, "clk", "popcount")),
+def pair_payload(
+    pairs: DataFrame,
+    table: DataFrame,
+    key_col: str,
+    other: Optional[DataFrame] = None,
+) -> DataFrame:
+    """Join each side's row onto ``(key_a, key_b)`` pairs.
+
+    ``table`` is joined once on ``key_a`` and ``other`` (defaults to
+    ``table``) once on ``key_b``. Every column ``c`` of a side other
+    than ``key_col`` arrives as ``a_<c>`` / ``b_<c>`` — never
+    ``key_<side>``, whatever ``c`` is. Output: ``key_a``, ``key_b``,
+    the ``a_*`` columns, then the ``b_*`` columns.
+    """
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        return df.select(
+            F.col(key_col).alias(f"key_{tag}"),
+            *(F.col(c).alias(f"{tag}_{c}") for c in df.columns
+              if c != key_col),
+        )
+
+    payload_a = side(table, "a")
+    payload_b = side(table if other is None else other, "b")
+    return (
+        pairs.join(payload_a, on="key_a")
+        .join(payload_b, on="key_b")
+        .select("key_a", "key_b", *payload_a.columns[1:],
+                *payload_b.columns[1:])
     )
 
 
@@ -99,20 +125,15 @@ def score_candidates(
     """Join CLK payloads onto candidate pairs and keep Dice ≥ threshold.
 
     ``clks`` serves ``key_a``; ``other_clks`` (defaults to ``clks``)
-    serves ``key_b``. Each clks table is joined once, and every column
-    of it other than ``key_col``, ``clk`` and ``popcount`` is carried
-    through to the output as ``a_<col>`` (from ``clks``) or ``b_<col>``
-    (from ``other_clks``). Output: ``key_a``, ``key_b``, the carried
-    ``a_*`` then ``b_*`` columns, ``score``; no CLK or popcount column.
+    serves ``key_b``, through one :func:`pair_payload`. Every clks
+    column other than ``key_col``, ``clk`` and ``popcount`` is carried
+    through to the output as ``a_<col>`` / ``b_<col>``. Output:
+    ``key_a``, ``key_b``, the carried ``a_*`` then ``b_*`` columns,
+    ``score``; no CLK or popcount column.
     """
-    if other_clks is None:
-        other_clks = clks
-    payload_a = _payload(clks, key_col, "a")
-    payload_b = _payload(other_clks, key_col, "b")
-    joined = pairs.join(payload_a, on="key_a").join(payload_b, on="key_b")
-    kept = ["key_a", "key_b"] + [
-        c for payload in (payload_a, payload_b) for c in payload.columns[3:]
-    ]
+    joined = pair_payload(pairs, clks, key_col, other_clks)
+    kept = [c for c in joined.columns if c not in (
+        "a_clk", "a_popcount", "b_clk", "b_popcount")]
 
     # Score + threshold in ONE Arrow pass. The natural
     # ``withColumn(score, udf).where(score >= t)`` makes Catalyst push
@@ -131,20 +152,18 @@ def score_candidates(
             if n == 0:
                 continue
             mat_a = np.frombuffer(
-                b"".join(pdf["clk_a"]), dtype=np.uint8).reshape(n, -1)
+                b"".join(pdf["a_clk"]), dtype=np.uint8).reshape(n, -1)
             mat_b = np.frombuffer(
-                b"".join(pdf["clk_b"]), dtype=np.uint8).reshape(n, -1)
+                b"".join(pdf["b_clk"]), dtype=np.uint8).reshape(n, -1)
             inter = _POPCOUNT_LUT[mat_a & mat_b].sum(axis=1, dtype=np.int64)
-            denom = (pdf["popcount_a"].to_numpy()
-                     + pdf["popcount_b"].to_numpy()).astype(np.float64)
+            denom = (pdf["a_popcount"].to_numpy()
+                     + pdf["b_popcount"].to_numpy()).astype(np.float64)
             with np.errstate(divide="ignore", invalid="ignore"):
                 score = np.where(denom > 0, 2.0 * inter / denom, 0.0)
             keep = score >= threshold
             yield pdf.loc[keep, kept].assign(score=score[keep])
 
-    return joined.select(
-        *kept, "clk_a", "clk_b", "popcount_a", "popcount_b"
-    ).mapInPandas(score_partition, out_schema)
+    return joined.mapInPandas(score_partition, out_schema)
 
 
 def one_to_one_matching(scored_pairs: DataFrame) -> DataFrame:

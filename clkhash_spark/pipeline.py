@@ -320,7 +320,8 @@ class StageStore:
         path = os.path.join(self.root, stage)
         start = time.time()
         df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
+        # the schema just written: no schema-inference job on read-back
+        out = self.spark.read.schema(df.schema).parquet(path)
         self.manifest["stages"][stage] = {
             "fingerprint": fingerprint,
             **_counted(out, start),
@@ -656,6 +657,40 @@ def _check_unique_kids(clks: DataFrame, key_col: str, single: bool) -> None:
         "key id; rename one of them")
 
 
+def _check_config(config: LinkageConfig,
+                  parties: Sequence[DataFrame]) -> None:
+    """Reject an out-of-range field or a missing column by name, before
+    any Spark job (an out-of-range value otherwise links nothing or
+    fails deep inside banding)."""
+    bands, bits = config.num_bands, config.bits_per_band
+    matches = config.min_band_matches
+    checks = (
+        ("threshold", 0 <= config.threshold <= 1, "[0, 1]"),
+        ("num_bands", bands is None or bands >= 1, ">= 1 or None"),
+        ("bits_per_band", bits is None or 1 <= bits <= 48, "[1, 48] or None"),
+        ("min_band_matches", 1 <= matches <= (bands or matches),
+         f"[1, num_bands={bands}]" if bands else ">= 1"),
+        ("target_candidates_per_row", config.target_candidates_per_row > 0,
+         "> 0"),
+        ("max_block_size",
+         config.max_block_size is not None and config.max_block_size >= 1,
+         ">= 1"),
+        ("cluster_driver_gate_edges", config.cluster_driver_gate_edges >= 0,
+         ">= 0"),
+    )
+    for name, ok, valid in checks:
+        if not ok:
+            raise ValueError(f"LinkageConfig.{name}="
+                             f"{getattr(config, name)!r} must be {valid}")
+    columns = [("key_col", config.key_col)] + [
+        ("feature_cols", c) for c in config.feature_cols or () if c]
+    for party, df in enumerate(parties):
+        for name, col in columns:
+            if col not in df.columns:
+                raise ValueError(f"LinkageConfig.{name} {col!r} is not a "
+                                 f"column of party {party}: {df.columns}")
+
+
 def _run_graph(
     spark: SparkSession,
     parties: Sequence[DataFrame],
@@ -664,6 +699,7 @@ def _run_graph(
 ) -> LinkageResult:
     """The stage graph (module docstring) over one or two parties;
     ``one_to_one`` is ``None`` for one table."""
+    _check_config(config, parties)
     metrics: Dict[str, Any] = {}
     runner = _StageRunner(spark, config, metrics)
     key, kid = config.key_col, "_kid"

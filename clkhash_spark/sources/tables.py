@@ -1,4 +1,4 @@
-"""Stage-table utilities: partial resume and sinks.
+"""Stage-table utilities: per-key partial resume.
 
 Complements :class:`clkhash_spark.pipeline.StageStore` (whole-stage
 snapshot resume) with *per-key* resume — the left-anti-join pattern for
@@ -14,7 +14,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["missing_keys", "append_new", "write_snapshot"]
+__all__ = ["missing_keys", "append_new"]
 
 
 def missing_keys(
@@ -57,18 +57,3 @@ def append_new(
     to_write.write.mode("append").parquet(path)
     return spark.read.parquet(path)
 
-
-def write_snapshot(
-    df: DataFrame, path: str, partition_by: Optional[Sequence[str]] = None
-) -> None:
-    """Overwrite a stage snapshot (optionally partitioned).
-
-    Partitioning by a low-cardinality derived column (e.g.
-    ``pmod(xxhash64(url), 256)``) gives downstream partition pruning and
-    bounded file sizes at scale; on a real deployment this maps to an
-    Iceberg ``writeTo().overwritePartitions()``.
-    """
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -8,8 +8,10 @@ round introduced must survive refactors.
   outputs persisted (with a StageStore, only the blocks cache)
 - per-stage Spark job counts of the blocks, pairs and clusters
   stages and of the key-id check, for one and two parties, with the
-  skew cap idle or splitting; a fully resumed run starts no ungrouped
-  job besides the key-id check
+  skew cap idle or splitting, in memory and with a fresh StageStore; a
+  fully resumed run starts no ungrouped job besides the key-id check
+- an out-of-range LinkageConfig field or a missing column is named
+  before any Spark job
 - the skew cap's accounting: a resumed blocks stage restores the fresh
   run's, and an empty table or party B links nothing, reports zeros
   and is not counted again
@@ -228,6 +230,27 @@ class TestStageJobCounts:
         assert grown == [blocks_jobs, pairs_jobs, clusters_jobs, 2], dict(
             zip(groups, grown))
 
+    @pytest.mark.parametrize("parties, max_block_size, expected", [
+        (1, 2000, {"clk:clks": 3, "clk:blocks": 6, "clk:pairs": 9,
+                   "clk:clusters": 5, None: 2}),
+        (1, 16, {"clk:clks": 3, "clk:blocks": 7, "clk:pairs": 9,
+                 "clk:clusters": 5, None: 2}),
+        (2, 2000, {"clk:clks_a": 3, "clk:clks_b": 3, "clk:blocks": 6,
+                   "clk:pairs": 12, "clk:clusters": 5, None: 2}),
+        (2, 16, {"clk:clks_a": 3, "clk:clks_b": 3, "clk:blocks": 7,
+                 "clk:pairs": 12, "clk:clusters": 5, None: 2}),
+    ], ids=["store-cap_idle", "store-cap_split", "store-two_party-cap_idle",
+            "store-two_party-cap_split"])
+    def test_fresh_store_job_counts(self, spark, tmp_path, parties,
+                                    max_block_size, expected):
+        # A fresh StageStore adds each stored stage's write and the
+        # 2-job count of its read-back; the read-back takes the written
+        # schema, so no schema-inference job.
+        config = {"max_block_size": max_block_size,
+                  "checkpoint_dir": str(tmp_path)}
+        assert _new_jobs(spark, lambda: _run_skewed(spark, parties,
+                                                    **config)) == expected
+
     @pytest.mark.parametrize("parties", [1, 2])
     def test_resumed_run_groups_every_stage_job(self, spark, tmp_path,
                                                 parties):
@@ -242,6 +265,51 @@ class TestStageJobCounts:
         ungrouped = jobs.pop(None, 0)
         assert ungrouped == 2, (ungrouped, jobs)
         assert jobs and all(g.startswith("clk:") for g in jobs), jobs
+
+
+class TestConfigCheck:
+    # Each out-of-range field is named before any Spark job starts.
+    @pytest.mark.parametrize("parties, field, config", [
+        (1, "threshold", {"threshold": 1.5}),
+        (1, "threshold", {"threshold": -0.1}),
+        (1, "num_bands", {"num_bands": 0}),
+        (1, "bits_per_band", {"bits_per_band": 60}),
+        (1, "bits_per_band", {"bits_per_band": 0}),
+        (1, "min_band_matches", {"min_band_matches": 17}),
+        (1, "min_band_matches", {"min_band_matches": 0}),
+        (1, "target_candidates_per_row",
+         {"num_bands": None, "bits_per_band": None,
+          "target_candidates_per_row": 0}),
+        (1, "max_block_size", {"max_block_size": 0}),
+        (1, "cluster_driver_gate_edges", {"cluster_driver_gate_edges": -5}),
+        (1, "key_col", {"key_col": "page"}),
+        (1, "feature_cols", {"feature_cols": ["body"]}),
+        (2, "key_col", {}),
+    ])
+    def test_bad_config_raises_by_name_before_any_job(self, spark, parties,
+                                                      field, config):
+        from clkhash_spark.pipeline import (
+            LinkageConfig, run_linkage, run_linkage_two_party,
+            webpages_schema,
+        )
+
+        from .test_round3_fixes import _two_party_with_boilerplate
+
+        party_a, party_b, _ = _two_party_with_boilerplate(spark)
+        config = LinkageConfig(**{
+            "schema": webpages_schema(), "secret": "s", "num_bands": 16,
+            "bits_per_band": 16, **config})
+
+        def run():
+            with pytest.raises(ValueError, match=f"LinkageConfig.{field}"):
+                if parties == 1:
+                    run_linkage(spark, party_a.unionByName(party_b), config)
+                else:  # party B lacks the key column
+                    run_linkage_two_party(
+                        spark, party_a,
+                        party_b.withColumnRenamed("url", "page"), config)
+
+        assert _new_jobs(spark, run) == {}
 
 
 _NO_CAP_ACCOUNTING = {"oversized_blocks": 0, "rows_in_oversized": 0,

@@ -22,6 +22,7 @@ from clkhash_spark.operators.evaluate import (
 from clkhash_spark.operators.scoring import (
     candidate_pairs,
     one_to_one_matching,
+    pair_payload,
     score_candidates,
 )
 from clkhash_spark.pipeline import (
@@ -266,6 +267,31 @@ class TestScoring:
             assert abs(row["score"] - oracle(row["a_url"], row["b_url"])
                        ) < 1e-12
         sample.unpersist()
+
+    def test_pair_payload_tags_each_side(self, spark):
+        pairs = spark.createDataFrame([(1, 10), (2, 20), (1, 20)],
+                                      ["key_a", "key_b"])
+        side_a = spark.createDataFrame(
+            [(1, "x1", 1.5), (2, "x2", 2.5), (3, "x3", 3.5)],
+            ["id", "name", "weight"])
+        # a side column named ``key`` arrives as b_key, never as key_b
+        side_b = spark.createDataFrame(
+            [("y10", 10, 100), ("y20", 20, 200), ("y30", 30, 300)],
+            ["key", "id", "n"])
+        out = pair_payload(pairs, side_a, "id", other=side_b)
+        assert out.columns == ["key_a", "key_b", "a_name", "a_weight",
+                               "b_key", "b_n"]
+        assert sorted(tuple(r) for r in out.collect()) == [
+            (1, 10, "x1", 1.5, "y10", 100),
+            (1, 20, "x1", 1.5, "y20", 200),
+            (2, 20, "x2", 2.5, "y20", 200),
+        ]
+        # one table serves both sides by default
+        own = pair_payload(pairs.where(F.col("key_b") == 20)
+                           .select("key_a", F.lit(3).alias("key_b")),
+                           side_a, "id")
+        assert sorted(tuple(r) for r in own.collect()) == [
+            (1, 3, "x1", 1.5, "x3", 3.5), (2, 3, "x2", 2.5, "x3", 3.5)]
 
     def test_pairs_are_canonical_and_deduped(self, spark, small_linkage):
         pages, config, result = small_linkage
