@@ -2,7 +2,24 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Any, Dict, Optional
+
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
+
+
+def materialize(df: DataFrame, path: Optional[str] = None,
+                **observed: Column) -> Dict[str, Any]:
+    """Run the one action that materializes ``df``, a parquet write to
+    ``path`` or else a ``noop`` write (which fills a lazy
+    ``localCheckpoint`` or a cache), and return what an ``Observation``
+    on it saw: ``rows`` and each ``observed`` aggregate."""
+    observation = Observation()
+    watched = df.observe(observation, F.count(F.lit(1)).alias("rows"),
+                         *(col.alias(k) for k, col in observed.items()))
+    watched.write.format("parquet" if path else "noop").mode(
+        "overwrite").save(path)
+    return observation.get
 
 
 def widen_if_narrow(df: DataFrame) -> DataFrame:

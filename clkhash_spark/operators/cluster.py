@@ -16,46 +16,23 @@ minimum id on one of two paths:
   (itself included); *small-star*, orienting edges large→small,
   attaches every node and its smaller neighbours to the neighbourhood
   minimum. Each is one shuffle aggregation + one join, and edges shrink
-  to stars. A lazy ``localCheckpoint`` per round cuts lineage, and an
-  ``Observation`` on the round's materializing action collects the
-  edge-set checksum (count + hash sum) that detects convergence — one
-  job per round, no data collect.
+  to stars. A lazy ``localCheckpoint`` per round cuts lineage; the
+  ``noop`` write that fills it observes the edge-set checksum (count +
+  hash sum) that detects convergence. A round is 8 jobs on a 64-edge
+  chain (local[4]): that write plus 7 shuffle stages that adaptive
+  execution runs while planning the checkpoint.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Tuple
+from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._util import materialize
+
 __all__ = ["cluster_records"]
-
-
-def _materialize_with_checksum(
-    df: DataFrame,
-) -> Tuple[DataFrame, Tuple[int, int]]:
-    """Checkpoint + convergence checksum in ONE Spark job.
-
-    A non-eager localCheckpoint materializes during the ``count``
-    action, and an ``Observation`` rides the same action to collect the
-    edge-set checksum — halving the per-round job count vs the old
-    eager-checkpoint-then-aggregate pair (per-round driver latency is
-    what dominates clustering wall time at small scale)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = df.localCheckpoint(eager=False).observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        # mod 2^31 per row so the sum can never overflow a long
-        F.coalesce(
-            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 31))), F.lit(0)
-        ).alias("h"),
-    )
-    out.count()
-    metrics = obs.get
-    return out, (int(metrics["n"]), int(metrics["h"]))
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -171,8 +148,8 @@ def _component_labels(
     ``known_edge_bound``, when given, upper-bounds the edge count: at or
     below the gate the edges go to the driver directly, repeats
     included — the union-find accepts them — with no distinct and no
-    materialize-and-checksum job. Otherwise the deduplicated edges are
-    materialized once, their count rides that job's checksum, and the
+    materialize-and-checksum action. Otherwise the deduplicated edges are
+    materialized once, their count rides that action's checksum, and the
     gate picks the driver union-find or the distributed star
     contraction. A gate of 0 always takes the distributed path, even
     for an empty edge set."""
@@ -183,17 +160,21 @@ def _component_labels(
     ):
         return _driver_labels(edges)
 
-    edges, signature = _materialize_with_checksum(edges.distinct())
-    if signature[0] == 0:
+    # the edge set's signature: its row count and this hash sum, taken
+    # mod 2^31 per row so the sum can never overflow a long
+    checksum = F.coalesce(
+        F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 31))), F.lit(0))
+    edges = edges.distinct().localCheckpoint(eager=False)
+    signature = materialize(edges, h=checksum)
+    if signature["rows"] == 0:
         return None
-    if signature[0] <= small_graph_edges:
+    if signature["rows"] <= small_graph_edges:
         return _driver_labels(edges)
 
     converged = False
     for _ in range(max_iterations):
-        edges, new_signature = _materialize_with_checksum(
-            _small_star(_large_star(edges))
-        )
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        new_signature = materialize(edges, h=checksum)
         if new_signature == signature:
             converged = True
             break

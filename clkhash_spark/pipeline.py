@@ -15,9 +15,11 @@ its CLK, and one aggregate then checks that no two records share an id
 
 One materialization rule, owned by ``_StageRunner``: ``blocks`` is
 hash-partitioned by ``block_key`` and persisted, so the skew cap and
-both pair-join sides reuse one exchange; every other stage ends in a
-lazy ``localCheckpoint`` + count that cuts its lineage. A scratch
-cache is released when the stage that made it ends, unless it is that
+both pair-join sides reuse one exchange; every other stage is a lazy
+``localCheckpoint``, or with a StageStore its parquet read-back. One
+action makes and counts each stage (a ``noop`` or the parquet write),
+so a StageStore run starts the in-memory run's jobs. A scratch cache
+is released when the stage that made it ends, unless it is that
 stage's output; a resumed stage restores the metrics its build added.
 
 Two stages keep their Spark actions few. ``blocks`` certifies the skew
@@ -48,8 +50,10 @@ from typing import Any, Dict, List, Optional, Sequence, Union
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .core.schema import Schema
+from .operators._util import materialize
 from .operators.blocking import block_keys, cap_block_size
 from .operators.cluster import cluster_records
 from .operators.encode import encode_clks
@@ -240,7 +244,6 @@ class LinkageConfig:
     max_block_size: int = 2000
     validate: bool = False
     checkpoint_dir: Optional[str] = None
-    resume: bool = True
     # Matched-pair graphs at or below this edge count are clustered
     # driver-side (Arrow transfer, 16 B/edge → ≤64 MB at the default;
     # vectorized hook+jump labelling) instead of O(log n) rounds of
@@ -267,19 +270,11 @@ class LinkageResult:
     config: Optional[LinkageConfig] = None
 
 
-def _counted(df: DataFrame, start: float) -> Dict[str, Any]:
-    """Count ``df``: its rows, and the seconds and rows/s since ``start``."""
-    rows = df.count()
-    elapsed = time.time() - start
-    return {"rows": rows, "seconds": round(elapsed, 3),
-            "rows_per_sec": round(rows / elapsed, 1) if elapsed else None}
-
-
 class StageStore:
     """Parquet-with-manifest stage checkpointing (Iceberg stand-in).
 
     Each stage writes to ``<root>/<stage>/`` and records a manifest entry
-    (row count, wall time, config fingerprint). A completed stage is
+    (row count, schema, config fingerprint). A completed stage is
     *resumed* — read back instead of recomputed — when the fingerprint
     matches, which is what makes a killed job cheap to restart.
     """
@@ -303,28 +298,32 @@ class StageStore:
 
     def has(self, stage: str, fingerprint: str) -> bool:
         entry = self.manifest["stages"].get(stage)
+        # an entry without a schema predates the stored schema: recompute
         return bool(entry and entry.get("fingerprint") == fingerprint
-                    and entry.get("complete"))
+                    and entry.get("complete") and entry.get("schema"))
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, stage))
+        # the stored schema: no schema-inference job
+        schema = StructType.fromJson(
+            json.loads(self.manifest["stages"][stage]["schema"]))
+        return self.spark.read.schema(schema).parquet(
+            os.path.join(self.root, stage))
 
     def write(
         self, stage: str, df: DataFrame, fingerprint: str, parents=(),
         metrics: Optional[Dict[str, Any]] = None,
-    ) -> DataFrame:
-        """Write a stage table; ``parents`` names the upstream stages
-        whose fingerprints are recorded as its lineage — the audit trail
-        an Iceberg snapshot chain would carry — and ``metrics`` holds
-        the values a resumed run restores."""
+    ) -> int:
+        """Write a stage table in one action and return its row count;
+        ``parents`` names the upstream stages whose fingerprints are
+        recorded as its lineage — the audit trail an Iceberg snapshot
+        chain would carry — and ``metrics`` holds the values a resumed
+        run restores."""
         path = os.path.join(self.root, stage)
-        start = time.time()
-        df.write.mode("overwrite").parquet(path)
-        # the schema just written: no schema-inference job on read-back
-        out = self.spark.read.schema(df.schema).parquet(path)
+        rows = materialize(df, path)["rows"]
         self.manifest["stages"][stage] = {
             "fingerprint": fingerprint,
-            **_counted(out, start),
+            "rows": rows,
+            "schema": df.schema.json(),
             "complete": True,
             "lineage": {
                 p: self.manifest["stages"].get(p, {}).get("fingerprint")
@@ -333,7 +332,7 @@ class StageStore:
             "metrics": metrics or {},
         }
         self._save_manifest()
-        return out
+        return rows
 
 
 # Partition budget for the banded-rows exchange: skinny (long, long)
@@ -529,8 +528,9 @@ class _StageRunner:
     stage wants the lineage cut: downstream plans otherwise embed
     several copies of the upstream tree, and Catalyst analysis over
     them cost ~10 s of driver-only gaps per 100k-row run
-    (OPTIMIZATION_r06.md). A StageStore's parquet round trip cuts
-    lineage the same way.
+    (OPTIMIZATION_r06.md). A StageStore's parquet read-back cuts
+    lineage the same way; a stored blocks stage writes from its cache
+    and keeps it, so only a resumed blocks stage is re-partitioned.
     """
 
     def __init__(
@@ -545,7 +545,6 @@ class _StageRunner:
             if config.checkpoint_dir
             else None
         )
-        self.resume = config.resume
         self.metrics = metrics
         # Set by the graph once banding fixes the banded-row volume.
         self.block_partitions: Optional[int] = None
@@ -562,7 +561,7 @@ class _StageRunner:
         if name == "blocks":
             return df if df.is_cached else self.partition_blocks(df)
         if self.store is not None:
-            return df  # a parquet read-back: lineage already cut
+            return df  # the stage's write materializes it; read back after
         return df.localCheckpoint(eager=False)
 
     def run(self, name: str, fp: str, build, parents=()) -> DataFrame:
@@ -581,26 +580,28 @@ class _StageRunner:
             sc.setLocalProperty(
                 "spark.job.description", f"clkhash stage {name}"
             )
-            if store is not None and self.resume and store.has(name, fp):
+            if store is not None and store.has(name, fp):
                 self.metrics[f"{name}_resumed"] = True
                 entry = store.manifest["stages"][name]
-                self.metrics[f"{name}_rows"] = entry.get("rows")
-                self.metrics.update(entry.get("metrics", {}))
+                self.metrics[f"{name}_rows"] = entry["rows"]
+                self.metrics.update(entry["metrics"])
                 output = self._keep(name, store.read(name))
                 return output
             start, known = time.time(), set(self.metrics)
-            df = build()
-            if store is not None:
+            df = self._keep(name, build())
+            if store is None:
+                rows = materialize(df)["rows"]
+            else:
                 added = {k: v for k, v in self.metrics.items()
                          if k not in known}  # e.g. the cap's accounting
-                df = self._keep(name, store.write(name, df, fp, parents,
-                                                  added))
-                entry = store.manifest["stages"][name]
-            else:
-                df = self._keep(name, df)
-                entry = _counted(df, start)
-            for stat in ("rows", "seconds", "rows_per_sec"):
-                self.metrics[f"{name}_{stat}"] = entry[stat]
+                rows = store.write(name, df, fp, parents, added)
+                if name != "blocks":
+                    df = store.read(name)
+            elapsed = time.time() - start
+            self.metrics.update({f"{name}_rows": rows,
+                                 f"{name}_seconds": round(elapsed, 3),
+                                 f"{name}_rows_per_sec": round(
+                                     rows / elapsed, 1) if elapsed else None})
             output = df
             return df
         finally:

@@ -6,10 +6,12 @@ round introduced must survive refactors.
   for one and two parties, with the skew cap idle or splitting; blocks
   stay a block_key-partitioned cache, and a run leaves only its stage
   outputs persisted (with a StageStore, only the blocks cache)
-- per-stage Spark job counts of the blocks, pairs and clusters
-  stages and of the key-id check, for one and two parties, with the
-  skew cap idle or splitting, in memory and with a fresh StageStore; a
-  fully resumed run starts no ungrouped job besides the key-id check
+- per-stage Spark job counts of every stage and of the key-id check,
+  for one and two parties, with the skew cap idle or splitting: one
+  table of counts holds in memory and with a fresh StageStore, and a
+  fully resumed run starts only the key-id check's jobs
+- no store, a fresh StageStore and a resumed run give the same pairs
+  and clusters, and the manifest's row counts are the tables' counts
 - an out-of-range LinkageConfig field or a missing column is named
   before any Spark job
 - the skew cap's accounting: a resumed blocks stage restores the fresh
@@ -165,7 +167,7 @@ class TestStageCaches:
         try:
             # the scratch cache (the uncapped blocks) is released when the
             # blocks stage ends unless it is that stage's output, which it
-            # is not when the cap rewrote it or a StageStore read it back
+            # is not when the cap rewrote it
             assert len(grown) == outputs, sorted(grown)
             # the key id is stage-internal
             assert "_kid" not in result.clks.columns
@@ -200,54 +202,38 @@ def _new_jobs(spark, run):
     return counts
 
 
+_JOB_COUNTS = [
+    # parties, max_block_size, Spark jobs per stage group
+    (1, 2000, {"clk:clks": 1, "clk:blocks": 4, "clk:pairs": 4,
+               "clk:clusters": 3, None: 2}),
+    (1, 16, {"clk:clks": 1, "clk:blocks": 7, "clk:pairs": 4,
+             "clk:clusters": 3, None: 2}),
+    (2, 2000, {"clk:clks_a": 1, "clk:clks_b": 1, "clk:blocks": 4,
+               "clk:pairs": 7, "clk:clusters": 3, None: 2}),
+    (2, 16, {"clk:clks_a": 1, "clk:clks_b": 1, "clk:blocks": 7,
+             "clk:pairs": 7, "clk:clusters": 3, None: 2}),
+]
+_JOB_COUNT_IDS = ["cap_idle", "cap_split", "two_party-cap_idle",
+                  "two_party-cap_split"]
+
+
 class TestStageJobCounts:
     # Spark jobs per stage group, one table or two parties, cap idle /
-    # cap split. With banding pinned the only ungrouped (None) jobs are
-    # the key-id check between the clks stages and banding.
+    # cap split, in memory and with a fresh StageStore. Each stage ends
+    # in one action, a noop or a parquet write that also counts it, so
+    # both modes start the same jobs. With banding pinned the only
+    # ungrouped (None) jobs are the key-id check between the clks stages
+    # and banding.
     @pytest.mark.parametrize(
-        "parties, config, blocks_jobs, pairs_jobs, clusters_jobs", [
-            (1, {"max_block_size": 2000}, 5, 5, 4),
-            (1, {"max_block_size": 16}, 8, 5, 4),
-            (2, {"max_block_size": 2000}, 5, 8, 4),
-            (2, {"max_block_size": 16}, 8, 8, 4),
-        ], ids=["cap_idle", "cap_split", "two_party-cap_idle",
-                "two_party-cap_split"])
-    def test_blocks_and_clusters_job_counts(self, spark, parties, config,
-                                            blocks_jobs, pairs_jobs,
-                                            clusters_jobs):
-        tracker = spark.sparkContext.statusTracker()
-        groups = ("clk:blocks", "clk:pairs", "clk:clusters", None)
-
-        def jobs():
-            return [set(tracker.getJobIdsForGroup(g)) for g in groups]
-
-        # groups accumulate over the session: count this run's jobs as
-        # new job ids, which the status store's eviction of older jobs
-        # (past spark.ui.retainedJobs) cannot skew
-        before = jobs()
-        _run_skewed(spark, parties, **config)
-        grown = [len(a - b) for a, b in zip(jobs(), before)]
-        assert grown == [blocks_jobs, pairs_jobs, clusters_jobs, 2], dict(
-            zip(groups, grown))
-
-    @pytest.mark.parametrize("parties, max_block_size, expected", [
-        (1, 2000, {"clk:clks": 3, "clk:blocks": 6, "clk:pairs": 9,
-                   "clk:clusters": 5, None: 2}),
-        (1, 16, {"clk:clks": 3, "clk:blocks": 7, "clk:pairs": 9,
-                 "clk:clusters": 5, None: 2}),
-        (2, 2000, {"clk:clks_a": 3, "clk:clks_b": 3, "clk:blocks": 6,
-                   "clk:pairs": 12, "clk:clusters": 5, None: 2}),
-        (2, 16, {"clk:clks_a": 3, "clk:clks_b": 3, "clk:blocks": 7,
-                 "clk:pairs": 12, "clk:clusters": 5, None: 2}),
-    ], ids=["store-cap_idle", "store-cap_split", "store-two_party-cap_idle",
-            "store-two_party-cap_split"])
-    def test_fresh_store_job_counts(self, spark, tmp_path, parties,
-                                    max_block_size, expected):
-        # A fresh StageStore adds each stored stage's write and the
-        # 2-job count of its read-back; the read-back takes the written
-        # schema, so no schema-inference job.
-        config = {"max_block_size": max_block_size,
-                  "checkpoint_dir": str(tmp_path)}
+        "store, parties, max_block_size, expected",
+        [(store, *row) for store in (False, True) for row in _JOB_COUNTS],
+        ids=_JOB_COUNT_IDS + [f"store-{i}" for i in _JOB_COUNT_IDS])
+    def test_blocks_and_clusters_job_counts(self, spark, tmp_path, store,
+                                            parties, max_block_size,
+                                            expected):
+        config = {"max_block_size": max_block_size}
+        if store:
+            config["checkpoint_dir"] = str(tmp_path)
         assert _new_jobs(spark, lambda: _run_skewed(spark, parties,
                                                     **config)) == expected
 
@@ -255,16 +241,48 @@ class TestStageJobCounts:
     def test_resumed_run_groups_every_stage_job(self, spark, tmp_path,
                                                 parties):
         # A fully resumed run reads every stage back from the StageStore
-        # under the stage's own group; only the key-id check (2 jobs)
-        # runs ungrouped.
+        # with its stored schema, which starts no job; only the key-id
+        # check (2 jobs) runs.
         config = {"max_block_size": 16, "checkpoint_dir": str(tmp_path),
                   "input_fingerprint": "skewed"}
         _run_skewed(spark, parties, **config)
         jobs = _new_jobs(spark, lambda: _run_skewed(spark, parties,
                                                     **config))
-        ungrouped = jobs.pop(None, 0)
-        assert ungrouped == 2, (ungrouped, jobs)
-        assert jobs and all(g.startswith("clk:") for g in jobs), jobs
+        assert jobs == {None: 2}, jobs
+
+
+class TestStageStoreParity:
+    @pytest.mark.parametrize("parties", [1, 2])
+    @pytest.mark.parametrize("max_block_size", [2000, 16],
+                             ids=["cap_idle", "cap_split"])
+    def test_store_runs_match_memory_run(self, spark, tmp_path, parties,
+                                         max_block_size):
+        # No store, a fresh StageStore and a fully resumed run link the
+        # same pairs and clusters, and every stage's manifest row count is
+        # the count of its table and the in-memory run's row count.
+        import json
+
+        stored = {"max_block_size": max_block_size,
+                  "checkpoint_dir": str(tmp_path)}
+        memory = _run_skewed(spark, parties, max_block_size=max_block_size)
+        fresh = _run_skewed(spark, parties, **stored)
+        resumed = _run_skewed(spark, parties, **stored)
+        assert "clusters_resumed" not in fresh.metrics
+        assert resumed.metrics["clusters_resumed"]
+        for name in ("pairs", "clusters"):
+            memory_rows = sorted(getattr(memory, name).collect())
+            assert memory_rows
+            for run in (fresh, resumed):
+                assert sorted(getattr(run, name).collect()) == memory_rows
+        with open(tmp_path / "_clkhash_manifest.json") as fp:
+            manifest = json.load(fp)["stages"]
+        stages = (["clks"] if parties == 1 else ["clks_a", "clks_b"]) + [
+            "blocks", "pairs", "clusters"]
+        assert sorted(manifest) == sorted(stages)
+        for stage in stages:
+            table = spark.read.parquet(str(tmp_path / stage)).count()
+            assert manifest[stage]["rows"] == table == memory.metrics[
+                f"{stage}_rows"] == resumed.metrics[f"{stage}_rows"], stage
 
 
 class TestConfigCheck:
