@@ -54,6 +54,8 @@ class Schema:
         derivation counts them).
     :ivar l: CLK length in bits *after* XOR folding.
     :ivar xor_folds: number of XOR folds.
+    :ivar doc: the v3 schema document it was built from (``None`` when
+        built directly) — the identity a stage checkpoint hashes.
     """
 
     def __init__(
@@ -66,6 +68,7 @@ class Schema:
         kdf_info: Optional[bytes] = None,
         kdf_salt: Optional[bytes] = None,
         kdf_key_size: int = DEFAULT_KEY_SIZE,
+        doc: Optional[Dict[str, Any]] = None,
     ) -> None:
         self.fields = list(fields)
         self.l = l
@@ -75,6 +78,7 @@ class Schema:
         self.kdf_info = kdf_info
         self.kdf_salt = kdf_salt
         self.kdf_key_size = kdf_key_size
+        self.doc = doc
 
     @property
     def hash_l(self) -> int:
@@ -337,6 +341,7 @@ def from_json_dict(doc: Dict[str, Any], validate: bool = True) -> Schema:
         kdf_info=kdf_info,
         kdf_salt=kdf_salt,
         kdf_key_size=kdf.get("keySize", DEFAULT_KEY_SIZE),
+        doc=deepcopy(doc),
     )
 
 

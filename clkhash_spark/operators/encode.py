@@ -56,10 +56,9 @@ def encode_clks(
     key_cols: Sequence[str] = ("url",),
     feature_cols: Optional[Sequence[str]] = None,
     validate: bool = False,
-    clk_col: str = "clk",
-    popcount_col: str = "popcount",
 ) -> DataFrame:
-    """Encode every row of ``df`` into a packed CLK + popcount.
+    """Encode every row of ``df`` into a packed CLK (``clk``) and its
+    ``popcount``.
 
     :param df: input DataFrame.
     :param schema: linkage schema; field ``i`` reads ``feature_cols[i]``.
@@ -109,8 +108,8 @@ def encode_clks(
     out_schema = StructType(
         list(key_fields)
         + [
-            StructField(clk_col, BinaryType(), False),
-            StructField(popcount_col, IntegerType(), False),
+            StructField("clk", BinaryType(), False),
+            StructField("popcount", IntegerType(), False),
         ]
     )
 
@@ -139,8 +138,8 @@ def encode_clks(
                     columns.append(series)
             clks, popcounts = encoder.encode_to_lists(columns)
             out = {c: pdf[c] for c in key_cols}
-            out[clk_col] = clks
-            out[popcount_col] = popcounts
+            out["clk"] = clks
+            out["popcount"] = popcounts
             yield pd.DataFrame(out)
 
     return projected.mapInPandas(encode_partition, out_schema)

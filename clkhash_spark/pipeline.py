@@ -32,7 +32,11 @@ key and unique because the checked key ids are.
 With ``checkpoint_dir`` set, stage tables are parquet directories with
 a JSON manifest (`_clkhash_manifest.json`) — the sandbox stand-in for
 Iceberg snapshot tables; on a real cluster swap :class:`StageStore` for
-Iceberg ``writeTo``/snapshots without touching the operator code.
+Iceberg ``writeTo``/snapshots without touching the operator code. A
+stored stage resumes when its fingerprint — its own settings chained
+with its parents' fingerprints (:func:`_stage_fingerprint`) — matches.
+An in-memory input has no source files to identify it, so a store run
+over one must set ``input_fingerprint``.
 """
 
 from __future__ import annotations
@@ -106,31 +110,47 @@ def webpages_schema() -> Schema:
 # whose budget-derived bit depth still predicts the recall target.
 _BAND_GRID = (16, 20, 24, 28, 32, 40, 48, 56, 64, 80, 96, 128, 192, 256,
               384, 512)
+# Scored-candidate budget per row the bit depth is sized for.
+_TARGET_CANDIDATES_PER_ROW = 20.0
+# Recall floor of the band search, derived from the F1 >= 0.99 gate with
+# margin for the model's measured ~2x error band (see tuned_blocking).
+_TARGET_RECALL = 0.9925
+# Per-bit agreement of a marginal duplicate pair. CALIBRATED against
+# measured recall, not assumed: a round-4 counter-verified A/B at 600k
+# rows (local[8], r=24) measured pair-miss 0.0099 at b=64 and 0.0201 at
+# b=48, plus 0.0241 at b=56/r=26 — no value fits all three exactly
+# (duplicate agreement is a DISTRIBUTION with a Dice≈0.76 tail, not a
+# point), but 0.91 stays within ~2x of every measurement (0.93, the
+# typical-pair value, under-predicted the tail's misses 15x and let the
+# search cut bands straight through the F1 gate: 0.9899 measured at
+# b=48).
+_DUPLICATE_AGREEMENT = 0.91
+
+
+def _band_recall(bands: int, bits: int, min_band_matches: int,
+                 duplicate_agreement: float) -> float:
+    """``P(Binom(bands, a_d^bits) >= min_band_matches)``: the chance a
+    duplicate whose bits agree with probability ``a_d`` collides in at
+    least ``min_band_matches`` of ``bands`` bands (0 when there are
+    fewer bands than that)."""
+    p = duplicate_agreement ** bits
+    return 1 - sum(math.comb(bands, k) * p ** k * (1 - p) ** (bands - k)
+                   for k in range(min_band_matches))
 
 
 def tuned_blocking(
     n_rows: int,
     num_bands: Optional[int] = None,
     unrelated_agreement: float = 0.57,
-    # CALIBRATED against measured recall, not assumed: a round-4
-    # counter-verified A/B at 600k rows (local[8], r=24) measured
-    # pair-miss 0.0099 at b=64 and 0.0201 at b=48, plus 0.0241 at
-    # b=56/r=26 — no value fits all three exactly (duplicate agreement
-    # is a DISTRIBUTION with a Dice≈0.76 tail, not a point), but 0.91
-    # stays within ~2x of every measurement (0.93, the typical-pair
-    # value, under-predicted the tail's misses 15x and let the search
-    # cut bands straight through the F1 gate: 0.9899 measured at b=48).
-    duplicate_agreement: float = 0.91,
-    target_candidates_per_row: float = 20.0,
+    duplicate_agreement: float = _DUPLICATE_AGREEMENT,
     min_band_matches: int = 2,
-    target_recall: float = 0.9925,
 ) -> Dict[str, int]:
     """Scale-aware LSH band sizing.
 
     Two CLK bits of *unrelated* records agree with probability
     ``1 - 2f(1-f)`` (~0.57 at fill 0.32) regardless of content, so
     spurious candidates grow with n² while true pairs grow with n.
-    Holding candidates to ``target_candidates_per_row · n``:
+    Holding candidates to ``_TARGET_CANDIDATES_PER_ROW · n`` (20 · n):
 
     - ``min_band_matches=1``: leakage ``≈ n²/2 · b·a_u^r`` →
       ``r ≈ log(2·target/(n·b)) / log(a_u)`` (22 bits ≈ 100k rows,
@@ -141,31 +161,32 @@ def tuned_blocking(
       28 ≈ 10^12 — CLK-bit LSH stays viable at web scale).
 
     Recall per true pair (worst-case band agreement for a marginal
-    duplicate): ``P(Binom(b, a_d^r) ≥ m)``.
+    duplicate): ``P(Binom(b, a_d^r) ≥ m)``, the exact binomial tail for
+    any ``m`` (:func:`_band_recall`).
 
     ``num_bands=None`` (default) *searches* the band count: every
     banded row is shuffle volume (b rows per record through the blocks
     exchange — the pipeline's dominant mover, 1.49 GB at 2M rows under
     the old fixed b=64), so the tuner picks the SMALLEST band count on
     ``_BAND_GRID`` meeting the recall target — never more bands than
-    the (calibrated) model needs, never fewer than the F1 gate allows.
+    the (calibrated) model needs, never fewer than the F1 gate allows,
+    and never fewer than ``m`` (such a count has recall 0).
 
     The recall target itself is volume-aware: the allowed per-pair miss
-    probability is ``min(1 - target_recall, max(1e-5, n/1e8))`` — a
+    probability is ``min(1 - _TARGET_RECALL, max(1e-5, n/1e8))`` — a
     marginal band costs O(n) shuffle but buys a fixed per-pair recall
     increment, so small inputs (where bands are nearly free) are held
     to near-certainty (miss ≤ 1e-5: pinned small-fixture oracles stay
-    exact) while large inputs settle at the ``target_recall`` floor
-    (0.9925 default, derived from the F1 ≥ 0.99 gate with margin for
-    the model's measured ~2x error band — see ``duplicate_agreement``).
+    exact) while large inputs settle at the ``_TARGET_RECALL`` floor
+    (0.9925, derived from the F1 ≥ 0.99 gate with margin for the
+    model's measured ~2x error band — see ``duplicate_agreement``).
     With the tail-calibrated model this search CUTS bands only below
     ~20k rows and ADDS them at scale (64 → 80-128 over 100k-4M rows):
     the round-4 A/B that motivated the calibration measured F1 0.9899
     (below gate) when bands were cut 64→48 at 600k.
 
-    An explicit ``num_bands`` pins the start and only doubles upward
-    (the pre-round-4 behavior) — never shrinks below what the caller
-    asked for.
+    An explicit ``num_bands`` is used as given, with the law's bit
+    depth for that count; ``predicted_recall`` reports what it buys.
     """
     # The binding constraint is the block-join OUTPUT volume
     # (n²/2 · b · a_u^r skinny rows), which min_band_matches does NOT
@@ -177,7 +198,7 @@ def tuned_blocking(
     # costs only marginal (Dice≈0.76) pairs; doubling bands instead
     # recovers them but doubles banded-row volume for ~zero net wall
     # win on this workload.
-    join_budget_per_row = 3.0 * target_candidates_per_row
+    join_budget_per_row = 3.0 * _TARGET_CANDIDATES_PER_ROW
 
     def r_for(bands: int) -> int:
         frac = 2.0 * join_budget_per_row / (n_rows * bands)
@@ -185,29 +206,20 @@ def tuned_blocking(
         return max(14, min(r, 48))
 
     def predicted_recall(bands: int) -> float:
-        p = duplicate_agreement ** r_for(bands)
-        miss = (1 - p) ** bands
-        if min_band_matches >= 2:
-            miss += bands * p * (1 - p) ** (bands - 1)
-        return 1 - miss
+        return _band_recall(bands, r_for(bands), min_band_matches,
+                            duplicate_agreement)
 
     # Volume-aware miss budget (see docstring): near-certainty when
     # bands are cheap, a gate-derived ceiling when they are the
     # dominant shuffle (P=1 linkage needs recall >= 0.9803 for
-    # F1 >= 0.99; the default 0.0075 ceiling leaves ~2.6x margin for
-    # the model's measured error band).
-    allowed_miss = min(1.0 - target_recall, max(1e-5, n_rows / 1e8))
+    # F1 >= 0.99; the 0.0075 ceiling leaves ~2.6x margin for the
+    # model's measured error band).
+    allowed_miss = min(1.0 - _TARGET_RECALL, max(1e-5, n_rows / 1e8))
 
-    if num_bands is not None:
-        bands = num_bands
-        while bands < 512 and 1 - predicted_recall(bands) > allowed_miss:
-            bands *= 2
-    else:
-        bands = next(
-            (b for b in _BAND_GRID
-             if 1 - predicted_recall(b) <= allowed_miss),
-            _BAND_GRID[-1],
-        )
+    bands = num_bands if num_bands is not None else next(
+        (b for b in _BAND_GRID if 1 - predicted_recall(b) <= allowed_miss),
+        _BAND_GRID[-1],
+    )
     return {
         "num_bands": bands,
         "bits_per_band": r_for(bands),
@@ -231,10 +243,6 @@ class LinkageConfig:
     # values tuned at 100k rows melt down at 10M. Set explicitly to pin.
     num_bands: Optional[int] = None
     bits_per_band: Optional[int] = None
-    # Auto-tuning knob: scored-candidate budget per row (join volume is
-    # bounded at 3x this; see tuned_blocking). Ignored when both band
-    # settings are pinned explicitly.
-    target_candidates_per_row: float = 20.0
     # Require >=2 band collisions before a pair is scored: quadratic
     # suppression of spurious candidates (see candidate_pairs) at ~0.1%
     # recall cost for marginal (Dice~0.76) duplicates.
@@ -244,18 +252,10 @@ class LinkageConfig:
     max_block_size: int = 2000
     validate: bool = False
     checkpoint_dir: Optional[str] = None
-    # Matched-pair graphs at or below this edge count are clustered
-    # driver-side (Arrow transfer, 16 B/edge → ≤64 MB at the default;
-    # vectorized hook+jump labelling) instead of O(log n) rounds of
-    # Spark jobs — the rounds are almost pure fixed latency at
-    # small/medium scale (the clusters stage measured 0.36 scaling
-    # efficiency at 2→8 cores). Above the gate the distributed
-    # star-contraction runs; 0 forces it.
-    cluster_driver_gate_edges: int = 4_000_000
-    # Folded into stage fingerprints so a resume never reuses stages
-    # computed from different input data. Defaults to a fingerprint of
-    # the input's source files + schema (exact for file-backed reads;
-    # callers of in-memory inputs should pass e.g. row count + version).
+    # The inputs' identity in the clks stages' fingerprints, so a resume
+    # never reuses stages computed from other data. Defaults to the
+    # input's source files + schema; an in-memory input has no files,
+    # so a run with checkpoint_dir must set it (e.g. a data version).
     input_fingerprint: Optional[str] = None
 
 
@@ -274,9 +274,10 @@ class StageStore:
     """Parquet-with-manifest stage checkpointing (Iceberg stand-in).
 
     Each stage writes to ``<root>/<stage>/`` and records a manifest entry
-    (row count, schema, config fingerprint). A completed stage is
-    *resumed* — read back instead of recomputed — when the fingerprint
-    matches, which is what makes a killed job cheap to restart.
+    (row count, schema, fingerprint, lineage, restored metrics). A
+    completed stage is *resumed* — read back instead of recomputed — when
+    its fingerprint matches, which is what makes a killed job cheap to
+    restart.
     """
 
     def __init__(self, spark: SparkSession, root: str) -> None:
@@ -310,14 +311,13 @@ class StageStore:
             os.path.join(self.root, stage))
 
     def write(
-        self, stage: str, df: DataFrame, fingerprint: str, parents=(),
-        metrics: Optional[Dict[str, Any]] = None,
+        self, stage: str, df: DataFrame, fingerprint: str,
+        lineage: Dict[str, str], metrics: Dict[str, Any],
     ) -> int:
         """Write a stage table in one action and return its row count;
-        ``parents`` names the upstream stages whose fingerprints are
-        recorded as its lineage — the audit trail an Iceberg snapshot
-        chain would carry — and ``metrics`` holds the values a resumed
-        run restores."""
+        ``lineage`` maps each parent stage to its fingerprint — the audit
+        trail an Iceberg snapshot chain would carry — and ``metrics``
+        holds the values a resumed run restores."""
         path = os.path.join(self.root, stage)
         rows = materialize(df, path)["rows"]
         self.manifest["stages"][stage] = {
@@ -325,11 +325,8 @@ class StageStore:
             "rows": rows,
             "schema": df.schema.json(),
             "complete": True,
-            "lineage": {
-                p: self.manifest["stages"].get(p, {}).get("fingerprint")
-                for p in parents
-            },
-            "metrics": metrics or {},
+            "lineage": lineage,
+            "metrics": metrics,
         }
         self._save_manifest()
         return rows
@@ -357,18 +354,12 @@ def _banded_partitions(spark: SparkSession, banded_rows: int) -> int:
     return max(floor, min(int(by_volume), 65536))
 
 
-def _input_fingerprint(df: DataFrame) -> str:
-    """Best-effort identity of an input DataFrame: source files + schema.
-
-    Exact for file-backed reads (parquet/csv paths + schema); in-memory
-    inputs have no files, so callers who re-run checkpointed jobs over
-    changing in-memory data should supply
-    ``LinkageConfig.input_fingerprint`` themselves.
-    """
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:  # pragma: no cover - defensive
-        files = []
+def _input_fingerprint(df: DataFrame) -> Optional[str]:
+    """An input's identity: its source files + schema; ``None`` for an
+    in-memory input, which has no files."""
+    files = sorted(df.inputFiles())
+    if not files:
+        return None
     basis = json.dumps(
         {"files": files, "schema": df.schema.simpleString()},
         sort_keys=True,
@@ -381,54 +372,19 @@ def _secret_fingerprint(secret: Union[str, bytes]) -> str:
     return hashlib.sha256(b"clkhash-spark-secret:" + raw).hexdigest()[:16]
 
 
-# Stage → config fields that affect its OUTPUT (cumulative: a stage's
-# fingerprint covers everything upstream of it, so changing e.g. the
-# threshold invalidates pairs+clusters but keeps clks/blocks resumable).
-# The _kid the clks table stores is a pure function of key_col's values.
-_STAGE_FIELDS = {
-    "clks": ("key_col", "feature_cols", "validate"),
-    "blocks": ("num_bands", "bits_per_band", "lsh_seed", "lsh_salt",
-               "max_block_size"),
-    "pairs": ("threshold", "min_band_matches"),
-    "clusters": (),
-}
-_STAGE_ORDER = ("clks", "blocks", "pairs", "clusters")
-
-
-def _fingerprint(
-    config: LinkageConfig, stage: str, input_fp: str
-) -> str:
-    """Stage fingerprint: schema + hashed secret + input identity +
-    every config field the stage's output depends on (cumulatively)."""
-    base_stage = stage.split("_")[0]  # clks_a/clks_b share clks params
-    relevant: Dict[str, Any] = {
-        "stage": stage,
-        "l": config.schema.l,
-        "xor_folds": config.schema.xor_folds,
-        "fields": [f.identifier for f in config.schema.fields],
-        "secret_sha": _secret_fingerprint(config.secret),
-        "input": input_fp,
-    }
-    for s in _STAGE_ORDER:
-        for name in _STAGE_FIELDS[s]:
-            value = getattr(config, name)
-            if isinstance(value, tuple):
-                value = list(value)
-            relevant[name] = value
-        if s == base_stage:
-            break
+def _stage_fingerprint(stage: str, settings: Dict[str, Any],
+                       lineage: Dict[str, str]) -> str:
+    """A stage's identity: the digest of its name, its own settings and
+    the fingerprints of the stages it reads (``lineage``, by name). A
+    change anywhere upstream reaches every stage below it through the
+    chain, so no stage lists another stage's settings."""
+    basis = {"stage": stage, "settings": settings, "lineage": lineage}
     return hashlib.sha256(
-        json.dumps(relevant, sort_keys=True).encode()
+        json.dumps(basis, sort_keys=True).encode()
     ).hexdigest()[:16]
 
 
-def estimate_bit_agreement(
-    clks: DataFrame,
-    key_col: str = "url",
-    clk_col: str = "clk",
-    sample_size: int = 2000,
-    num_pairs: int = 1000,
-) -> float:
+def estimate_bit_agreement(clks: DataFrame, key_col: str = "url") -> float:
     """Measured per-bit agreement of *unrelated* CLK pairs.
 
     The banding law's leakage term is ``a_u^r`` — a 0.05 error in the
@@ -438,21 +394,21 @@ def estimate_bit_agreement(
     bit correlations push agreement above the fill-only estimate
     ``1-2f(1-f)``). So: measure it.
 
-    Sample = ``sample_size`` rows with smallest ``xxhash64(key)`` (a
-    seeded, partition-independent draw — the same bounded TakeOrdered
-    pattern as kmeans_centroids; the corpus is never collected). Pairs
-    are formed by folding the hash-ordered sample in half, so they are
-    uniform-random with respect to content; the MEDIAN pair agreement is
-    reported, which tolerates up to half the sampled pairs being true
+    Sample = the 2,000 rows with smallest ``xxhash64(key)`` (a seeded,
+    partition-independent draw — the same bounded TakeOrdered pattern as
+    kmeans_centroids; the corpus is never collected). Pairs (at most
+    1,000) are formed by folding the hash-ordered sample in half, so they
+    are uniform-random with respect to content; the MEDIAN pair agreement
+    is reported, which tolerates up to half the sampled pairs being true
     duplicates. On a corpus so duplicated that even the median lands in
     the duplicate regime (> 0.90), the 25th-percentile agreement — the
     unrelated tail — is returned instead, with a RuntimeWarning, rather
     than letting the downstream clamp pin silently at 0.90.
     """
     rows = (
-        clks.select(clk_col)
+        clks.select("clk")
         .orderBy(F.xxhash64(F.col(key_col)))
-        .limit(sample_size)
+        .limit(2000)
         .collect()
     )
     if len(rows) < 16:
@@ -462,14 +418,12 @@ def estimate_bit_agreement(
         return 0.57
     mat = np.unpackbits(
         np.frombuffer(
-            b"".join(r[clk_col] for r in rows), dtype=np.uint8
+            b"".join(r["clk"] for r in rows), dtype=np.uint8
         ).reshape(len(rows), -1),
         axis=1,
     )
     half = len(mat) // 2
-    a = mat[:half][: min(half, num_pairs)]
-    b = mat[half : 2 * half][: min(half, num_pairs)]
-    agreement = (a == b).mean(axis=1)
+    agreement = (mat[:half] == mat[half : 2 * half]).mean(axis=1)
     med = float(np.median(agreement))
     if med > 0.90:
         p25 = float(np.quantile(agreement, 0.25))
@@ -506,12 +460,11 @@ def _resolve_banding(
         max(int(n_rows), 1000),
         num_bands=config.num_bands,  # None → search the band grid
         min_band_matches=config.min_band_matches,
-        target_candidates_per_row=config.target_candidates_per_row,
         **kwargs,
     )
     return replace(
         config,
-        num_bands=config.num_bands or tuned["num_bands"],
+        num_bands=tuned["num_bands"],
         bits_per_band=config.bits_per_band or tuned["bits_per_band"],
     )
 
@@ -546,6 +499,7 @@ class _StageRunner:
             else None
         )
         self.metrics = metrics
+        self.fingerprints: Dict[str, str] = {}
         # Set by the graph once banding fixes the banded-row volume.
         self.block_partitions: Optional[int] = None
         self._scratch: List[DataFrame] = []
@@ -564,7 +518,13 @@ class _StageRunner:
             return df  # the stage's write materializes it; read back after
         return df.localCheckpoint(eager=False)
 
-    def run(self, name: str, fp: str, build, parents=()) -> DataFrame:
+    def run(self, name: str, build, parents=(), **settings) -> DataFrame:
+        """Run (or resume) stage ``name``: ``build()`` makes its output
+        from the ``parents`` stages and the stage's own ``settings``,
+        which with the parents' fingerprints make its fingerprint."""
+        lineage = {p: self.fingerprints[p] for p in parents}
+        fp = self.fingerprints[name] = _stage_fingerprint(
+            name, settings, lineage)
         store, sc = self.store, self.spark.sparkContext
         output = None
         try:
@@ -594,7 +554,7 @@ class _StageRunner:
             else:
                 added = {k: v for k, v in self.metrics.items()
                          if k not in known}  # e.g. the cap's accounting
-                rows = store.write(name, df, fp, parents, added)
+                rows = store.write(name, df, fp, lineage, added)
                 if name != "blocks":
                     df = store.read(name)
             elapsed = time.time() - start
@@ -658,11 +618,13 @@ def _check_unique_kids(clks: DataFrame, key_col: str, single: bool) -> None:
         "key id; rename one of them")
 
 
-def _check_config(config: LinkageConfig,
-                  parties: Sequence[DataFrame]) -> None:
-    """Reject an out-of-range field or a missing column by name, before
+def _check_config(config: LinkageConfig, parties: Sequence[DataFrame],
+                  inputs: Sequence[Optional[str]]) -> None:
+    """Reject an out-of-range field, a missing column or, with a
+    StageStore, an input or schema without an identity by name, before
     any Spark job (an out-of-range value otherwise links nothing or
-    fails deep inside banding)."""
+    fails deep inside banding; an input without an identity would resume
+    another input's stages)."""
     bands, bits = config.num_bands, config.bits_per_band
     matches = config.min_band_matches
     checks = (
@@ -671,13 +633,9 @@ def _check_config(config: LinkageConfig,
         ("bits_per_band", bits is None or 1 <= bits <= 48, "[1, 48] or None"),
         ("min_band_matches", 1 <= matches <= (bands or matches),
          f"[1, num_bands={bands}]" if bands else ">= 1"),
-        ("target_candidates_per_row", config.target_candidates_per_row > 0,
-         "> 0"),
         ("max_block_size",
          config.max_block_size is not None and config.max_block_size >= 1,
          ">= 1"),
-        ("cluster_driver_gate_edges", config.cluster_driver_gate_edges >= 0,
-         ">= 0"),
     )
     for name, ok, valid in checks:
         if not ok:
@@ -690,6 +648,18 @@ def _check_config(config: LinkageConfig,
             if col not in df.columns:
                 raise ValueError(f"LinkageConfig.{name} {col!r} is not a "
                                  f"column of party {party}: {df.columns}")
+    if not config.checkpoint_dir:
+        return
+    if config.schema.doc is None:
+        raise ValueError("LinkageConfig.schema has no schema document "
+                         "(build it with from_json_dict): a StageStore "
+                         "cannot tell it from another schema")
+    for party, identity in enumerate(inputs):
+        if identity is None:
+            raise ValueError(
+                f"LinkageConfig.input_fingerprint is needed: party {party} "
+                "is an in-memory input (no source files), so a StageStore "
+                "cannot tell its data from other data")
 
 
 def _run_graph(
@@ -700,19 +670,14 @@ def _run_graph(
 ) -> LinkageResult:
     """The stage graph (module docstring) over one or two parties;
     ``one_to_one`` is ``None`` for one table."""
-    _check_config(config, parties)
+    inputs = [config.input_fingerprint or _input_fingerprint(df)
+              for df in parties]
+    _check_config(config, parties, inputs)
     metrics: Dict[str, Any] = {}
     runner = _StageRunner(spark, config, metrics)
     key, kid = config.key_col, "_kid"
     single = len(parties) == 1
     clks_stages = ("clks",) if single else ("clks_a", "clks_b")
-    input_fps = [
-        config.input_fingerprint or _input_fingerprint(df) for df in parties
-    ]
-    joint_fp = "+".join(input_fps)
-    # pairs and clusters also depend on the two-party matching mode
-    pairs_fp = (joint_fp if one_to_one is None
-                else f"{joint_fp}|one_to_one={one_to_one}")
 
     # Work in an int64 key domain through the shuffle-heavy middle
     # stages: banding and the pair join move (long, long) rows instead
@@ -726,10 +691,15 @@ def _run_graph(
         ).withColumn(kid, _key_id(key, party))
 
     clks = [
-        runner.run(stage, _fingerprint(config, stage, fp), functools.partial(
-            build_clks, df, None if single else party))
-        for party, (stage, fp, df) in enumerate(
-            zip(clks_stages, input_fps, parties))
+        runner.run(
+            stage, functools.partial(build_clks, df,
+                                     None if single else party),
+            schema=config.schema.doc,
+            secret=_secret_fingerprint(config.secret), key_col=key,
+            feature_cols=config.feature_cols, validate=config.validate,
+            input=identity)
+        for party, (stage, identity, df) in enumerate(
+            zip(clks_stages, inputs, parties))
     ]
     all_clks = functools.reduce(DataFrame.unionByName, clks)
     # Resumed clks are checked too: a run that raised here stored them.
@@ -749,6 +719,9 @@ def _run_graph(
         "num_bands": config.num_bands,
         "bits_per_band": config.bits_per_band,
         "min_band_matches": config.min_band_matches,
+        "predicted_recall": round(_band_recall(
+            config.num_bands, config.bits_per_band, config.min_band_matches,
+            _DUPLICATE_AGREEMENT), 6),
         "n_rows": n_rows,
         "measured_bit_agreement": measured_a,
     }
@@ -785,8 +758,10 @@ def _run_graph(
         return capped
 
     blocks = runner.run(
-        "blocks", _fingerprint(config, "blocks", joint_fp), build_blocks,
-        parents=clks_stages,
+        "blocks", build_blocks, parents=clks_stages,
+        num_bands=config.num_bands, bits_per_band=config.bits_per_band,
+        lsh_seed=config.lsh_seed, lsh_salt=config.lsh_salt,
+        max_block_size=config.max_block_size,
     )
 
     def build_pairs() -> DataFrame:
@@ -820,21 +795,21 @@ def _run_graph(
         return one_to_one_matching(pairs) if one_to_one else pairs
 
     pairs = runner.run(
-        "pairs", _fingerprint(config, "pairs", pairs_fp), build_pairs,
-        parents=clks_stages + ("blocks",),
+        "pairs", build_pairs, parents=clks_stages + ("blocks",),
+        threshold=config.threshold,
+        min_band_matches=config.min_band_matches, one_to_one=one_to_one,
     )
 
     clusters = runner.run(
-        "clusters", _fingerprint(config, "clusters", pairs_fp),
+        "clusters",
         lambda: cluster_records(
             all_clks.select(key), pairs, key_col=key,
-            small_graph_edges=config.cluster_driver_gate_edges,
             # the materialized pairs-stage row count upper-bounds the
             # edge count, letting the driver-gate path skip the edge
             # distinct and its materialize-and-checksum job
             known_edge_bound=metrics.get("pairs_rows"),
         ),
-        parents=("pairs",),
+        parents=clks_stages + ("pairs",),
     )
 
     return LinkageResult(

@@ -219,8 +219,9 @@ class TestUniqueKeyIds:
         pages, urls = self._pages(spark)
         pages = self._rekey(pages, urls[0], urls[1])
         stages = tmp_path / "stages"
-        config = self._config(checkpoint_dir=str(stages))
-        with pytest.raises(ValueError):
+        config = self._config(checkpoint_dir=str(stages),
+                              input_fingerprint="repeated-key")
+        with pytest.raises(ValueError, match="duplicate 'url' values"):
             run_linkage(spark, pages, config)
         with open(stages / "_clkhash_manifest.json") as fp:
             written = json.load(fp)["stages"]
@@ -281,6 +282,33 @@ class TestFingerprintSafety:
         other = self._pages(spark, tmp_path, "in2", 200, 8)
         second = run_linkage(spark, other, LinkageConfig(**base))
         assert second.metrics.get("clks_resumed") is None
+
+    def test_changed_schema_document_invalidates_resume(self, spark,
+                                                        tmp_path):
+        # Same field identifiers and CLK length, 4-grams → 2-grams: a
+        # different encoding, so every stage recomputes and the run
+        # links what a fresh 2-gram run links.
+        from copy import deepcopy
+
+        from clkhash_spark.core.schema import from_json_dict
+        from clkhash_spark.pipeline import WEBPAGES_SCHEMA_DICT
+
+        doc = deepcopy(WEBPAGES_SCHEMA_DICT)
+        doc["features"][0]["hashing"]["comparison"]["n"] = 2
+        bigrams = from_json_dict(doc)
+        pages = self._pages(spark, tmp_path, "in5", 300, 7)
+        base = dict(secret="s", num_bands=16, bits_per_band=16)
+        store = dict(checkpoint_dir=str(tmp_path / "stages5"))
+        first = run_linkage(spark, pages, LinkageConfig(
+            schema=webpages_schema(), **base, **store))
+        second = run_linkage(spark, pages, LinkageConfig(
+            schema=bigrams, **base, **store))
+        fresh = run_linkage(spark, pages, LinkageConfig(
+            schema=bigrams, **base))
+        assert not [k for k in second.metrics if k.endswith("_resumed")]
+        assert (sorted(second.pairs.collect())
+                == sorted(fresh.pairs.collect()))
+        assert second.metrics["pairs_rows"] != first.metrics["pairs_rows"]
 
     def test_same_everything_resumes(self, spark, tmp_path):
         base = dict(schema=webpages_schema(), secret="s",

@@ -254,10 +254,10 @@ class TestHybridCcRound4:
         assert (out["label"] == 0).all()
 
     def test_driver_gate_plumbed_from_config(self, spark, tmp_path):
-        """cluster_driver_gate_edges=0 must force the distributed path
-        through run_linkage (observable: non-convergence raise with
-        max_iterations unreachable is too slow to test here, so assert
-        parity of outputs instead)."""
+        """The pipeline's clusters (driver path under the gate) equal
+        the distributed star contraction's (``small_graph_edges=0``)
+        over the run's own pairs."""
+        from clkhash_spark.operators.cluster import cluster_records
         from clkhash_spark.pipeline import (
             LinkageConfig,
             run_linkage,
@@ -265,20 +265,20 @@ class TestHybridCcRound4:
         )
 
         pages = synthetic_webpages(spark, 300, seed=9).select("url", "text")
-        base = dict(
+        result = run_linkage(spark, pages, LinkageConfig(
             schema=webpages_schema(), secret="s",
             num_bands=32, bits_per_band=14,
-        )
-        r_driver = run_linkage(spark, pages, LinkageConfig(**base))
-        r_dist = run_linkage(
-            spark, pages,
-            LinkageConfig(**base, cluster_driver_gate_edges=0),
+        ))
+        assert result.pairs.count() > 0
+        distributed = cluster_records(
+            result.clks.select("url"), result.pairs, key_col="url",
+            small_graph_edges=0,
         )
         a = {
             (r["url"], r["cluster_id"])
-            for r in r_driver.clusters.collect()
+            for r in result.clusters.collect()
         }
         b = {
-            (r["url"], r["cluster_id"]) for r in r_dist.clusters.collect()
+            (r["url"], r["cluster_id"]) for r in distributed.collect()
         }
         assert a == b and a

@@ -159,7 +159,8 @@ class TestStageCaches:
                                            max_block_size, store, outputs):
         jsc = spark.sparkContext._jsc
         before = set(jsc.getPersistentRDDs())
-        config = {"checkpoint_dir": str(tmp_path)} if store else {}
+        config = ({"checkpoint_dir": str(tmp_path),
+                   "input_fingerprint": "skewed"} if store else {})
         result = _run_skewed(spark, parties, max_block_size=max_block_size,
                              **config)
         persistent = jsc.getPersistentRDDs()
@@ -233,7 +234,8 @@ class TestStageJobCounts:
                                             expected):
         config = {"max_block_size": max_block_size}
         if store:
-            config["checkpoint_dir"] = str(tmp_path)
+            config.update(checkpoint_dir=str(tmp_path),
+                          input_fingerprint="skewed")
         assert _new_jobs(spark, lambda: _run_skewed(spark, parties,
                                                     **config)) == expected
 
@@ -263,7 +265,8 @@ class TestStageStoreParity:
         import json
 
         stored = {"max_block_size": max_block_size,
-                  "checkpoint_dir": str(tmp_path)}
+                  "checkpoint_dir": str(tmp_path),
+                  "input_fingerprint": "skewed"}
         memory = _run_skewed(spark, parties, max_block_size=max_block_size)
         fresh = _run_skewed(spark, parties, **stored)
         resumed = _run_skewed(spark, parties, **stored)
@@ -295,11 +298,7 @@ class TestConfigCheck:
         (1, "bits_per_band", {"bits_per_band": 0}),
         (1, "min_band_matches", {"min_band_matches": 17}),
         (1, "min_band_matches", {"min_band_matches": 0}),
-        (1, "target_candidates_per_row",
-         {"num_bands": None, "bits_per_band": None,
-          "target_candidates_per_row": 0}),
         (1, "max_block_size", {"max_block_size": 0}),
-        (1, "cluster_driver_gate_edges", {"cluster_driver_gate_edges": -5}),
         (1, "key_col", {"key_col": "page"}),
         (1, "feature_cols", {"feature_cols": ["body"]}),
         (2, "key_col", {}),
@@ -329,6 +328,42 @@ class TestConfigCheck:
 
         assert _new_jobs(spark, run) == {}
 
+    @pytest.mark.parametrize("parties", [1, 2])
+    @pytest.mark.parametrize("field", ["input_fingerprint", "schema"])
+    def test_store_needs_input_and_schema_identity(self, spark, tmp_path,
+                                                   parties, field):
+        # A StageStore resumes a stage whose fingerprint matches; an
+        # in-memory input (no source files) without input_fingerprint,
+        # or a schema built without a document, has no identity, so it
+        # is named before any Spark job instead of resuming another
+        # input's stages.
+        from clkhash_spark.core.schema import Schema
+        from clkhash_spark.pipeline import (
+            LinkageConfig, run_linkage, run_linkage_two_party,
+            webpages_schema,
+        )
+
+        from .test_round3_fixes import _two_party_with_boilerplate
+
+        party_a, party_b, _ = _two_party_with_boilerplate(spark)
+        schema = webpages_schema()
+        if field == "schema":
+            schema = Schema(schema.fields, schema.l)
+        config = LinkageConfig(
+            schema=schema, secret="s", num_bands=16, bits_per_band=16,
+            checkpoint_dir=str(tmp_path),
+            input_fingerprint="skewed" if field == "schema" else None)
+
+        def run():
+            with pytest.raises(ValueError, match=f"LinkageConfig.{field}"):
+                if parties == 1:
+                    run_linkage(spark, party_a.unionByName(party_b), config)
+                else:
+                    run_linkage_two_party(spark, party_a, party_b, config)
+
+        assert _new_jobs(spark, run) == {}
+        assert not os.listdir(tmp_path)
+
 
 _NO_CAP_ACCOUNTING = {"oversized_blocks": 0, "rows_in_oversized": 0,
                       "pair_volume_affected": 0.0}
@@ -345,7 +380,8 @@ class TestCapAccounting:
     def test_resumed_blocks_restore_accounting(self, spark, tmp_path,
                                                parties, max_block_size):
         config = {"max_block_size": max_block_size,
-                  "checkpoint_dir": str(tmp_path)}
+                  "checkpoint_dir": str(tmp_path),
+                  "input_fingerprint": "skewed"}
         fresh = _run_skewed(spark, parties, **config).metrics
         resumed = _run_skewed(spark, parties, **config).metrics
         assert resumed["blocks_resumed"] and "blocks_resumed" not in fresh

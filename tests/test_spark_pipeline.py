@@ -395,6 +395,7 @@ class TestEndToEnd:
             schema=webpages_schema(),
             secret="resume-secret",
             checkpoint_dir=str(tmp_path / "stages"),
+            input_fingerprint="pages-300-seed-7",
         )
         first = run_linkage(spark, pages, config)
         assert first.metrics.get("clks_rows") == 300
@@ -409,7 +410,8 @@ class TestEndToEnd:
     def test_changed_config_invalidates_resume(self, spark, tmp_path):
         pages = synthetic_webpages(spark, 200, seed=7).select("url", "text")
         base = dict(schema=webpages_schema(), secret="x",
-                    checkpoint_dir=str(tmp_path / "stages2"))
+                    checkpoint_dir=str(tmp_path / "stages2"),
+                    input_fingerprint="pages-200-seed-7")
         run_linkage(spark, pages, LinkageConfig(**base))
         changed = run_linkage(
             spark, pages, LinkageConfig(**base, threshold=0.9)

@@ -41,15 +41,6 @@ def main() -> None:
                         help="run the cross-party linkage pipeline over "
                              "two overlapping synthetic parties instead "
                              "of single-table dedup")
-    # Default matches LinkageConfig (20/row). Round 3 ran the scaling
-    # bench at 5/row for a lighter pair join, but the deeper r the
-    # tighter budget forces (28 vs 24 bits at 600k) costs marginal-tail
-    # recall: measured F1 0.9878 at 5/row vs 0.9950 at 20/row (b=64,
-    # 600k). Quality gates the throughput numbers, so the bench now
-    # runs the same budget the library defaults to.
-    parser.add_argument("--target-candidates", type=float, default=20.0,
-                        help="scored-candidate budget per row for the "
-                             "banding law (join volume bounded at 3x)")
     parser.add_argument("--num-bands", type=int, default=None,
                         help="pin the band count (default: the law "
                              "searches the volume-minimal count)")
@@ -115,8 +106,7 @@ def run_single(spark, args, cores: int) -> dict:
     result = run_linkage(
         spark, pages,
         LinkageConfig(schema=webpages_schema(), secret=args.secret,
-                      num_bands=args.num_bands,
-                      target_candidates_per_row=args.target_candidates))
+                      num_bands=args.num_bands))
     result.clusters.write.format("noop").mode("overwrite").save()
     pipeline_s = time.time() - t0
 
@@ -184,7 +174,6 @@ def run_two_party(spark, args, cores: int) -> dict:
 
     config = LinkageConfig(
         schema=webpages_schema(), secret=args.secret, key_col="key",
-        target_candidates_per_row=args.target_candidates,
     )
     t0 = time.time()
     result = run_linkage_two_party(
